@@ -5,6 +5,8 @@ operators and assert the plan properties we design for:
 * filters push down to the scan (PushedFilters)
 * the alias-dict / canonical-map joins are BroadcastHashJoin
 * whole-stage codegen covers the relational operators
+* every page extractor plans to one MapInArrow, no MapInPandas and no
+  Exchange
 """
 
 import os
@@ -65,6 +67,23 @@ def main():
     assert "n_chars" not in p, "extraction must not read unused columns"
     print("   scan reads:", [l.strip() for l in p.splitlines()
                              if "ReadSchema" in l][:1])
+
+    # 1b. every page extractor is ONE Arrow per-document stage: one
+    # MapInArrow, no pandas stage, no shuffle
+    from tortank_spark.extract import extract_embedded
+    from tortank_spark.jsonld import extract_jsonld
+    from tortank_spark.microdata import extract_microdata
+    from tortank_spark.rdfa import extract_rdfa
+
+    for fn in (extract_triples, extract_jsonld, extract_rdfa,
+               extract_microdata, extract_embedded):
+        p = plan_of(fn(pages))
+        tree = p.split("\n\n")[0]
+        one_stage = (sum("MapInArrow" in l for l in tree.splitlines()) == 1
+                     and "MapInPandas" not in p and "Exchange" not in p)
+        print(f"{'ok  ' if one_stage else 'FAIL'} {fn.__name__} one "
+              "MapInArrow, no MapInPandas, no Exchange")
+        ok &= one_stage
 
     # 2. pattern filter pushes predicates to the scan
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")

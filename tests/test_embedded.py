@@ -4,8 +4,11 @@ with the Turtle path, quarantine rows, single-scan union, pruning)."""
 
 import pytest
 
-from tortank_spark.jsonld import _expand_island, expand_jsonld, find_islands
-from tortank_spark.rdfa import extract_rdfa_triples
+from tortank_spark.extract import extract_triples
+from tortank_spark.jsonld import (
+    _expand_island, expand_jsonld, extract_jsonld, find_islands)
+from tortank_spark.microdata import extract_microdata
+from tortank_spark.rdfa import extract_rdfa, extract_rdfa_triples
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -203,41 +206,83 @@ def test_rdfa_unclosed_property_literal_closes_at_eof():
 @pytest.fixture(scope="module")
 def mixed_pages(spark):
     rows = [
-        ("u:t", '@prefix ex: <http://e/> . ex:a ex:name "T" .'),
+        ("u:t", '@prefix ex: <http://e/> . ex:a ex:name "T" ; '
+                'ex:k [ ex:v "w" ] .'),
         ("u:j", '<html><script type="application/ld+json">'
                 '{"@context":{"@vocab":"http://v/"},'
                 '"@id":"http://j/1","k":"v","n":{"m":"w"}}</script></html>'),
         ("u:r", '<div vocab="http://s/" about="http://r/1">'
-                '<span property="name">R</span></div>'),
+                '<span property="name">R</span>'
+                '<div property="contact" typeof="ContactPoint">'
+                '<span property="tel">1</span></div></div>'),
+        ("u:m", '<div itemscope itemtype="http://schema.org/Person" '
+                'itemid="http://m/1"><span itemprop="name">M</span>'
+                '<div itemprop="knows" itemscope '
+                'itemtype="http://schema.org/Person">'
+                '<span itemprop="name">K</span></div></div>'),
         ("u:bad", '<script type="application/ld+json">{nope</script>'),
     ]
     return spark.createDataFrame(rows, ["url", "text"])
 
 
-def test_extract_jsonld_stage_schema_and_quarantine(spark, mixed_pages):
-    from tortank_spark.extract import extract_triples
-    from tortank_spark.jsonld import extract_jsonld
-
-    ext = extract_jsonld(mixed_pages, fixture_mode=True)
-    assert ext.schema == extract_triples(mixed_pages).schema
-    rows = {r["url"]: r for r in ext.collect()}
-    assert rows["u:j"]["parse_ok"] and rows["u:j"]["s"] == "http://j/1"
-    bad = ext.filter("url = 'u:bad'").collect()
-    assert len(bad) == 1 and not bad[0]["parse_ok"]
-    assert "invalid JSON" in bad[0]["error"]
-    # turtle page has no islands -> quarantine row, not a job failure
-    t = ext.filter("url = 'u:t'").collect()
-    assert len(t) == 1 and t[0]["s"] is None
+# every page extractor runs in extract.doc_stage: (extractor, the page
+# in its syntax, a subject of that page, whether a page in another
+# syntax is a parse failure, the error u:bad gets)
+STAGES = [
+    (extract_triples, "u:t", "http://e/a", False,
+     "could not parse the doc completely"),
+    (extract_jsonld, "u:j", "http://j/1", False, "island 0: invalid JSON"),
+    (extract_rdfa, "u:r", "http://r/1", True, None),
+    (extract_microdata, "u:m", "http://m/1", True, None),
+]
+STAGE_IDS = [c[0].__name__ for c in STAGES]
 
 
-def test_extract_jsonld_salts_bnodes_per_url(spark, mixed_pages):
-    from tortank_spark.jsonld import extract_jsonld
+@pytest.mark.parametrize(
+    "extract, page, subject, foreign_ok, bad_error", STAGES, ids=STAGE_IDS)
+def test_extract_stage_schema_and_quarantine(
+        spark, mixed_pages, extract, page, subject, foreign_ok, bad_error):
+    from tortank_spark.schema import EXTRACT_SCHEMA
 
-    ext = extract_jsonld(mixed_pages, fixture_mode=False)
-    bn = [r["o"] for r in ext.collect()
-          if r["url"] == "u:j" and r["o_kind"] == "bnode"]
-    assert len(bn) == 1 and bn[0].startswith("_:") and bn[0] != "_:1"
-    assert bn[0].endswith("-1")  # sha1(url)[:12] + "-" + counter
+    ext = extract(mixed_pages, fixture_mode=True)
+    assert ext.schema == EXTRACT_SCHEMA
+    rows = ext.collect()
+    own = [r for r in rows if r["url"] == page]
+    assert own and all(r["parse_ok"] and r["error"] is None for r in own)
+    assert subject in {r["s"] for r in own}
+    # every other page is exactly one status row, not a job failure
+    for url in {r["url"] for r in rows} - {page}:
+        (q,) = [r for r in rows if r["url"] == url]
+        assert q["s"] is None and q["p"] is None and q["o"] is None
+        if url == "u:bad":
+            assert q["parse_ok"] == (bad_error is None)
+            assert bad_error is None or bad_error in q["error"]
+        else:
+            assert q["parse_ok"] == foreign_ok
+            assert (q["error"] is None) == foreign_ok
+
+
+@pytest.mark.parametrize(
+    "extract, page", [c[:2] for c in STAGES], ids=STAGE_IDS)
+def test_extract_salts_bnodes_per_url(spark, mixed_pages, extract, page):
+    import hashlib
+
+    salt = hashlib.sha1(page.encode()).hexdigest()[:12] + "-"
+
+    def rows(fixture_mode):
+        return extract(mixed_pages, fixture_mode=fixture_mode).filter(
+            f"url = '{page}'").collect()
+
+    def unsalt(r):
+        return tuple(v.replace("_:" + salt, "_:") if isinstance(v, str)
+                     else v for v in r)
+
+    plain, salted = rows(True), rows(False)
+    bn = [r["o"] for r in salted if r["o_kind"] == "bnode"]
+    assert bn and all(b.startswith("_:" + salt) for b in bn)
+    assert "_:" + salt + "1" in bn  # sha1(url)[:12] + "-" + counter
+    # salting renames labels and changes nothing else
+    assert sorted(map(unsalt, salted)) == sorted(map(tuple, plain))
 
 
 def test_extract_embedded_single_scan_and_tags(spark, mixed_pages):
@@ -251,13 +296,16 @@ def test_extract_embedded_single_scan_and_tags(spark, mixed_pages):
     assert by_syntax["turtle"] == {"u:t"}
     assert by_syntax["jsonld"] == {"u:j"}
     assert by_syntax["rdfa"] == {"u:r"}
-    # ONE scan of the page table: mapInPandas fuses all three parsers
+    assert by_syntax["microdata"] == {"u:m"}
+    # ONE scan of the page table: one doc_stage runs all four parsers
     from tests.test_plans import plan_of
+    from tortank_spark.schema import TRIPLE_FIELDS
 
+    assert out.columns == ["syntax"] + [f.name for f in TRIPLE_FIELDS]
     plan = plan_of(out)
     tree = plan.split("\n\n")[0]
     assert sum("Scan" in ln for ln in tree.splitlines()) == 1
-    assert sum("MapInPandas" in ln for ln in tree.splitlines()) == 1
+    assert sum("MapInArrow" in ln for ln in tree.splitlines()) == 1
     assert "Exchange" not in plan and "Union" not in plan
 
 

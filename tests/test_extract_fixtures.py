@@ -1,4 +1,4 @@
-"""End-to-end extraction gate: pages -> mapInPandas parse -> triples,
+"""End-to-end extraction gate: pages -> mapInArrow parse -> triples,
 compared against the reference goldens with the reference's own
 set-difference semantics (P/R must be 1.0 on the fixture corpus), plus
 the byte-identical text passthrough invariant from BASELINE.json."""

@@ -41,6 +41,8 @@ def test_ntriples_source(spark, tmp_path):
         '<http://a> <http://p> "x"@en .\n'
         "_:b1 <http://q> <http://c> .\n"
         "this line is garbage\n"
+        "# a comment-only line\n"
+        "\n"
         '<http://a> a <http://T> .\n'
     )
     out = read_ntriples_lines(spark, str(p))
@@ -48,6 +50,8 @@ def test_ntriples_source(spark, tmp_path):
     bad = out.filter(~F.col("parse_ok"))
     assert good.count() == 3
     assert bad.count() == 1
+    # the blank line is dropped; the comment line is one status row
+    assert out.count() == 5
 
 
 def test_stream_ntriples_directory(spark, tmp_path):

@@ -99,12 +99,6 @@ def subject_group_counts(df: DataFrame) -> DataFrame:
     )
 
 
-def spo_objects_for(df: DataFrame, p: str) -> DataFrame:
-    """Convenience: project objects of one predicate — the query-path
-    demo (reference tests/query.rs:6-35)."""
-    return pattern_filter(df, p=p).select("s", "o", "o_kind")
-
-
 def parse_pattern_filter(
     df: DataFrame,
     s: Optional[str] = None,

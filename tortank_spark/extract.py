@@ -1,12 +1,15 @@
-"""Vectorized triple-extraction stage — the engine's "scan".
+"""Per-document extraction stage — the engine's "scan".
 
-The whole reference parse pipeline (grammar rules P1-P24, SURVEY.md
-§2.2) runs as ONE Arrow-batched ``mapInPandas`` stage over the page
-table: state is document-scoped (prefix redefinition mid-doc,
-turtle_doc.rs:489-540) so a document is the natural unit of work, and
-documents are rows. Arrow moves batches JVM<->Python zero-copy; the
-per-doc parse is pure Python but amortized across 2k-row batches —
-there is no per-row Python UDF dispatch.
+Every page extractor is a plain per-document function
+``(text, bnode_prefix) -> (rows, error)``: the Turtle grammar (rules
+P1-P24, SURVEY.md §2.2), the JSON-LD island expander and the RDFa-Lite
+and microdata scanners. ``doc_stage`` runs any of them as ONE
+Arrow-batched ``mapInArrow`` stage over the page table: state is
+document-scoped (prefix redefinition mid-doc, turtle_doc.rs:489-540) so
+a document is the natural unit of work, and documents are rows. Arrow
+moves batches JVM<->Python; the per-doc parse is pure Python but
+amortized across whole batches — there is no per-row Python UDF
+dispatch and no pandas conversion.
 
 Scale design (100 TB / 10^12 docs):
 * embarrassingly parallel — no shuffle; parallelism = input splits.
@@ -22,79 +25,73 @@ Scale design (100 TB / 10^12 docs):
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable
+from functools import partial
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .grammar.turtle import parse_document
-from .schema import DOC_METRICS_SCHEMA, EXTRACT_SCHEMA, TRIPLE_SCHEMA
-
-_COLS = ["url", "s", "s_kind", "p", "o", "o_kind", "o_datatype", "o_lang",
-         "parse_ok", "error"]
+from .schema import EMBEDDED_SCHEMA, EXTRACT_SCHEMA, TRIPLE_SCHEMA
 
 
 def _salt(url: str) -> str:
     return hashlib.sha1(url.encode("utf-8", "surrogatepass")).hexdigest()[:12] + "-"
 
 
-def _extract_batches(
-    batches, fixture_mode: bool,
-    seed_prefixes=None, well_known_prefix=None,
-):
-    """Arrow-native extraction stage: consumes pyarrow RecordBatches,
-    yields pyarrow RecordBatches (mapInArrow). Building ``pa.array``
-    columns directly skips BOTH pandas conversions the previous
-    mapInPandas shape paid (object-dtype DataFrame build + Spark's
-    pandas->Arrow serialize on yield; ~50 us/page measured on the
-    ~4 KB filler corpus — guide §4.2: hand whole batches to the
-    columnar layer, don't route them through pandas). Columnar
-    accumulation stays: one python list per output column beats a
-    list of 10-tuples by ~2x on array construction — this is the
-    per-triple hot path, measurably visible at 500k triples/batch."""
-    import pyarrow as pa
+def doc_stage(
+    pages: DataFrame,
+    per_doc: Callable[[str, str], tuple[list[tuple], str | None]],
+    schema: StructType,
+    *,
+    salt: bool,
+) -> DataFrame:
+    """Run ``per_doc(text, bnode_prefix) -> (rows, error)`` over every
+    (url, text) page as one ``mapInArrow`` stage.
 
-    for rb in batches:
-        cols = {c: [] for c in _COLS}
-        ap = {c: cols[c].append for c in _COLS}
-        for url, text in zip(
-            rb.column(0).to_pylist(), rb.column(1).to_pylist()
-        ):
-            prefix = "" if fixture_mode else _salt(url)
-            triples, err = parse_document(
-                text or "", bnode_prefix=prefix,
-                seed_prefixes=seed_prefixes,
-                well_known_prefix=well_known_prefix,
+    ``schema`` is the stage output: ``url``, then one field per
+    element of a row tuple, then ``parse_ok`` and ``error``. A page
+    whose call returns an error or no rows yields exactly one
+    quarantine row ``(url, nulls..., parse_ok = error is None,
+    error)``. ``salt`` prefixes blank-node labels with sha1(url)[:12]
+    so they are unique across documents; unsalted labels are the
+    reference's per-doc counter ``_:1, _:2, ...``.
+
+    Each Arrow batch is turned around on its own: one Python list per
+    output column (a list of row tuples costs ~2x on array
+    construction — this is the per-triple hot path), one ``pa.array``
+    per column, nothing held across batches."""
+    names = schema.fieldNames()
+    types = [f.type for f in to_arrow_schema(schema)]
+    blank = (None,) * (len(names) - 3)
+
+    def run(batches):
+        for rb in batches:
+            urls, oks, errs = [], [], []
+            mid = [[] for _ in blank]
+            for url, text in zip(
+                rb.column(0).to_pylist(), rb.column(1).to_pylist()
+            ):
+                rows, err = per_doc(text or "", _salt(url) if salt else "")
+                ok = err is None
+                if not ok or not rows:
+                    rows = (blank,)
+                n = len(rows)
+                urls.extend([url] * n)
+                for col, vals in zip(mid, zip(*rows)):
+                    col.extend(vals)
+                oks.extend([ok] * n)
+                errs.extend([err] * n)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=t)
+                 for c, t in zip([urls, *mid, oks, errs], types)],
+                names,
             )
-            if err is not None or not triples:
-                ap["url"](url)
-                ap["s"](None); ap["s_kind"](None); ap["p"](None)
-                ap["o"](None); ap["o_kind"](None)
-                ap["o_datatype"](None); ap["o_lang"](None)
-                ap["parse_ok"](err is None)
-                ap["error"](err)
-            else:
-                n = len(triples)
-                cols["url"].extend([url] * n)
-                cols["s"].extend(t[0] for t in triples)
-                cols["s_kind"].extend(t[1] for t in triples)
-                cols["p"].extend(t[2] for t in triples)
-                cols["o"].extend(t[3] for t in triples)
-                cols["o_kind"].extend(t[4] for t in triples)
-                cols["o_datatype"].extend(t[5] for t in triples)
-                cols["o_lang"].extend(t[6] for t in triples)
-                cols["parse_ok"].extend([True] * n)
-                cols["error"].extend([None] * n)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(cols[c], type=pa.bool_())
-                if c == "parse_ok"
-                else pa.array(cols[c], type=pa.string())
-                for c in _COLS
-            ],
-            _COLS,
-        )
+
+    return pages.select("url", "text").mapInArrow(run, schema=schema)
 
 
 def extract_triples(
@@ -110,16 +107,13 @@ def extract_triples(
     (turtle_doc.rs:33-51) — used by the fixture P/R harness.
     ``seed_prefixes`` (R10, turtle_doc.rs:264-283) and
     ``well_known_prefix`` (skolemization, turtle_doc.rs:733-747) are
-    broadcast to every parser call as plain closure constants — tiny
+    bound into every parser call as plain closure constants — tiny
     dicts ride the task closure; a huge external prefix table would use
     ``spark.sparkContext.broadcast`` instead.
     """
-    cols = pages.select("url", "text")  # explicit pruning to the scan
-    return cols.mapInArrow(
-        lambda it: _extract_batches(it, fixture_mode, seed_prefixes,
-                                    well_known_prefix),
-        schema=EXTRACT_SCHEMA,
-    )
+    parse = partial(parse_document, seed_prefixes=seed_prefixes,
+                    well_known_prefix=well_known_prefix)
+    return doc_stage(pages, parse, EXTRACT_SCHEMA, salt=not fixture_mode)
 
 
 def triples_only(extracted: DataFrame) -> DataFrame:
@@ -129,129 +123,90 @@ def triples_only(extracted: DataFrame) -> DataFrame:
     )
 
 
+def doc_lineage(extracted: DataFrame) -> DataFrame:
+    """Extraction rows -> one lineage row per url: (url, n_triples,
+    parse_ok, error). A quarantine row counts no triple."""
+    return extracted.groupBy("url").agg(
+        F.count("s").alias("n_triples"),
+        F.min(F.col("parse_ok").cast("int")).cast("boolean").alias("parse_ok"),
+        F.first("error", ignorenulls=True).alias("error"),
+    )
+
+
 def doc_metrics(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
     """Per-document lineage/metrics rows: parse status, triple count,
     byte-fidelity witness (sha1 of text) — the per-row invariant of
     BASELINE.json input_hint is checked against this table.
 
-    Standalone auditing entry point ONLY: it re-parses every document.
-    A job that already runs extract_triples must derive its lineage
-    from those extraction rows instead (as pipeline._run_bucket does) —
-    calling both doubles the parse CPU for nothing."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for url, text in zip(pdf["url"].values, pdf["text"].values):
-                text = text or ""
-                prefix = "" if fixture_mode else _salt(url)
-                triples, err = parse_document(text, bnode_prefix=prefix)
-                sha = hashlib.sha1(text.encode("utf-8", "surrogatepass")).hexdigest()
-                out.append(
-                    (url, err is None, len(triples), err, sha, len(text))
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["url", "parse_ok", "n_triples", "error",
-                         "text_sha1", "n_chars"],
-            )
-
-    return pages.select("url", "text").mapInPandas(gen, schema=DOC_METRICS_SCHEMA)
+    Standalone auditing entry point: it runs extract_triples. A job
+    that already extracts takes ``doc_lineage`` of those rows instead
+    (as pipeline._run_bucket does)."""
+    text = F.coalesce(F.col("text"), F.lit(""))
+    witness = pages.select(
+        "url",
+        F.sha1(F.encode(text, "UTF-8")).alias("text_sha1"),
+        F.length(text).alias("n_chars"),
+    )
+    return (
+        doc_lineage(extract_triples(pages, fixture_mode))
+        .join(witness, "url")
+        .select("url", "parse_ok", "n_triples", "error", "text_sha1",
+                "n_chars")
+    )
 
 
-_EMBEDDED_SCHEMA = None  # built lazily to avoid import-time Spark types
-
-
-def _embedded_schema():
-    global _EMBEDDED_SCHEMA
-    if _EMBEDDED_SCHEMA is None:
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        from .schema import TRIPLE_FIELDS
-
-        _EMBEDDED_SCHEMA = StructType(
-            [StructField("syntax", StringType(), False)] + TRIPLE_FIELDS
-        )
-    return _EMBEDDED_SCHEMA
-
-
-def extract_embedded(
-    pages: DataFrame, fixture_mode: bool = False, text_col: str = "text",
-) -> DataFrame:
+def extract_embedded(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
     """Unified embedded-KG extraction — the north star's 'embedded
     RDFa/JSON-LD/Turtle in page text' as ONE operator. Every page is
-    scanned once and run through all four parsers (Turtle grammar,
-    JSON-LD island expansion, RDFa-Lite attribute scan, HTML microdata
-    itemscope scan); the output is the union of each syntax's good
-    triples tagged with
+    scanned once and run through all four per-document extractors
+    (Turtle grammar, JSON-LD islands, RDFa-Lite attribute scan, HTML
+    microdata itemscope scan); the output ``(syntax, url, s, ...)`` is
+    the union of each syntax's good triples tagged with
     ``syntax in ('turtle','jsonld','rdfa','microdata')``.
 
-    Single-pass by construction: one ``mapInPandas`` stage, so the
-    page table is read ONCE (a DataFrame-level union of the four
-    standalone extractors would scan 100 TB four times). A page may
-    legitimately contribute triples in several syntaxes. Per-syntax
-    quarantine semantics differ by design — a JSON-LD page is not a
-    Turtle parse failure — so this operator emits good triples only;
-    per-page parse auditing stays with the standalone extractors
-    (extract_triples / jsonld.extract_jsonld / rdfa.extract_rdfa)."""
-    from .jsonld import _expand_island, find_islands
+    Single-pass by construction: one ``doc_stage``, so the page table
+    is read ONCE (a DataFrame-level union of the four standalone
+    extractors would scan 100 TB four times). A page may legitimately
+    contribute triples in several syntaxes. Per-syntax quarantine
+    semantics differ by design — a JSON-LD page is not a Turtle parse
+    failure — so this operator emits good triples only; per-page parse
+    auditing stays with the standalone extractors (extract_triples /
+    jsonld.extract_jsonld / rdfa.extract_rdfa /
+    microdata.extract_microdata)."""
+    from .jsonld import jsonld_document
     from .microdata import extract_microdata_triples
     from .rdfa import extract_rdfa_triples
 
-    out_cols = ["syntax"] + _COLS[:8]
+    def per_doc(text, prefix):
+        rows = []
+        ts, err = parse_document(text, prefix)
+        if err is None:
+            rows.extend(("turtle", *t) for t in ts)
+        # conservative per-syntax dispatch (guide §1.2 "per-task
+        # work"): each scanner can only ever emit when its trigger
+        # token occurs somewhere in the page — JSON-LD islands need a
+        # (case-insensitive) 'application/ld+json' script type, every
+        # RDFa emission requires a property= or typeof= attribute,
+        # every microdata emission an itemscope. A substring test over
+        # the lowered page is exactly conservative (false positives
+        # just run the scanner and emit nothing, false negatives are
+        # impossible), and skips 2-3 full HTML scans on the typical
+        # single-syntax page.
+        low = text.lower()
+        if "ld+json" in low:
+            ts, err = jsonld_document(text, prefix)
+            if err is None:
+                rows.extend(("jsonld", *t) for t in ts)
+        if "property" in low or "typeof" in low:
+            ts, _ = extract_rdfa_triples(text, prefix)
+            rows.extend(("rdfa", *t) for t in ts)
+        if "itemscope" in low:
+            ts, _ = extract_microdata_triples(text, prefix)
+            rows.extend(("microdata", *t) for t in ts)
+        return rows, None
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {c: [] for c in out_cols}
-
-            def add(syntax, url, ts):
-                k = len(ts)
-                if not k:
-                    return
-                cols["syntax"].extend([syntax] * k)
-                cols["url"].extend([url] * k)
-                for j, c in enumerate(_COLS[1:8]):
-                    cols[c].extend(t[j] for t in ts)
-
-            for url, text in zip(pdf["url"].values, pdf["_emb_text"].values):
-                text = text or ""
-                prefix = "" if fixture_mode else _salt(url)
-                t_ts, t_err = parse_document(text, bnode_prefix=prefix)
-                if t_err is None:
-                    add("turtle", url, t_ts)
-                # conservative per-syntax dispatch (guide §1.2 "per-
-                # task work"): each scanner can only ever emit when its
-                # trigger token occurs somewhere in the page — JSON-LD
-                # islands need a (case-insensitive) 'application/ld+
-                # json' script type, every RDFa emission requires a
-                # property= or typeof= attribute, every microdata
-                # emission an itemscope. A substring test over the
-                # lowered page is exactly conservative (false positives
-                # just run the scanner and emit nothing, false
-                # negatives are impossible), and skips 2-3 full HTML
-                # scans on the typical single-syntax page.
-                low = text.lower()
-                if "ld+json" in low:
-                    counter, j_ts, seen = 0, [], set()
-                    for payload in find_islands(text):
-                        ts, j_err, counter = _expand_island(
-                            payload, prefix, counter)
-                        if j_err is not None:
-                            j_ts = []
-                            break
-                        for t in ts:
-                            if t not in seen:
-                                seen.add(t)
-                                j_ts.append(t)
-                    add("jsonld", url, j_ts)
-                if "property" in low or "typeof" in low:
-                    r_ts, _ = extract_rdfa_triples(text, bnode_prefix=prefix)
-                    add("rdfa", url, r_ts)
-                if "itemscope" in low:
-                    m_ts, _ = extract_microdata_triples(
-                        text, bnode_prefix=prefix)
-                    add("microdata", url, m_ts)
-            yield pd.DataFrame(cols)
-
-    sel = pages.select("url", F.col(text_col).alias("_emb_text"))
-    return sel.mapInPandas(gen, schema=_embedded_schema())
+    return (
+        doc_stage(pages, per_doc, EMBEDDED_SCHEMA, salt=not fixture_mode)
+        .filter(F.col("s").isNotNull())
+        .select("syntax", *TRIPLE_SCHEMA.fieldNames())
+    )

@@ -36,23 +36,21 @@ by real-world schema.org embeds; W3C JSON-LD 1.0 §6.1-6.11):
 Statement-level dedup per document matches the Turtle path's P23
 (reference statement dedup, turtle_doc.rs:284-293).
 
-Scale shape: identical to extract.extract_triples — one Arrow-batched
-``mapInPandas`` stage, zero shuffle, column pruning to (url, text),
-parallelism = input splits; malformed JSON or out-of-scope constructs
-become quarantine rows (parse_ok=false), never job failures.
+Scale shape: identical to extract.extract_triples — ``jsonld_document``
+runs in the shared ``extract.doc_stage`` (one ``mapInArrow`` stage,
+zero shuffle, column pruning to (url, text), parallelism = input
+splits); malformed JSON or out-of-scope constructs become quarantine
+rows (parse_ok=false), never job failures.
 """
 
 from __future__ import annotations
 
-import hashlib
 import json
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-import pyspark.sql.functions as F
 
+from .extract import doc_stage
 from .schema import EXTRACT_SCHEMA
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -360,66 +358,37 @@ def find_islands(page: str) -> list[str]:
     return [m.group(1) for m in _ISLAND_RE.finditer(page or "")]
 
 
-_COLS = ["url", "s", "s_kind", "p", "o", "o_kind", "o_datatype", "o_lang",
-         "parse_ok", "error"]
+def jsonld_document(
+    text: str, bnode_prefix: str = ""
+) -> tuple[list[tuple], str | None]:
+    """Expand every JSON-LD island of one page -> (triples, error).
+
+    ONE bnode counter is threaded across the page's islands: labels
+    stay document-unique, islands share nothing else. Triples are
+    deduplicated per page (P23). A page without islands, or with any
+    island that fails, yields ([], error) — the whole page quarantines,
+    the Turtle path's whole-doc contract."""
+    islands = find_islands(text)
+    if not islands:
+        return [], "no JSON-LD islands"
+    triples: list[tuple] = []
+    seen: set[tuple] = set()
+    counter = 0
+    for i, payload in enumerate(islands):
+        ts, err, counter = _expand_island(payload, bnode_prefix, counter)
+        if err is not None:
+            return [], f"island {i}: {err}"
+        for t in ts:
+            if t not in seen:
+                seen.add(t)
+                triples.append(t)
+    return triples, None
 
 
-def _salt(url: str) -> str:
-    return (hashlib.sha1(url.encode("utf-8", "surrogatepass"))
-            .hexdigest()[:12] + "-")
-
-
-def _batches(batches: Iterator[pd.DataFrame], fixture_mode: bool,
-             text_col: str) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        cols = {c: [] for c in _COLS}
-        for url, text in zip(pdf["url"].values, pdf[text_col].values):
-            prefix = "" if fixture_mode else _salt(url)
-            islands = find_islands(text)
-            triples: list[tuple] = []
-            seen: set[tuple] = set()
-            err = None
-            if not islands:
-                err = "no JSON-LD islands"
-            # ONE bnode counter threaded across the page's islands:
-            # labels stay document-unique, islands share nothing else
-            counter = 0
-            for i, payload in enumerate(islands):
-                ts, island_err, counter = _expand_island(
-                    payload, prefix, counter)
-                if island_err is not None:
-                    err = f"island {i}: {island_err}"
-                    triples = []
-                    break
-                for t in ts:
-                    if t not in seen:
-                        seen.add(t)
-                        triples.append(t)
-            if err is not None or not triples:
-                cols["url"].append(url)
-                for c in _COLS[1:8]:
-                    cols[c].append(None)
-                cols["parse_ok"].append(err is None)
-                cols["error"].append(err)
-            else:
-                n = len(triples)
-                cols["url"].extend([url] * n)
-                for j, c in enumerate(_COLS[1:8]):
-                    cols[c].extend(t[j] for t in triples)
-                cols["parse_ok"].extend([True] * n)
-                cols["error"].extend([None] * n)
-        yield pd.DataFrame(cols)
-
-
-def extract_jsonld(
-    pages: DataFrame, fixture_mode: bool = False, text_col: str = "text",
-) -> DataFrame:
+def extract_jsonld(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
     """pages(url, text, ...) -> extraction rows (EXTRACT_SCHEMA),
     quarantine rows included — the JSON-LD twin of
     extract.extract_triples, same schema, same salting, same
     no-shuffle scale shape."""
-    cols = pages.select("url", F.col(text_col).alias("_jsonld_text"))
-    return cols.mapInPandas(
-        lambda it: _batches(it, fixture_mode, "_jsonld_text"),
-        schema=EXTRACT_SCHEMA,
-    )
+    return doc_stage(pages, jsonld_document, EXTRACT_SCHEMA,
+                     salt=not fixture_mode)

@@ -34,19 +34,16 @@ microdata-to-RDF note's property-IRI rule):
 Zero triples on a page is data, not an error (most pages carry no
 microdata) — the scanner never raises.
 
-Scale shape: identical to the sibling extractors — one Arrow-batched
-``mapInPandas`` stage over (url, text), zero shuffle.
+Scale shape: identical to the sibling extractors —
+``extract_microdata_triples`` runs in the shared ``extract.doc_stage``
+(one ``mapInArrow`` stage over (url, text), zero shuffle).
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-import pyspark.sql.functions as F
 
+from .extract import doc_stage
 from .htmlscan import WS_RE, scan_html
 from .schema import EXTRACT_SCHEMA
 
@@ -183,46 +180,8 @@ def extract_microdata_triples(
     return triples, None
 
 
-_COLS = ["url", "s", "s_kind", "p", "o", "o_kind", "o_datatype", "o_lang",
-         "parse_ok", "error"]
-
-
-def _salt(url: str) -> str:
-    return (hashlib.sha1(url.encode("utf-8", "surrogatepass"))
-            .hexdigest()[:12] + "-")
-
-
-def _batches(batches: Iterator[pd.DataFrame],
-             fixture_mode: bool) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        cols = {c: [] for c in _COLS}
-        for url, text in zip(pdf["url"].values, pdf["_md_text"].values):
-            prefix = "" if fixture_mode else _salt(url)
-            triples, err = extract_microdata_triples(
-                text, bnode_prefix=prefix)
-            if err is not None or not triples:
-                cols["url"].append(url)
-                for c in _COLS[1:8]:
-                    cols[c].append(None)
-                cols["parse_ok"].append(err is None)
-                cols["error"].append(err)
-            else:
-                k = len(triples)
-                cols["url"].extend([url] * k)
-                for j, c in enumerate(_COLS[1:8]):
-                    cols[c].extend(t[j] for t in triples)
-                cols["parse_ok"].extend([True] * k)
-                cols["error"].extend([None] * k)
-        yield pd.DataFrame(cols)
-
-
-def extract_microdata(
-    pages: DataFrame, fixture_mode: bool = False, text_col: str = "text",
-) -> DataFrame:
-    """pages(url, text|html, ...) -> extraction rows (EXTRACT_SCHEMA) —
+def extract_microdata(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
+    """pages(url, text, ...) -> extraction rows (EXTRACT_SCHEMA) —
     the microdata twin of extract.extract_triples."""
-    cols = pages.select("url", F.col(text_col).alias("_md_text"))
-    return cols.mapInPandas(
-        lambda it: _batches(it, fixture_mode),
-        schema=EXTRACT_SCHEMA,
-    )
+    return doc_stage(pages, extract_microdata_triples, EXTRACT_SCHEMA,
+                     salt=not fixture_mode)

@@ -37,7 +37,7 @@ import pyspark.sql.functions as F
 
 from . import fixtures
 from .canonicalize import connected_components, rewrite_canonical, sameas_edges
-from .extract import extract_embedded, extract_triples, triples_only
+from .extract import doc_lineage, extract_embedded, extract_triples, triples_only
 from .linking import best_link_per_mention, detect_mentions, link_mentions, links_as_triples
 from .schema import TRIPLE_COLS
 
@@ -275,11 +275,7 @@ def _run_bucket(
             )
         )
     else:
-        lineage = extracted.groupBy("url").agg(
-            F.sum(F.when(F.col("s").isNotNull(), 1).otherwise(0)).alias("n_triples"),
-            F.min(F.col("parse_ok").cast("int")).cast("boolean").alias("parse_ok"),
-            F.first("error", ignorenulls=True).alias("error"),
-        )
+        lineage = doc_lineage(extracted)
     lineage.write.mode("overwrite").parquet(f"{bdir}/lineage")
     agg = lineage.agg(
         F.count("*").alias("docs"),

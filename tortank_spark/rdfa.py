@@ -40,20 +40,18 @@ close at EOF (the browser-parser behavior), and pages with no RDFa
 attributes simply emit zero triples with a quarantine row, the Turtle
 path's contract.
 
-Scale shape: one Arrow-batched ``mapInPandas`` stage, zero shuffle,
-column pruning to (url, text-or-html); parallelism = input splits.
+Scale shape: ``extract_rdfa_triples`` runs in the shared
+``extract.doc_stage`` — one ``mapInArrow`` stage, zero shuffle, column
+pruning to (url, text); parallelism = input splits.
 """
 
 from __future__ import annotations
 
-import hashlib
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-import pyspark.sql.functions as F
 
+from .extract import doc_stage
 from .schema import EXTRACT_SCHEMA
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -322,46 +320,9 @@ def extract_rdfa_triples(
     return triples, None
 
 
-_COLS = ["url", "s", "s_kind", "p", "o", "o_kind", "o_datatype", "o_lang",
-         "parse_ok", "error"]
-
-
-def _salt(url: str) -> str:
-    return (hashlib.sha1(url.encode("utf-8", "surrogatepass"))
-            .hexdigest()[:12] + "-")
-
-
-def _batches(batches: Iterator[pd.DataFrame],
-             fixture_mode: bool) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        cols = {c: [] for c in _COLS}
-        for url, text in zip(pdf["url"].values, pdf["_rdfa_text"].values):
-            prefix = "" if fixture_mode else _salt(url)
-            triples, err = extract_rdfa_triples(text, bnode_prefix=prefix)
-            if err is not None or not triples:
-                cols["url"].append(url)
-                for c in _COLS[1:8]:
-                    cols[c].append(None)
-                cols["parse_ok"].append(err is None)
-                cols["error"].append(err)
-            else:
-                k = len(triples)
-                cols["url"].extend([url] * k)
-                for j, c in enumerate(_COLS[1:8]):
-                    cols[c].extend(t[j] for t in triples)
-                cols["parse_ok"].extend([True] * k)
-                cols["error"].extend([None] * k)
-        yield pd.DataFrame(cols)
-
-
-def extract_rdfa(
-    pages: DataFrame, fixture_mode: bool = False, text_col: str = "text",
-) -> DataFrame:
-    """pages(url, text|html, ...) -> extraction rows (EXTRACT_SCHEMA) —
+def extract_rdfa(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
+    """pages(url, text, ...) -> extraction rows (EXTRACT_SCHEMA) —
     the RDFa twin of extract.extract_triples: same schema, salting,
     quarantine contract, and no-shuffle scale shape."""
-    cols = pages.select("url", F.col(text_col).alias("_rdfa_text"))
-    return cols.mapInPandas(
-        lambda it: _batches(it, fixture_mode),
-        schema=EXTRACT_SCHEMA,
-    )
+    return doc_stage(pages, extract_rdfa_triples, EXTRACT_SCHEMA,
+                     salt=not fixture_mode)

@@ -13,7 +13,6 @@ The page schema follows BASELINE.json input_hint:
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -54,17 +53,13 @@ EXTRACT_SCHEMA = StructType(
     ]
 )
 
-# per-document extraction metrics (lineage/metrics table of the north
-# rule): one row per page
-DOC_METRICS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("parse_ok", BooleanType(), False),
-        StructField("n_triples", LongType(), False),
-        StructField("error", StringType(), True),
-        StructField("text_sha1", StringType(), False),
-        StructField("n_chars", LongType(), False),
-    ]
+# the fused embedded extraction stage (extract.extract_embedded): each
+# triple tagged with the syntax it came from; a page without triples is
+# one status row with a null syntax, which the operator drops
+EMBEDDED_SCHEMA = StructType(
+    TRIPLE_FIELDS[:1]
+    + [StructField("syntax", StringType(), True)]
+    + EXTRACT_SCHEMA.fields[1:]
 )
 
 TRIPLE_COLS = ["s", "s_kind", "p", "o", "o_kind", "o_datatype", "o_lang"]

@@ -6,8 +6,8 @@ multi-executor cluster:
 
 * AQE on — runtime coalescing + skew-join splitting for the
   canonicalization self-joins (SURVEY.md §4).
-* Arrow on — the extraction stage is Arrow-vectorized pandas batches;
-  row-at-a-time Python never touches the hot path.
+* Arrow on — the extraction stage (extract.doc_stage) takes Arrow
+  record batches; row-at-a-time Python never touches the hot path.
 * shuffle.partitions sized to cores at test scale; a 1000-executor run
   would size this to ~2-3x total cores.
 * Arrow maxRecordsPerBatch stays at the 10k default: benchmarking showed

@@ -37,16 +37,6 @@ def token_count(text: Column) -> Column:
     )
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-flavored token estimate: count word pieces + digits + symbol
-    runs with one regex — a cheap stand-in for a real tokenizer that
-    stays JVM-side."""
-    pieces = F.regexp_extract_all(
-        F.lower(text), F.lit(r"([a-z]{1,6}|[0-9]|[^a-z0-9\s])"), 1
-    )
-    return F.size(pieces)
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation-ratio / stopword-ratio quality features,
     all column expressions."""
