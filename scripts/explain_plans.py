@@ -6,7 +6,7 @@ operators and assert the plan properties we design for:
 * the alias-dict / canonical-map joins are BroadcastHashJoin
 * whole-stage codegen covers the relational operators
 * every page extractor plans to one MapInArrow, no MapInPandas and no
-  Exchange
+  Exchange, and so do a pipeline bucket's triples in both syntax modes
 """
 
 import os
@@ -83,6 +83,23 @@ def main():
                      and "MapInPandas" not in p and "Exchange" not in p)
         print(f"{'ok  ' if one_stage else 'FAIL'} {fn.__name__} one "
               "MapInArrow, no MapInPandas, no Exchange")
+        ok &= one_stage
+
+    # 1c. a pipeline bucket's triples come straight off that stage:
+    # one MapInArrow and no shuffle (no bucket-wide distinct) for both
+    # syntax modes' per-document functions
+    from tortank_spark.extract import doc_stage, embedded_triples, triples_only
+    from tortank_spark.grammar.turtle import parse_document
+    from tortank_spark.schema import EXTRACT_SCHEMA
+
+    for per_doc in (parse_document, embedded_triples):
+        p = plan_of(triples_only(
+            doc_stage(pages, per_doc, EXTRACT_SCHEMA, salt=True)))
+        tree = p.split("\n\n")[0]
+        one_stage = (sum("MapInArrow" in l for l in tree.splitlines()) == 1
+                     and "Exchange" not in p)
+        print(f"{'ok  ' if one_stage else 'FAIL'} bucket triples over "
+              f"{per_doc.__name__}: one MapInArrow, no Exchange")
         ok &= one_stage
 
     # 2. pattern filter pushes predicates to the scan

@@ -221,6 +221,10 @@ def mixed_pages(spark):
                 'itemtype="http://schema.org/Person">'
                 '<span itemprop="name">K</span></div></div>'),
         ("u:bad", '<script type="application/ld+json">{nope</script>'),
+        # deeper than the parser's recursion: a quarantine row, not a
+        # failed job
+        ("u:deep", "@prefix ex: <http://e/> . ex:a ex:p "
+                   + "[ ex:p " * 400 + "ex:o" + " ]" * 400 + " ."),
     ]
     return spark.createDataFrame(rows, ["url", "text"])
 
@@ -260,6 +264,9 @@ def test_extract_stage_schema_and_quarantine(
         else:
             assert q["parse_ok"] == foreign_ok
             assert (q["error"] is None) == foreign_ok
+    if extract is extract_triples:
+        (deep,) = [r for r in rows if r["url"] == "u:deep"]
+        assert deep["error"] == "nesting too deep"
 
 
 @pytest.mark.parametrize(

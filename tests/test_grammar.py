@@ -4,6 +4,7 @@
 full fixture corpus (reference harness semantics)."""
 
 import json
+import sys
 from pathlib import Path
 
 import pytest
@@ -213,6 +214,25 @@ def test_unknown_prefix_fails_doc():
 def test_trailing_garbage_fails_doc():
     _, err = parse_document("<http://a> <http://b> <http://c> . ???")
     assert err and "could not parse" in err
+
+
+@pytest.mark.parametrize("open_, close, depth", [
+    ("[ :p ", " ]", 400),   # nested blank-node property lists
+    ("( ", " )", 1200),     # nested collections
+])
+def test_deep_nesting_fails_doc_not_job(open_, close, depth):
+    text = ("@prefix : <http://e/> .\n:a :p " + open_ * depth + ":o"
+            + close * depth + " .")
+    # Spark's Python workers run at the interpreter default; a test
+    # runner may have raised the limit
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)
+    try:
+        assert parse_document(text) == ([], "nesting too deep")
+    finally:
+        sys.setrecursionlimit(limit)
+    # the parser is usable again right after
+    assert parse_document("<http://a> <http://b> <http://c> .")[1] is None
 
 
 def test_comment_handling():

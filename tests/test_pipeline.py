@@ -2,11 +2,27 @@
 canonicalization wiring."""
 
 import json
+import os
+from pathlib import Path
 
 import pyspark.sql.functions as F
+import pytest
 
 from tortank_spark import fixtures
 from tortank_spark.pipeline import run_pipeline
+
+
+def assert_manifests_match_lineage(spark, out, n_buckets):
+    """The manifests' summed counts equal a recount of the written
+    lineage: they ride on the lineage write, not on a separate job."""
+    ms = [json.loads(Path(out, f"bucket={b}", "_MANIFEST.json").read_text())
+          for b in range(n_buckets)]
+    got = tuple(sum(m[k] for m in ms)
+                for k in ("docs", "triples", "parse_failures"))
+    r = spark.read.parquet(f"{out}/bucket=*/lineage").agg(
+        F.count(F.lit(1)), F.sum("n_triples"), F.count_if(~F.col("parse_ok"))
+    ).first()
+    assert got == tuple(r), (got, r)
 
 
 def test_pipeline_end_to_end_and_resume(spark, tmp_path):
@@ -59,6 +75,27 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     stats4 = run_pipeline(spark, pages, out, n_buckets=2, alias_dict=alias)
     assert stats4["buckets_ran"] == []          # manifest exists -> skip
     assert stats4["global_phase"] == "ran"      # but key changed -> rerun
+
+    # a crash while committing a manifest leaves no manifest (never a
+    # truncated one that would count as a finished bucket), so the next
+    # run redoes exactly that bucket
+    mpath.unlink()
+    replace = os.replace
+
+    def crash_on_manifest(src, dst):
+        if str(dst) == str(mpath):
+            raise OSError("crash while committing the manifest")
+        replace(src, dst)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(os, "replace", crash_on_manifest)
+        with pytest.raises(OSError, match="committing the manifest"):
+            run_pipeline(spark, pages, out, n_buckets=2, alias_dict=alias)
+    assert not mpath.exists()
+    stats5 = run_pipeline(spark, pages, out, n_buckets=2, alias_dict=alias)
+    assert stats5["buckets_ran"] == [1] and stats5["global_phase"] == "ran"
+    assert stats5["n_canonical_triples"] == stats["n_canonical_triples"]
+    assert_manifests_match_lineage(spark, out, 2)
 
     # lineage: the broken page is quarantined with an error message
     lineage = spark.read.parquet(out + "/bucket=*/lineage")
@@ -196,8 +233,8 @@ def test_bench_compact_summary_fits_tail_window():
 def test_pipeline_embedded_mode(spark, tmp_path):
     """syntax_mode='embedded': mixed JSON-LD/RDFa/microdata/Turtle
     pages all contribute to the canonical table; lineage covers EVERY
-    page (zero-markup pages as n_triples=0, parse_ok=true); resume
-    skips."""
+    page (zero-markup pages as n_triples=0, parse_ok=true); a triple
+    a page asserts in two syntaxes counts once; resume skips."""
     out = str(tmp_path / "kg_emb")
     rows = [
         ("u:j", '<script type="application/ld+json">'
@@ -209,6 +246,11 @@ def test_pipeline_embedded_mode(spark, tmp_path):
                 '<span itemprop="name">M</span></div>'),
         ("u:t", '@prefix e: <http://e/> . e:a e:b "x" .'),
         ("u:none", "<p>no markup at all</p>"),
+        # the same rdf:type triple in JSON-LD and in microdata
+        ("u:twice", '<script type="application/ld+json">'
+                    '{"@id":"http://d/1","@type":"http://s/T"}</script>'
+                    '<div itemscope itemtype="http://s/T" '
+                    'itemid="http://d/1"></div>'),
     ]
     import pyspark.sql.functions as F
 
@@ -218,17 +260,21 @@ def test_pipeline_embedded_mode(spark, tmp_path):
         "lang", F.lit("en"))
     stats = run_pipeline(spark, pages, out, n_buckets=2,
                          syntax_mode="embedded")
-    # u:j 1 + u:r 1 + u:m 2 (rdf:type + name) + u:t 1
-    assert stats["n_canonical_triples"] == 5
+    # u:j 1 + u:r 1 + u:m 2 (rdf:type + name) + u:t 1 + u:twice 1
+    assert stats["n_canonical_triples"] == 6
     lineage = spark.read.parquet(f"{out}/bucket=*/lineage")
     rows_l = {r["url"]: r for r in lineage.collect()}
-    assert set(rows_l) == {"u:j", "u:r", "u:m", "u:t", "u:none"}
+    assert set(rows_l) == {"u:j", "u:r", "u:m", "u:t", "u:none", "u:twice"}
     assert rows_l["u:none"]["n_triples"] == 0
+    assert rows_l["u:twice"]["n_triples"] == 1
     assert all(r["parse_ok"] for r in rows_l.values())
     assert rows_l["u:j"]["error"] is None
+    assert_manifests_match_lineage(spark, out, 2)
     stats2 = run_pipeline(spark, pages, out, n_buckets=2,
                           syntax_mode="embedded")
     assert stats2["buckets_ran"] == [] and stats2["global_phase"] == "skipped"
+    with pytest.raises(ValueError, match="syntax_mode"):
+        run_pipeline(spark, pages, out, n_buckets=2, syntax_mode="rdfa")
 
 
 def test_ensure_parallelism_fans_out_narrow_input_only(spark):

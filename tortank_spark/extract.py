@@ -155,14 +155,64 @@ def doc_metrics(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
     )
 
 
+def embedded_document(
+    text: str, bnode_prefix: str = ""
+) -> tuple[list[tuple], None]:
+    """Run all four per-document extractors over one page -> (rows,
+    None), each row a triple tagged with its syntax: ``('turtle' |
+    'jsonld' | 'rdfa' | 'microdata', s, s_kind, p, o, o_kind,
+    o_datatype, o_lang)``. A syntax that fails on the page contributes
+    no row; the page itself never fails."""
+    # these modules import doc_stage from here, so they load lazily
+    from .jsonld import jsonld_document
+    from .microdata import extract_microdata_triples
+    from .rdfa import extract_rdfa_triples
+
+    rows = []
+    ts, err = parse_document(text, bnode_prefix)
+    if err is None:
+        rows.extend(("turtle", *t) for t in ts)
+    # conservative per-syntax dispatch (guide §1.2 "per-task
+    # work"): each scanner can only ever emit when its trigger
+    # token occurs somewhere in the page — JSON-LD islands need a
+    # (case-insensitive) 'application/ld+json' script type, every
+    # RDFa emission requires a property= or typeof= attribute,
+    # every microdata emission an itemscope. A substring test over
+    # the lowered page is exactly conservative (false positives
+    # just run the scanner and emit nothing, false negatives are
+    # impossible), and skips 2-3 full HTML scans on the typical
+    # single-syntax page.
+    low = text.lower()
+    if "ld+json" in low:
+        ts, err = jsonld_document(text, bnode_prefix)
+        if err is None:
+            rows.extend(("jsonld", *t) for t in ts)
+    if "property" in low or "typeof" in low:
+        ts, _ = extract_rdfa_triples(text, bnode_prefix)
+        rows.extend(("rdfa", *t) for t in ts)
+    if "itemscope" in low:
+        ts, _ = extract_microdata_triples(text, bnode_prefix)
+        rows.extend(("microdata", *t) for t in ts)
+    return rows, None
+
+
+def embedded_triples(
+    text: str, bnode_prefix: str = ""
+) -> tuple[list[tuple], None]:
+    """The page's distinct triples over all four syntaxes, untagged:
+    a triple asserted in two syntaxes counts once, as the canonical
+    table is a set (the reference's statement dedup)."""
+    rows, _ = embedded_document(text, bnode_prefix)
+    return list(dict.fromkeys(r[1:] for r in rows)), None
+
+
 def extract_embedded(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
     """Unified embedded-KG extraction — the north star's 'embedded
     RDFa/JSON-LD/Turtle in page text' as ONE operator. Every page is
-    scanned once and run through all four per-document extractors
-    (Turtle grammar, JSON-LD islands, RDFa-Lite attribute scan, HTML
-    microdata itemscope scan); the output ``(syntax, url, s, ...)`` is
-    the union of each syntax's good triples tagged with
-    ``syntax in ('turtle','jsonld','rdfa','microdata')``.
+    scanned once and run through ``embedded_document``; the output
+    ``(syntax, url, s, ...)`` is the union of each syntax's good
+    triples tagged with ``syntax in ('turtle','jsonld','rdfa',
+    'microdata')``.
 
     Single-pass by construction: one ``doc_stage``, so the page table
     is read ONCE (a DataFrame-level union of the four standalone
@@ -173,40 +223,9 @@ def extract_embedded(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
     auditing stays with the standalone extractors (extract_triples /
     jsonld.extract_jsonld / rdfa.extract_rdfa /
     microdata.extract_microdata)."""
-    from .jsonld import jsonld_document
-    from .microdata import extract_microdata_triples
-    from .rdfa import extract_rdfa_triples
-
-    def per_doc(text, prefix):
-        rows = []
-        ts, err = parse_document(text, prefix)
-        if err is None:
-            rows.extend(("turtle", *t) for t in ts)
-        # conservative per-syntax dispatch (guide §1.2 "per-task
-        # work"): each scanner can only ever emit when its trigger
-        # token occurs somewhere in the page — JSON-LD islands need a
-        # (case-insensitive) 'application/ld+json' script type, every
-        # RDFa emission requires a property= or typeof= attribute,
-        # every microdata emission an itemscope. A substring test over
-        # the lowered page is exactly conservative (false positives
-        # just run the scanner and emit nothing, false negatives are
-        # impossible), and skips 2-3 full HTML scans on the typical
-        # single-syntax page.
-        low = text.lower()
-        if "ld+json" in low:
-            ts, err = jsonld_document(text, prefix)
-            if err is None:
-                rows.extend(("jsonld", *t) for t in ts)
-        if "property" in low or "typeof" in low:
-            ts, _ = extract_rdfa_triples(text, prefix)
-            rows.extend(("rdfa", *t) for t in ts)
-        if "itemscope" in low:
-            ts, _ = extract_microdata_triples(text, prefix)
-            rows.extend(("microdata", *t) for t in ts)
-        return rows, None
-
     return (
-        doc_stage(pages, per_doc, EMBEDDED_SCHEMA, salt=not fixture_mode)
+        doc_stage(pages, embedded_document, EMBEDDED_SCHEMA,
+                  salt=not fixture_mode)
         .filter(F.col("s").isNotNull())
         .select("syntax", *TRIPLE_SCHEMA.fieldNames())
     )

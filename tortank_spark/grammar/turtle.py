@@ -1069,6 +1069,8 @@ def parse_document(
         return [], str(e)
     except _Backtrack:
         return [], "parse error"
+    except RecursionError:  # e.g. hundreds of nested [ ] or ( )
+        return [], "nesting too deep"
 
 
 def parse_ntriples_statement(text: str, offset: int = 0):

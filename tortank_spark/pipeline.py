@@ -32,18 +32,31 @@ import time
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 import pyspark.sql.functions as F
 
 from . import fixtures
 from .canonicalize import connected_components, rewrite_canonical, sameas_edges
-from .extract import doc_lineage, extract_embedded, extract_triples, triples_only
+from .extract import doc_lineage, doc_stage, embedded_triples, triples_only
+from .grammar.turtle import parse_document
 from .linking import best_link_per_mention, detect_mentions, link_mentions, links_as_triples
-from .schema import TRIPLE_COLS
+from .schema import EXTRACT_SCHEMA
+
+# syntax_mode -> the per-document extractor every bucket runs
+_PER_DOC = {"turtle": parse_document, "embedded": embedded_triples}
 
 
 def bucket_of(url_col, n_buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(n_buckets)).cast("int")
+
+
+def _write_json(path: Path, obj) -> None:
+    """Write a run marker atomically: a crash leaves the old file or
+    none, never a truncated one (a truncated manifest would count as a
+    finished bucket)."""
+    tmp = path.with_name(path.name + ".tmp")
+    tmp.write_text(json.dumps(obj, indent=1))
+    os.replace(tmp, path)
 
 
 def _manifest_key(out: Path, n_buckets: int) -> str:
@@ -74,15 +87,22 @@ def run_pipeline(
 ) -> dict:
     """Run (or resume) the pipeline; returns run metrics.
 
-    ``syntax_mode``: 'turtle' parses each page as a standalone Turtle
-    document (quarantine rows on parse failure — the reference's
-    whole-doc contract); 'embedded' runs the fused four-syntax
-    extractor (extract.extract_embedded) so Common-Crawl-style HTML
-    pages carrying JSON-LD islands / RDFa / microdata / inline Turtle
-    all contribute — there a page with zero embedded markup is a
-    normal empty page, not a parse failure, and lineage records
-    n_triples=0 with parse_ok=true.
+    Each bucket runs one ``extract.doc_stage`` over its pages and
+    derives its triples, sameAs sidecar and lineage from those rows.
+    ``syntax_mode`` picks the per-document function (``_PER_DOC``):
+    'turtle' parses each page as a standalone Turtle document
+    (quarantine rows on parse failure — the reference's whole-doc
+    contract); 'embedded' runs ``extract.embedded_triples``, the
+    page's distinct triples over Turtle, JSON-LD islands, RDFa and
+    microdata, so Common-Crawl-style HTML pages all contribute — there
+    a page with zero embedded markup is a normal empty page, not a
+    parse failure, and lineage records n_triples=0 with parse_ok=true.
+    Any other value raises ValueError.
     """
+    per_doc = _PER_DOC.get(syntax_mode)
+    if per_doc is None:
+        raise ValueError(f"syntax_mode must be one of {sorted(_PER_DOC)}, "
+                         f"not {syntax_mode!r}")
     out = Path(out_dir)
     out.mkdir(parents=True, exist_ok=True)
     t0 = time.time()
@@ -116,7 +136,7 @@ def run_pipeline(
         # layout write would leave a committed table with no layout,
         # letting a later resume with a different n_buckets slip past
         # the guard above
-        layout_file.write_text(json.dumps({"n_buckets": n_buckets}))
+        _write_json(layout_file, {"n_buckets": n_buckets})
     if not (pages_dir / "_SUCCESS").exists():
         (
             pages.withColumn("_bucket", bucket_of(F.col("url"), n_buckets))
@@ -140,23 +160,14 @@ def run_pipeline(
         run_id = uuid.uuid4().hex
         if not bpath.exists():  # bucket got no pages: nothing to do
             manifest.parent.mkdir(parents=True, exist_ok=True)
-            manifest.write_text(json.dumps(
-                {"docs": 0, "triples": 0, "parse_failures": 0,
-                 "run_id": run_id}, indent=1
-            ))
+            _write_json(manifest, {"docs": 0, "triples": 0,
+                                   "parse_failures": 0, "run_id": run_id})
             ran.append(b)
             continue
         bucket_pages = spark.read.parquet(str(bpath))
-        stats = _run_bucket(
-            spark,
-            bucket_pages,
-            str(bdir),
-            alias_dict,
-            min_link_score,
-            syntax_mode,
-        )
-        stats["run_id"] = run_id
-        manifest.write_text(json.dumps(stats, indent=1))
+        stats = _run_bucket(bucket_pages, str(bdir), alias_dict,
+                            min_link_score, per_doc)
+        _write_json(manifest, {**stats, "run_id": run_id})
         ran.append(b)
     # global canonicalization over the union of bucket edge sidecars.
     # Resume guard: the phase is keyed to the full set of bucket
@@ -189,8 +200,6 @@ def run_pipeline(
         # the output count rides on the write job itself (Observation
         # metric) — re-reading triples_canonical just to count it is a
         # second full scan of the largest table in the pipeline
-        from pyspark.sql import Observation
-
         canon_obs = Observation("canonical_count")
         canonical = rewrite_canonical(triples, cmap).observe(
             canon_obs, F.count(F.lit(1)).alias("n")
@@ -205,10 +214,8 @@ def run_pipeline(
 
         write_triples_pbucketed(canonical, str(canon_dir))
         n_triples = int(canon_obs.get["n"])
-        global_file.write_text(json.dumps({
-            "manifest_key": manifest_key,
-            "n_canonical_triples": n_triples,
-        }))
+        _write_json(global_file, {"manifest_key": manifest_key,
+                                  "n_canonical_triples": n_triples})
     wall = time.time() - t0
     run_stats = {
         "buckets_total": n_buckets,
@@ -218,80 +225,45 @@ def run_pipeline(
         "n_canonical_triples": n_triples,
         "wall_sec": round(wall, 3),
     }
-    (out / "_RUN.json").write_text(json.dumps(run_stats, indent=1))
+    _write_json(out / "_RUN.json", run_stats)
     return run_stats
 
 
 def _run_bucket(
-    spark: SparkSession,
     pages: DataFrame,
     bdir: str,
     alias_dict: DataFrame | None,
     min_link_score: float,
-    syntax_mode: str = "turtle",
+    per_doc,
 ) -> dict:
     pages = pages.persist()
-    if syntax_mode == "embedded":
-        emb = extract_embedded(pages).persist()
-        triples = emb.select(
-            "url", "s", "s_kind", "p", "o", "o_kind",
-            "o_datatype", "o_lang",
-        ).distinct()  # a triple may arrive via two syntaxes; the
-        # canonical table is a set, per the reference's statement dedup
-        extracted = None
-    else:
-        extracted = extract_triples(pages).persist()
-        triples = triples_only(extracted)
-
-    link_triples = None
+    extracted = doc_stage(pages, per_doc, EXTRACT_SCHEMA, salt=True).persist()
+    triples = triples_only(extracted)
+    all_triples = triples
     if alias_dict is not None:
         mentions = detect_mentions(pages)
         links = best_link_per_mention(
             link_mentions(mentions, alias_dict, min_link_score)
         )
-        link_triples = links_as_triples(links)
-        all_triples = triples.unionByName(link_triples)
-    else:
-        all_triples = triples
+        all_triples = triples.unionByName(links_as_triples(links))
 
     all_triples.write.mode("overwrite").parquet(f"{bdir}/triples")
     sameas_edges(triples).write.mode("overwrite").parquet(
         f"{bdir}/sameas_edges"
     )
-    # lineage: url -> bucket + per-doc counts + parse status. The
-    # embedded extractor emits good triples only (no quarantine rows),
-    # so its lineage left-joins the full page set back in: EVERY page
-    # gets a row, zero-markup pages as (0, true, null).
-    if syntax_mode == "embedded":
-        lineage = (
-            pages.select("url").distinct()
-            .join(triples.groupBy("url").agg(
-                F.count("*").alias("n_triples")), "url", "left")
-            .select(
-                "url",
-                F.coalesce(F.col("n_triples"), F.lit(0)).alias("n_triples"),
-                F.lit(True).alias("parse_ok"),
-                F.lit(None).cast("string").alias("error"),
-            )
-        )
-    else:
-        lineage = doc_lineage(extracted)
-    lineage.write.mode("overwrite").parquet(f"{bdir}/lineage")
-    agg = lineage.agg(
-        F.count("*").alias("docs"),
+    # lineage: url -> per-doc counts + parse status, one row per page
+    # (a page without triples is doc_stage's status row). The manifest
+    # counts ride on the lineage write (Observation metric).
+    obs = Observation("bucket_stats")
+    doc_lineage(extracted).observe(
+        obs,
+        F.count(F.lit(1)).alias("docs"),
         F.sum("n_triples").alias("triples"),
-        F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias("parse_failures"),
-    ).collect()[0]
+        F.count_if(~F.col("parse_ok")).alias("parse_failures"),
+    ).write.mode("overwrite").parquet(f"{bdir}/lineage")
     pages.unpersist()
-    if extracted is not None:
-        extracted.unpersist()
-    else:
-        emb.unpersist()
-    return {
-        "docs": agg["docs"],
-        "triples": int(agg["triples"] or 0),
-        "parse_failures": int(agg["parse_failures"] or 0),
-    }
+    extracted.unpersist()
+    return {k: int(v) for k, v in obs.get.items()}
 
 
 def main():

@@ -5,7 +5,7 @@ scale, and tortank has no analogue (single-document model); this is
 the Common-Crawl-style "web graph product" stage of the north rule.
 
 * ``extract_links``: one Arrow-batched ``mapInPandas`` stage over
-  (url, text|html) that runs the shared tag scanner (htmlscan.py) and
+  (url, text) that runs the shared tag scanner (htmlscan.py) and
   emits (url, href, rel, anchor) per ``<a href>`` — anchor text
   whitespace-normalized like the RDFa text-content rule, nofollow
   surfaced via ``rel`` so the ranking layer can weight it. Relative
@@ -101,19 +101,18 @@ def extract_page_links(page_url: str, html: str) -> list[tuple]:
     return out
 
 
-def extract_links(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """pages(url, text|html, ...) -> (url, href, rel, anchor)."""
+def extract_links(pages: DataFrame) -> DataFrame:
+    """pages(url, text, ...) -> (url, href, rel, anchor)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows: list[tuple] = []
-            for url, text in zip(pdf["url"].values, pdf["_lk_text"].values):
+            for url, text in zip(pdf["url"].values, pdf["text"].values):
                 rows.extend(extract_page_links(url, text))
             yield pd.DataFrame(
                 rows, columns=["url", "href", "rel", "anchor"])
 
-    sel = pages.select("url", F.col(text_col).alias("_lk_text"))
-    return sel.mapInPandas(gen, schema=LINKS_SCHEMA)
+    return pages.select("url", "text").mapInPandas(gen, schema=LINKS_SCHEMA)
 
 
 def _host(col):
