@@ -7,6 +7,8 @@ and equal statement counts. Cases 0004/0005 check the difference
 operator (input - diff == output); 0027 checks the RDF/JSON encoding.
 (0003's "could not parse" name is historical — the reference runs it as
 a plain EQ case, /root/reference/src/tests/turtle_doc_test.rs:10.)
+
+Exits 2 with the reason when the reference corpus is absent.
 """
 
 import json
@@ -15,34 +17,26 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from tortank_spark.fixtures import (
+    DIFF_CASES, EQ_CASES, REF_FIXTURE_DIR as FIX, reference_missing,
+)
 from tortank_spark.grammar import parse_document
-
-FIX = Path("/root/reference/examples/turtle_doc")
-
-EQ_CASES = [
-    "0001", "0002", "0003", "0006", "0007", "0008", "0009", "0010", "0011",
-    "0012", "0013", "0014", "0015", "0016", "0017", "0018", "0019",
-    "0020", "0021", "0022", "0023", "0024", "0025", "0026", "0028",
-    "0029", "0030", "0031", "0032",
-]
-DIFF_CASES = ["0004", "0005"]
 
 
 def parse_file(path):
-    text = path.read_text()
-    return parse_document(text)
-
-
-def key(t):
-    return t  # full canonical tuple
+    return parse_document(path.read_text())
 
 
 def main():
+    reason = reference_missing()
+    if reason:
+        print(reason)
+        return 2
     failures = []
     for case in EQ_CASES:
         inp, ein = parse_file(FIX / "input" / f"{case}.ttl")
         out, eout = parse_file(FIX / "output" / f"{case}.ttl")
-        si, so = set(map(key, inp)), set(map(key, out))
+        si, so = set(inp), set(out)
         ok = ein is None and eout is None and si == so and len(inp) == len(out)
         if not ok:
             failures.append(case)

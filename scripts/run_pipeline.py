@@ -4,7 +4,8 @@
 Builds the SparkSession from the submit-provided context instead of a
 hardcoded master, so the identical file works on a real cluster:
 ``spark-submit --master yarn --py-files tortank_spark.zip
-scripts/run_pipeline.py --out s3://bucket/kg``.
+scripts/run_pipeline.py --out s3://bucket/kg``. A rerun over the same
+``--out`` resumes: finished buckets are skipped.
 """
 
 import argparse
@@ -14,13 +15,23 @@ from pyspark.sql import SparkSession
 
 
 def main():
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(description="tortank-spark KG pipeline")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--pages", type=int, default=1024)
+    ap.add_argument("--pages", type=int, default=1024,
+                    help="synthetic page count when --input is not given")
+    ap.add_argument(
+        "--input", default=None,
+        help="page-table source instead of synthetic pages: "
+             "table:<catalog.db.name> (Iceberg via session catalog), "
+             "iceberg:<path>, or a parquet directory "
+             "(sources.pagetable.read_pages resolution ladder)",
+    )
     ap.add_argument("--buckets", type=int, default=8)
-    ap.add_argument("--pages-parquet", default=None,
-                    help="read the page table from parquet instead of "
-                         "synthesizing fixtures")
+    ap.add_argument(
+        "--syntax", choices=["turtle", "embedded"], default="turtle",
+        help="page parse mode: whole-doc Turtle (reference contract) "
+             "or the fused four-syntax embedded-markup extractor",
+    )
     args = ap.parse_args()
 
     spark = (
@@ -34,13 +45,15 @@ def main():
     from tortank_spark import fixtures
     from tortank_spark.pipeline import run_pipeline
 
-    if args.pages_parquet:
-        pages = spark.read.parquet(args.pages_parquet)
+    if args.input:
+        from tortank_spark.sources.pagetable import read_pages
+
+        pages = read_pages(spark, args.input)
     else:
         pages = fixtures.make_pages(spark, n_pages=args.pages)
     alias_dict = fixtures.make_alias_dict(spark)
     stats = run_pipeline(spark, pages, args.out, n_buckets=args.buckets,
-                         alias_dict=alias_dict)
+                         alias_dict=alias_dict, syntax_mode=args.syntax)
     print(json.dumps(stats))
 
 

@@ -1,19 +1,27 @@
 """End-to-end extraction gate: pages -> mapInArrow parse -> triples,
 compared against the reference goldens with the reference's own
 set-difference semantics (P/R must be 1.0 on the fixture corpus), plus
-the byte-identical text passthrough invariant from BASELINE.json."""
+the byte-identical text passthrough invariant from BASELINE.json. The
+parity tests need the reference corpus; the rest run on the synthetic
+page table."""
 
 import hashlib
 
 import pyspark.sql.functions as F
+import pytest
 
 from tortank_spark import fixtures
+from tortank_spark.fixtures import REF_FIXTURE_DIR
 from tortank_spark.compare import pr_overall, pr_per_url
 from tortank_spark.extract import doc_metrics, extract_triples, triples_only
 
 
+@pytest.mark.needs_reference
 def test_fixture_pr_is_perfect(spark):
-    pages = fixtures.make_pages(spark, n_pages=40, include_broken=True)
+    pages = spark.createDataFrame(
+        [(fixtures.fixture_url(c), t) for c, t in fixtures.fixture_texts().items()],
+        "url string, text string",
+    )
     eq_urls = [fixtures.fixture_url(c) for c in fixtures.EQ_CASES]
     got = triples_only(
         extract_triples(pages.filter(F.col("url").isin(eq_urls)),
@@ -33,12 +41,12 @@ def test_fixture_pr_is_perfect(spark):
     assert not bad, bad
 
 
+@pytest.mark.needs_reference
 def test_diff_cases_via_difference_operator(spark):
     """DIFF fixtures 0004/0005: input - diff == output, exercised through
     the Spark tt_difference operator (reference harness:
     /root/reference/src/tests/mod.rs:49-61)."""
     from tortank_spark.algebra import tt_difference
-    from tortank_spark.fixtures import REF_FIXTURE_DIR
     from tortank_spark.schema import TRIPLE_SCHEMA
     from tortank_spark.grammar import parse_document
 
@@ -75,8 +83,7 @@ def test_text_byte_fidelity_per_url(spark):
     sha1 witness which must match a driver-side recomputation."""
     pages = fixtures.make_pages(spark, n_pages=40)
     metrics = {r["url"]: r for r in doc_metrics(pages).collect()}
-    for case, text in fixtures.fixture_texts().items():
-        url = fixtures.fixture_url(case)
+    for url, text in pages.select("url", "text").collect():
         want_sha = hashlib.sha1(text.encode("utf-8")).hexdigest()
         assert metrics[url]["text_sha1"] == want_sha
         assert metrics[url]["n_chars"] == len(text)
@@ -104,6 +111,7 @@ def test_salted_bnode_labels_globally_unique(spark):
     assert dup == 0
 
 
+@pytest.mark.needs_reference
 def test_query_uuid_real_fixture(spark):
     """Reference tests/query.rs:6-35 on the real-world query fixture
     (examples/turtle_doc/query/complemented.ttl): pattern filter on
@@ -113,10 +121,8 @@ def test_query_uuid_real_fixture(spark):
     from tortank_spark.algebra import pattern_filter
     from tortank_spark.extract import extract_triples, triples_only
 
-    text = open(
-        "/root/reference/examples/turtle_doc/query/complemented.ttl",
-        encoding="utf-8",
-    ).read()
+    text = (REF_FIXTURE_DIR / "query" / "complemented.ttl").read_text(
+        encoding="utf-8")
     pages = spark.createDataFrame([("q", text)], "url string, text string")
     t = triples_only(extract_triples(pages, fixture_mode=True))
     got = pattern_filter(
@@ -132,6 +138,7 @@ def test_query_uuid_real_fixture(spark):
     assert r["o_lang"] is None
 
 
+@pytest.mark.needs_reference
 def test_render_roundtrip_real_fixture():
     """Semantic round trip on the real-world fixture: our Display
     rendering of the parsed doc re-parses to the identical triple set
@@ -139,10 +146,8 @@ def test_render_roundtrip_real_fixture():
     dateTimes)."""
     from tortank_spark.grammar.turtle import parse_document
 
-    text = open(
-        "/root/reference/examples/turtle_doc/query/complemented.ttl",
-        encoding="utf-8",
-    ).read()
+    text = (REF_FIXTURE_DIR / "query" / "complemented.ttl").read_text(
+        encoding="utf-8")
     triples, err = parse_document(text)
     assert err is None and len(triples) > 20
 

@@ -3,12 +3,14 @@
  triple_common_parser_test_misc.rs, string_parser.rs tests) plus the
 full fixture corpus (reference harness semantics)."""
 
+import hashlib
 import json
 import sys
-from pathlib import Path
 
 import pytest
 
+from tortank_spark import fixtures
+from tortank_spark.fixtures import REF_FIXTURE_DIR as FIX
 from tortank_spark.grammar import parse_document, parse_ntriples_statement
 from tortank_spark.grammar.lexical import (
     XSD_BOOLEAN,
@@ -20,7 +22,6 @@ from tortank_spark.grammar.lexical import (
     rust_f64_str,
 )
 
-FIX = Path("/root/reference/examples/turtle_doc")
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 
 
@@ -256,6 +257,69 @@ def test_ntriples_incremental():
     assert parse_ntriples_statement(s, off) is None
 
 
+_DEEP_400 = ("@prefix ex: <http://e/> .\nex:a ex:p " + "[ ex:p " * 400
+             + "ex:o" + " ]" * 400 + " .")
+
+# name -> (document, pin): (n_triples, sha256 over the sorted triple
+# reprs) for a document that parses, else the exact error string
+_SYNTHETIC_PINS = {
+    "filler3": (lambda: fixtures._filler_text(3), (
+        43, "3df71fa493fba0399f0374f2a3dd47ebfce66e37f83055d90139422b0e1084a6")),
+    "filler4": (lambda: fixtures._filler_text(4), (
+        46, "18e04a4176852868303075de5016b4cc358f670996f100cba06c103ce6710429")),
+    "filler5": (lambda: fixtures._filler_text(5), (
+        38, "b28954bf83ddaae2d3b51e0646d6adfef5ef8c78ca9c27060a29d0b9b9c71bcd")),
+    "big": (fixtures._big_page_text, (
+        8000, "33fa59a4a157699518d6a444c84bfd08b9e841818c83a1d0d4169d78dc10a515")),
+    "bnode_heavy": (fixtures._bnode_heavy_text, (
+        8000, "f3d387c2a430f37f50eca735580f1744556b0085ba565862c72fedc362294b6d")),
+    "broken": (lambda: fixtures.BROKEN_DOC,
+               "could not parse the doc completely: rest => "
+               "'<http://example.org/x> <http://example.org/y> @@@ not turtle\\n'"),
+    "empty": (lambda: "", (
+        0, "e3b0c44298fc1c149afbf4c8996fb92427ae41e4649b934ca495991b7852b855")),
+    "garbage": (lambda: "this is not turtle at all",
+                "could not parse the doc completely: rest => "
+                "'this is not turtle at all'"),
+    "unknown_prefix": (lambda: "foo:a foo:b foo:c .", "prefix foo unknown"),
+    "bad_typed_literal": (
+        lambda: '<http://a> <http://b> "abc"'
+                "^^<http://www.w3.org/2001/XMLSchema#integer> .",
+        "invalid digit found in string: 'abc'"),
+    "unclosed_brackets": (
+        lambda: "<http://a> <http://b> [ <http://c> ( <http://d> .",
+        "expected ']' closing bracketed term"),
+    "deep_400": (lambda: _DEEP_400, "nesting too deep"),
+}
+
+
+@pytest.mark.parametrize("name", list(_SYNTHETIC_PINS))
+def test_synthetic_docs_pinned(name):
+    """Regression pin of today's parser, NOT tortank parity: every
+    document shape ``fixtures.make_pages`` emits (three filler
+    templates, the big page, the bnode-heavy page, the broken page)
+    and the adversarial probes parse to the triple count + digest, or
+    fail with the error, recorded from this parser. It guards the
+    grammar on hosts without the reference corpus; a change here is a
+    behaviour change to explain, not a reference mismatch."""
+    make_text, pin = _SYNTHETIC_PINS[name]
+    # the interpreter default Spark workers run at (see
+    # test_deep_nesting_fails_doc_not_job)
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(1000)
+    try:
+        triples, err = parse_document(make_text())
+    finally:
+        sys.setrecursionlimit(limit)
+    if isinstance(pin, str):
+        assert (triples, err) == ([], pin)
+    else:
+        digest = hashlib.sha256(
+            "\n".join(sorted(map(repr, triples))).encode()).hexdigest()
+        assert err is None and (len(triples), digest) == pin
+
+
+@pytest.mark.needs_reference
 @pytest.mark.parametrize("case", [f"{i:04d}" for i in range(1, 33)
                                   if i not in (4, 5, 27)])
 def test_fixture_eq(case):
@@ -266,6 +330,7 @@ def test_fixture_eq(case):
     assert len(inp) == len(out)
 
 
+@pytest.mark.needs_reference
 @pytest.mark.parametrize("case", ["0004", "0005"])
 def test_fixture_diff(case):
     inp, _ = parse_document((FIX / "input" / f"{case}.ttl").read_text())
@@ -275,6 +340,7 @@ def test_fixture_diff(case):
     assert set(got) == set(out) and len(got) == len(out)
 
 
+@pytest.mark.needs_reference
 def test_fixture_json_0027():
     inp, err = parse_document((FIX / "input" / "0027.ttl").read_text())
     assert err is None

@@ -159,41 +159,17 @@ def test_winnow_hash_vectorized_matches_python_fold(text):
     the short-text whole-string hash. This is the no-Spark core of the
     equivalence that licenses the fast path; the Spark-level test
     (test_operators) covers the full selection + DuckDB oracle."""
-    import numpy as np
-
     from tortank_spark.textops import (
-        _WINNOW_B,
-        _WINNOW_C,
         _normalize_ws,
         _winnow_gram_hashes,
+        _winnow_select,
     )
 
     k = 5
-    norm = _normalize_ws(text)
-    want = _winnow_gram_hashes(norm, k)
-
-    B, C = np.uint64(_WINNOW_B), np.uint64(_WINNOW_C)
-
-    def fin(h):
-        h = h ^ (h >> np.uint64(33))
-        h = h * C
-        return h ^ (h >> np.uint64(29))
-
-    cp = np.frombuffer(norm.encode("utf-32-le"), dtype=np.uint32).astype(
-        np.uint64
-    )
-    n_grams = cp.size - k + 1
-    with np.errstate(over="ignore"):
-        if n_grams <= 0:
-            h = np.uint64(0)
-            for c in cp:
-                h = h * B + c
-            got = [int(fin(h))]
-        else:
-            h = np.zeros(n_grams, dtype=np.uint64)
-            for j in range(k):
-                h = h * B + cp[j : j + n_grams]
-            got = [int(x) for x in fin(h)]
+    want = _winnow_gram_hashes(_normalize_ws(text), k)
+    # w=1: every k-gram is its own window minimum, so the production
+    # kernel returns every gram hash (or the one whole-text hash)
+    got = [int(x) for x in _winnow_select(text, k, 1)[1]]
     assert got == want
 
 

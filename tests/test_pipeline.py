@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from tortank_spark import fixtures
+from tortank_spark.linking import MENTIONS_PRED
 from tortank_spark.pipeline import run_pipeline
 
 
@@ -102,9 +103,19 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     bad = lineage.filter(~F.col("parse_ok")).collect()
     assert len(bad) == 1 and bad[0]["error"]
 
-    # canonicalization: fixture 0001/0013 sameAs collapsed
+    # canonicalization: every synthetic `ex:page{i} owl:sameAs ex:alias{i}`
+    # pair (filler rows i % 3 == 0) collapsed onto its lexicographic
+    # min, ex:alias{i}
     canon = spark.read.parquet(out + "/triples_canonical")
-    assert canon.filter(F.col("s").contains("ns#ComplexResource")).count() == 0
+    ns = "http://example.org/ns#"
+    pairs = [(f"{ns}page{i}", f"{ns}alias{i}") for i in range(3, 48, 3)]
+    subjects = {r["s"] for r in canon.filter(
+        F.col("s").isin([iri for pair in pairs for iri in pair])
+    ).select("s").distinct().collect()}
+    assert subjects == {alias for _, alias in pairs}
+
+    # linking: the alias dictionary linked page text to entities
+    assert canon.filter(F.col("p") == MENTIONS_PRED).count() > 0
 
     # the canonical table is a PARTITIONED layout (p_bucket dirs), and
     # a bound-predicate scan through the pruning reader matches a plain

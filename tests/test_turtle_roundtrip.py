@@ -26,17 +26,15 @@ under xdist / --random-order / -k selection.
 """
 
 import re
-from pathlib import Path
 
 import pytest
 
+from tortank_spark.fixtures import FIXTURE_CASES, REF_FIXTURE_DIR
 from tortank_spark.grammar import parse_document
 from tortank_spark.schema import TRIPLE_SCHEMA
 from tortank_spark.serialize import PRETTY_PREFIXES, turtle_document
 
-FIXTURES = sorted(
-    Path("/root/reference/examples/turtle_doc/input").glob("*.ttl")
-)
+pytestmark = pytest.mark.needs_reference
 
 _NUM = {
     "http://www.w3.org/2001/XMLSchema#integer",
@@ -128,10 +126,11 @@ def _round_trip_status(spark, path) -> tuple[str, str]:
 @pytest.fixture(scope="module")
 def roundtrip_results(spark):
     """All fixture statuses, computed once per module run."""
-    return {p.stem: _round_trip_status(spark, p) for p in FIXTURES}
+    return {c: _round_trip_status(spark, REF_FIXTURE_DIR / "input" / f"{c}.ttl")
+            for c in FIXTURE_CASES}
 
 
-@pytest.mark.parametrize("stem", [p.stem for p in FIXTURES])
+@pytest.mark.parametrize("stem", FIXTURE_CASES)
 def test_as_turtle_reparse_round_trip(roundtrip_results, stem):
     status, detail = roundtrip_results[stem]
     if status == "unparseable":

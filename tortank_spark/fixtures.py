@@ -1,11 +1,17 @@
-"""Deterministic synthetic page-table + golden-triple generation.
+"""Deterministic synthetic page table, alias dictionary and the
+tortank reference corpus location.
 
-Implements FIXTURES.md §1-§5: a Common-Crawl-style page table whose
-``text`` column embeds the reference's fixture documents verbatim
-(byte-for-byte), plus deterministic filler pages for scale runs, plus
-the alias dictionary and sameAs co-reference edges for entity linking
-and canonicalization. No wall-clock, no randomness beyond a seeded
-LCG — the same inputs are produced on every run.
+Implements FIXTURES.md §1-§5: a Common-Crawl-style page table of
+synthetic Turtle documents (one broken page for the quarantine path,
+heavy pages, deterministic filler), plus the alias dictionary derived
+from those documents for entity linking. Neither reads a file, so the
+page table is the same on every host. No wall-clock, no randomness —
+the same inputs are produced on every run.
+
+``REF_FIXTURE_DIR`` is the one place that names the reference's fixture
+suite; only the parity checks read it (``fixture_texts``,
+``golden_texts``, ``make_golden_triples``), and
+``reference_missing`` says whether it is there.
 """
 
 from __future__ import annotations
@@ -61,8 +67,16 @@ _FILLER_TEMPLATES = [
 ]
 
 
+def reference_missing() -> str | None:
+    """Why the parity checks cannot run here, or None when the
+    reference corpus is present."""
+    if REF_FIXTURE_DIR.is_dir():
+        return None
+    return f"reference corpus absent: {REF_FIXTURE_DIR}"
+
+
 def fixture_texts() -> dict[str, str]:
-    """case -> verbatim input fixture text (read once, embedded as-is)."""
+    """case -> verbatim input fixture text."""
     return {
         c: (REF_FIXTURE_DIR / "input" / f"{c}.ttl").read_text()
         for c in FIXTURE_CASES
@@ -144,6 +158,26 @@ def _bnode_heavy_text(n: int = 1000) -> str:
     return "".join(parts)
 
 
+def _synthetic_docs(n_pages: int, include_broken: bool,
+                    include_heavy: bool, heavy_sets: int):
+    """(url, text) per page-table row, in row order: the broken page,
+    ``heavy_sets`` heavy pairs, then filler up to n_pages (a filler
+    page's index is its row index)."""
+    docs = []
+    if include_broken:
+        docs.append(("https://synth.example.org/broken/0", BROKEN_DOC))
+    if include_heavy:
+        for h in range(heavy_sets):
+            docs.append((f"https://synth.example.org/big/{h}",
+                         _big_page_text()))
+            docs.append((f"https://synth.example.org/bnodes/{h}",
+                         _bnode_heavy_text()))
+    for i in range(len(docs), n_pages):
+        docs.append((f"https://synth.example.org/page/{i:08d}",
+                     _filler_text(i)))
+    return docs
+
+
 def make_pages(
     spark: SparkSession,
     n_pages: int = 64,
@@ -152,8 +186,7 @@ def make_pages(
     include_heavy: bool = True,
     heavy_sets: int = 1,
 ) -> DataFrame:
-    """Build the synthetic page table. The first rows embed the 32
-    reference fixture docs verbatim; then (optionally) one broken page
+    """Build the synthetic page table: (optionally) one broken page
     for the quarantine path and ``heavy_sets`` heavy-page pairs — a
     multi-MB doc and a bnode-dense doc each — then deterministic
     filler up to n_pages.
@@ -163,29 +196,11 @@ def make_pages(
     so a constant-size heavy tail would skew the per-core work ratio
     (~16% at the bench's corpus sizes) — the big leg passes
     heavy_sets=k to keep the legs proportional."""
-    rows = []
-    i = 0
-    for case, text in fixture_texts().items():
-        rows.append(_page_row(fixture_url(case), i, text))
-        i += 1
-    if include_broken:
-        rows.append(_page_row("https://synth.example.org/broken/0", i, BROKEN_DOC))
-        i += 1
-    if include_heavy:
-        for h in range(heavy_sets):
-            rows.append(_page_row(f"https://synth.example.org/big/{h}", i,
-                                  _big_page_text()))
-            i += 1
-            rows.append(_page_row(f"https://synth.example.org/bnodes/{h}", i,
-                                  _bnode_heavy_text()))
-            i += 1
-    while len(rows) < n_pages:
-        rows.append(
-            _page_row(
-                f"https://synth.example.org/page/{i:08d}", i, _filler_text(i)
-            )
-        )
-        i += 1
+    rows = [
+        _page_row(url, i, text)
+        for i, (url, text) in enumerate(_synthetic_docs(
+            n_pages, include_broken, include_heavy, heavy_sets))
+    ]
     return spark.createDataFrame(rows, PAGE_SCHEMA).repartition(n_partitions)
 
 
@@ -220,12 +235,14 @@ def make_golden_triples(spark: SparkSession) -> DataFrame:
 
 def make_alias_dict(spark: SparkSession) -> DataFrame:
     """FIXTURES.md §4: deterministic alias -> entity_iri dictionary
-    derived from fixture IRIs (broadcast side of entity linking)."""
+    derived from the IRIs of the documents ``make_pages()`` emits at
+    its defaults (broadcast side of entity linking), so ``page{i}``,
+    ``alias{i}``, ``item{i}`` and the like occur in page text."""
     from .grammar.turtle import parse_document
     import re
 
     entities: dict[str, str] = {}
-    for case, text in fixture_texts().items():
+    for _, text in _synthetic_docs(64, True, True, 1):
         triples, err = parse_document(text)
         if err:
             continue

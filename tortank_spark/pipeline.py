@@ -25,7 +25,6 @@ broadcast joins over the bucketed triple files.
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import time
@@ -35,7 +34,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Observation, SparkSession
 import pyspark.sql.functions as F
 
-from . import fixtures
 from .canonicalize import connected_components, rewrite_canonical, sameas_edges
 from .extract import doc_lineage, doc_stage, embedded_triples, triples_only
 from .grammar.turtle import parse_document
@@ -265,44 +263,3 @@ def _run_bucket(
     extracted.unpersist()
     return {k: int(v) for k, v in obs.get.items()}
 
-
-def main():
-    ap = argparse.ArgumentParser(description="tortank-spark KG pipeline")
-    ap.add_argument("--out", required=True)
-    ap.add_argument("--pages", type=int, default=256)
-    ap.add_argument(
-        "--input", default=None,
-        help="page-table source instead of synthesized fixtures: "
-             "table:<catalog.db.name> (Iceberg via session catalog), "
-             "iceberg:<path>, or a parquet directory "
-             "(sources.pagetable.read_pages resolution ladder)",
-    )
-    ap.add_argument("--buckets", type=int, default=8)
-    ap.add_argument(
-        "--syntax", choices=["turtle", "embedded"], default="turtle",
-        help="page parse mode: whole-doc Turtle (reference contract) "
-             "or the fused four-syntax embedded-markup extractor",
-    )
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    args = ap.parse_args()
-
-    from .session import get_spark
-
-    spark = get_spark("tortank-pipeline", cpus=args.cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    if args.input:
-        from .sources.pagetable import read_pages
-
-        pages = read_pages(spark, args.input)
-    else:
-        pages = fixtures.make_pages(spark, n_pages=args.pages,
-                                    n_partitions=max(args.cpus, 8))
-    alias_dict = fixtures.make_alias_dict(spark)
-    stats = run_pipeline(spark, pages, args.out, n_buckets=args.buckets,
-                         alias_dict=alias_dict, syntax_mode=args.syntax)
-    print(json.dumps(stats))
-
-
-if __name__ == "__main__":
-    main()

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
@@ -121,6 +122,47 @@ def _winnow_gram_hashes(norm: str, k: int) -> list[int]:
     return [fold(cps[i : i + k]) for i in range(len(cps) - k + 1)]
 
 
+def _winnow_finalize(h):
+    h = h ^ (h >> np.uint64(33))
+    h = h * np.uint64(_WINNOW_C)
+    return h ^ (h >> np.uint64(29))
+
+
+def _winnow_select(text: str | None, k: int, w: int):
+    """One document's winnowing: the k-gram hashes of the
+    whitespace-normalized lowercase text, and the minimum of every
+    window of ``w`` consecutive hashes at its RIGHTMOST position on
+    ties. Returns (sorted distinct positions as int64, their uint64
+    hashes); a text shorter than k yields the single pair (0,
+    hash-of-whole-text). ~k+3 numpy vector ops over the codepoint
+    array, no per-gram Python loop."""
+    B = np.uint64(_WINNOW_B)
+    # utf-32-le = exactly one array element per codepoint, so gram
+    # positions stay CHARACTER positions (matching DuckDB's
+    # character-based substr in the oracle)
+    cp = np.frombuffer(
+        _normalize_ws(text).encode("utf-32-le"), dtype=np.uint32
+    ).astype(np.uint64)
+    n_grams = cp.size - k + 1
+    with np.errstate(over="ignore"):  # uint64 wrap IS the hash
+        if n_grams <= 0:
+            h = np.uint64(0)
+            for c in cp:  # < k iterations
+                h = h * B + c
+            return (np.zeros(1, dtype=np.int64),
+                    np.array([_winnow_finalize(h)], dtype=np.uint64))
+        h = np.zeros(n_grams, dtype=np.uint64)
+        for j in range(k):  # k vector ops, no per-gram loop
+            h = h * B + cp[j : j + n_grams]
+        hs = _winnow_finalize(h)
+    ww = min(w, n_grams)
+    win = np.lib.stride_tricks.sliding_window_view(hs, ww)
+    # rightmost min: argmin over the REVERSED window
+    idx = (ww - 1) - np.argmin(win[:, ::-1], axis=1)
+    pos = np.unique(np.arange(len(win)) + idx)
+    return pos.astype(np.int64), hs[pos]
+
+
 def winnow_fingerprints(
     df: DataFrame, id_col: str, text_col: str = "text",
     k: int = 5, w: int = 4,
@@ -150,7 +192,6 @@ def winnow_fingerprints(
     expensive inner loop at 100 TB); downstream near-dup candidate
     generation is a bucket equi-join on fp — identical join geometry
     to MinHash-LSH."""
-    import numpy as np
     from pyspark.sql.types import LongType
 
     schema = StructType(
@@ -161,58 +202,20 @@ def winnow_fingerprints(
         ]
     )
 
-    B, C = np.uint64(_WINNOW_B), np.uint64(_WINNOW_C)
-    s33, s29 = np.uint64(33), np.uint64(29)
-
-    def _finalize(h):
-        h = h ^ (h >> s33)
-        h = h * C
-        return h ^ (h >> s29)
-
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             # per-doc RESULT ARRAYS, concatenated once per batch: the
             # round-4 shape collected (pos, fp) pairs through a Python
             # set + per-element appends — on the 1.9 MB heavy doc that
             # is ~1.7M interpreter iterations (~11 s measured, dwarfing
-            # even the old md5 loop). np.unique + int64 view keeps the
-            # whole selection columnar.
+            # even the old md5 loop)
             pos_parts, fp_parts, counts = [], [], []
             for text in pdf[text_col].values:
-                norm = _normalize_ws(text)
-                # utf-32-le = exactly one array element per codepoint,
-                # so gram positions stay CHARACTER positions (matching
-                # DuckDB's character-based substr in the oracle)
-                cp = np.frombuffer(
-                    norm.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.uint64)
-                n_grams = cp.size - k + 1
-                with np.errstate(over="ignore"):  # uint64 wrap IS the hash
-                    if n_grams <= 0:
-                        h = np.uint64(0)
-                        for c in cp:  # < k iterations
-                            h = h * B + c
-                        pos_parts.append(np.zeros(1, dtype=np.int64))
-                        fp_parts.append(
-                            np.array([_finalize(h)],
-                                     dtype=np.uint64).view(np.int64)
-                        )
-                        counts.append(1)
-                        continue
-                    h = np.zeros(n_grams, dtype=np.uint64)
-                    for j in range(k):  # k vector ops, no per-gram loop
-                        h = h * B + cp[j : j + n_grams]
-                    hs = _finalize(h)
-                ww = min(w, n_grams)
-                win = np.lib.stride_tricks.sliding_window_view(hs, ww)
-                # rightmost min: argmin over the REVERSED window
-                idx = (ww - 1) - np.argmin(win[:, ::-1], axis=1)
-                sel_pos = np.arange(len(win)) + idx
-                uniq = np.unique(sel_pos)  # sorted distinct positions
-                pos_parts.append(uniq.astype(np.int64))
+                pos, hs = _winnow_select(text, k, w)
+                pos_parts.append(pos)
                 # uint64 -> int64 view IS the two's-complement reinterp
-                fp_parts.append(hs[uniq].view(np.int64))
-                counts.append(uniq.size)
+                fp_parts.append(hs.view(np.int64))
+                counts.append(pos.size)
             if not counts:
                 yield pd.DataFrame(
                     {id_col: pdf[id_col].values[:0],
@@ -244,7 +247,6 @@ def winnow_doc_fingerprint_set(
     is pure overhead (guide §2.3 'aggregate before you shuffle' /
     'project before the exchange'). winnow_match_spans keeps the
     positioned table — localization needs it."""
-    import numpy as np
     from pyspark.sql.types import LongType
 
     schema = StructType(
@@ -253,43 +255,12 @@ def winnow_doc_fingerprint_set(
             StructField("fp", LongType(), False),
         ]
     )
-    B, C = np.uint64(_WINNOW_B), np.uint64(_WINNOW_C)
-    s33, s29 = np.uint64(33), np.uint64(29)
-
-    def _finalize(h):
-        h = h ^ (h >> s33)
-        h = h * C
-        return h ^ (h >> s29)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             fp_parts, counts = [], []
             for text in pdf[text_col].values:
-                norm = _normalize_ws(text)
-                cp = np.frombuffer(
-                    norm.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.uint64)
-                n_grams = cp.size - k + 1
-                with np.errstate(over="ignore"):
-                    if n_grams <= 0:
-                        h = np.uint64(0)
-                        for c in cp:
-                            h = h * B + c
-                        fp_parts.append(
-                            np.array([_finalize(h)],
-                                     dtype=np.uint64).view(np.int64)
-                        )
-                        counts.append(1)
-                        continue
-                    h = np.zeros(n_grams, dtype=np.uint64)
-                    for j in range(k):
-                        h = h * B + cp[j : j + n_grams]
-                    hs = _finalize(h)
-                ww = min(w, n_grams)
-                win = np.lib.stride_tricks.sliding_window_view(hs, ww)
-                idx = (ww - 1) - np.argmin(win[:, ::-1], axis=1)
-                sel = np.unique(np.arange(len(win)) + idx)
-                fps = np.unique(hs[sel])  # per-doc distinct fp values
+                fps = np.unique(_winnow_select(text, k, w)[1])
                 fp_parts.append(fps.view(np.int64))
                 counts.append(fps.size)
             if not counts:
