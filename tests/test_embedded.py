@@ -177,6 +177,24 @@ def test_rdfa_typeof_without_about_mints_bnode():
             XSD + "string", None) in ts
 
 
+def test_rdfa_bare_property_attribute_stays_absent():
+    """RDFa's strict ``attr=value`` grammar: a bare ``property`` is not
+    an attribute, so the ``typeof`` element still opens a typed blank
+    node. The lenient microdata grammar would read it as an empty
+    ``property`` and the element would open no subject at all."""
+    ts, err = extract_rdfa_triples(
+        '<div vocab="http://schema.org/" typeof="Person" property>'
+        '<span property="name">Ann</span></div>'
+    )
+    assert err is None
+    assert set(ts) == {
+        ("_:1", "bnode", RDF_TYPE, "http://schema.org/Person", "iri",
+         None, None),
+        ("_:1", "bnode", "http://schema.org/name", "Ann", "literal",
+         XSD + "string", None),
+    }
+
+
 def test_rdfa_never_raises_on_hostile_markup():
     for page in [
         "", "<p>plain</p>", "<div property='x'>no subject context",

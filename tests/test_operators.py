@@ -255,7 +255,7 @@ def test_topk_cosine_exact(spark):
 
 
 def test_lsh_ann_finds_self_bucket(spark):
-    from tortank_spark.similarity import lsh_bucketed_topk
+    from tortank_spark.similarity import lsh_multitable_topk
 
     import numpy as np
 
@@ -263,7 +263,7 @@ def test_lsh_ann_finds_self_bucket(spark):
     rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(50)]
     q = rows[7][1]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    top = lsh_bucketed_topk(vecs, "embedding", q, k=3, n_bits=4).collect()
+    top = lsh_multitable_topk(vecs, "embedding", q, k=3, n_bits=4).collect()
     assert top and top[0]["vec_id"] == 7 and top[0]["cosine"] == 1.0
 
 

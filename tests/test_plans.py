@@ -145,7 +145,7 @@ def test_dedup_builders_release_their_caches(spark):
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
     minhash_dedup_pairs(docs, "doc_id", threshold=0.5).collect()
-    embedding_neardup_lsh(emb, threshold=0.99, dim=4).collect()
+    embedding_neardup_lsh(emb, threshold=0.99).collect()
     after = jsc.getPersistentRDDs().size()
     assert after - before <= 2, (
         f"leaked intermediate caches: {after - before} new persistent "

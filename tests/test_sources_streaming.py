@@ -1,6 +1,7 @@
 """Sources (RDF/JSON, N-Triples) and Structured-Streaming ingest."""
 
 import json
+from collections import Counter
 
 import pyspark.sql.functions as F
 
@@ -55,18 +56,30 @@ def test_ntriples_source(spark, tmp_path):
 
 
 def test_stream_ntriples_directory(spark, tmp_path):
+    from tortank_spark.sources import read_ntriples_lines
     from tortank_spark.streaming import stream_ntriples_directory
 
     ind = tmp_path / "in"
     ind.mkdir()
     (ind / "a.nt").write_text('<http://a> <http://p> "1" .\n' * 3)
     (ind / "b.nt").write_text("<http://b> <http://q> <http://c> .\n")
+    # the line shapes where a raw-line parse differs from the batch
+    # reader: a trailing comment, a blank line, an unsalted bnode label
+    (ind / "d.nt").write_text(
+        "<http://d> <http://q> <http://e> . # trailing comment\n"
+        "\n"
+        "_:b1 <http://q> <http://f> .\n"
+    )
     outp = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     q = stream_ntriples_directory(spark, str(ind), outp, ckpt)
     q.awaitTermination(120)
     got = spark.read.parquet(outp)
     assert got.filter(F.col("parse_ok")).count() >= 2
+    cols = ["s", "p", "o", "parse_ok"]
+    assert Counter(map(tuple, got.select(cols).collect())) == Counter(
+        map(tuple, read_ntriples_lines(spark, str(ind)).select(cols).collect())
+    )
     # restart with no new files: checkpoint prevents reprocessing
     q2 = stream_ntriples_directory(spark, str(ind), outp, ckpt)
     q2.awaitTermination(120)

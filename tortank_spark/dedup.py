@@ -460,7 +460,7 @@ def embedding_neardup_pairs(
 def embedding_neardup_lsh(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     threshold: float = 0.9, n_bits: int = 8, n_tables: int = 12,
-    dim: int | None = None, eager: bool = True,
+    eager: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup, scale tier: candidate pairs share a
     hyperplane-LSH bucket in ANY of L tables (never a cross join —
@@ -469,20 +469,19 @@ def embedding_neardup_lsh(
     (1 - theta/pi)^b, so recall at a given cosine is 1-(1-p^b)^L;
     n_bits scales with log(n) to bound bucket population, n_tables is
     the recall knob. Candidates are a strict subset of the brute-force
-    pairs (property-tested).
+    pairs (property-tested). Buckets come from
+    ``similarity.lsh_table_buckets`` (seeded planes, so every task
+    agrees; the dimension is read from the batch, so no driver-side
+    ``first()`` job); table t's bucket is keyed ``bucket + (t << b)``.
 
-    ``dim``: vector dimensionality. When None, the (seeded,
-    deterministic) plane matrices are built lazily inside the Arrow
-    stage from the first batch — no driver-side ``first()`` job.
     ``eager`` (default): materialize the small pair output and release
     the bucket-table cache before returning; with ``eager=False`` the
     bucket table stays persisted (it feeds both self-join sides) and
     the return value is a ``(pairs_df, CacheHandle)`` tuple — call
     ``handle.release()`` after your terminal action (see
     minhash_dedup_pairs)."""
-    from .similarity import _table_planes
+    from .similarity import lsh_table_buckets
 
-    weights = 1 << np.arange(n_bits, dtype=np.int64)
     schema = StructType(
         [
             StructField(id_col, emb.schema[id_col].dataType, False),
@@ -490,35 +489,20 @@ def embedding_neardup_lsh(
         ]
     )
 
-    def _planes(d: int) -> np.ndarray:
-        return np.concatenate(
-            [_table_planes(d, n_bits, t) for t in range(n_tables)], axis=0
-        )
-
-    planes0 = _planes(dim) if dim is not None else None
-
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = planes0
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
             )
-            if planes is None:  # seeded -> identical across all tasks
-                planes = _planes(mat.shape[1])
-            bits = (mat @ planes.T).reshape(len(mat), n_tables, n_bits) > 0
-            buckets = (bits.astype(np.int64) * weights).sum(axis=2)
             # disjoint key space per table: key = table * 2^b + bucket
-            keys = buckets + (np.arange(n_tables, dtype=np.int64) << n_bits)
+            keys = lsh_table_buckets(mat, n_bits, n_tables) + (
+                np.arange(n_tables, dtype=np.int64) << n_bits
+            )
             ids = np.repeat(pdf[id_col].values, n_tables)
             yield pd.DataFrame({id_col: ids, "key": keys.ravel()})
 
-    # NOTE: similarity.lsh_multitable_candidates shares the same
-    # stacked-planes signature math but serves a query-vs-corpus probe
-    # (boolean hit per row); this variant emits JOINABLE (id, key) rows
-    # for the all-pairs case — keep the two in sync when changing the
-    # plane seeding or key layout (_table_planes is the shared piece).
     # persist: the banded keys feed both sides of the self-join —
     # uncached, the Python bucketing stage runs twice
     banded = emb.select(id_col, vec_col).mapInPandas(

@@ -330,17 +330,27 @@ def bfs_distances(
     primitive (provenance blast-radius, entity context windows for
     linking, k-hop type propagation); tortank's pattern API walks one
     hop per list_statements call (SURVEY §2.3 R1) — a batch engine
-    runs the whole frontier per round.
+    runs the whole frontier per round (``_frontier_bfs``). Seeds are
+    emitted at dist 0 whether or not they touch an edge. Directed by
+    construction — pre-union reversed edges for undirected graphs."""
+    frontier = seeds.select(F.col(node).alias("node")).distinct()
+    return _frontier_bfs(edges, src, dst, frontier, [], max_depth)
 
-    Classic frontier BFS, one Spark job per round: the join input is
-    ONLY the current frontier (nodes first reached last round — their
-    first visit IS their minimal distance, so no re-expansion and no
-    min-recomputation), extended one edge, anti-joined against the
-    visited set. Per-round work is frontier-sized; lineage truncated
-    with lazy localCheckpoint; every join an equi-join on vertex ids
-    (AQE skew-splittable). Seeds are emitted at dist 0 whether or not
-    they touch an edge. Directed by construction — pre-union reversed
-    edges for undirected graphs."""
+
+def _frontier_bfs(
+    edges: DataFrame, src: str, dst: str, frontier: DataFrame,
+    labels: list[str], max_depth: int,
+) -> DataFrame:
+    """Frontier BFS from (*labels, node) rows at distance 0 -> visited
+    (*labels, node, dist) within ``max_depth``; the one loop behind
+    bfs_distances and harmonic_centrality. One Spark job per round: the
+    join input is ONLY the current frontier (first visit IS the minimal
+    distance, so no re-expansion and no min-recomputation), extended
+    one edge on the vertex id (labels ride along as payload, so they
+    never change join geometry), anti-joined against visited on
+    (*labels, node). Per-round work is frontier-sized; lineage is
+    truncated with lazy localCheckpoint; stops at an empty frontier."""
+    key = [*labels, "node"]
     e = (
         edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
         .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
@@ -348,16 +358,15 @@ def bfs_distances(
         .persist()
     )
     try:
-        frontier = seeds.select(F.col(node).alias("node")).distinct()
         visited = frontier.withColumn(
             "dist", F.lit(0).cast("long")
         ).localCheckpoint(eager=False)
         for depth in range(1, max_depth + 1):
             nxt = (
                 frontier.join(e, frontier["node"] == e["_s"])
-                .select(F.col("_d").alias("node"))
+                .select(*labels, F.col("_d").alias("node"))
                 .distinct()
-                .join(visited.select("node"), "node", "left_anti")
+                .join(visited.select(*key), key, "left_anti")
                 .localCheckpoint(eager=False)
             )
             if nxt.agg(F.count("*")).collect()[0][0] == 0:
@@ -784,61 +793,28 @@ def harmonic_centrality(
     disconnected web graphs where classic closeness is not); d=0
     (the node IS a seed) contributes nothing.
 
-    PER-SEED labeled frontier BFS: the frontier carries (seed, node)
-    pairs, so one sweep computes all seeds' distance fields at once —
+    PER-SEED labeled frontier BFS (``_frontier_bfs`` with label
+    ``seed``): one sweep computes all seeds' distance fields at once —
     |seeds| times the bfs_distances state, NOT |seeds| sequential
-    jobs. First visit per (seed, node) is the minimal distance (the
-    bfs_distances argument), so no min-recomputation. All integer
-    arithmetic (scale DIV d), so the result value-hashes and the
-    DuckDB oracle replays it exactly.
-
-    Scale shape: per round ONE equi-join of the frontier against the
-    persisted edge table on the vertex id (seed rides along as
-    payload — the join key stays the vertex, so seed count does not
-    change join geometry, only frontier width), one distinct, one
-    anti-join against visited on (seed, node); lineage truncated per
-    round. Final rollup is one map-side-combinable sum per node.
-    Seed count is the knob: cost ~ |seeds| x BFS(depth), intended
-    for cohort-sized (10s-100s) seed sets."""
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-        .distinct()
-        .persist()
-    )
-    try:
-        frontier = seeds.select(F.col(node).alias("seed")).distinct(
-        ).withColumn("node", F.col("seed"))
-        visited = frontier.withColumn(
-            "dist", F.lit(0).cast("long")
-        ).localCheckpoint(eager=False)
-        for depth in range(1, max_depth + 1):
-            nxt = (
-                frontier.join(e, frontier["node"] == e["_s"])
-                .select("seed", F.col("_d").alias("node"))
-                .distinct()
-                .join(visited.select("seed", "node"),
-                      ["seed", "node"], "left_anti")
-                .localCheckpoint(eager=False)
-            )
-            if nxt.agg(F.count("*")).collect()[0][0] == 0:
-                break
-            visited = visited.unionByName(
-                nxt.withColumn("dist", F.lit(depth).cast("long"))
-            ).localCheckpoint(eager=False)
-            frontier = nxt
-        return (
-            visited.filter(F.col("dist") > 0)
-            .groupBy("node")
-            .agg(
-                F.count("*").alias("n_reached_from"),
-                F.sum(
-                    F.expr(f"CAST({scale} AS BIGINT) DIV dist")
-                ).alias("harmonic_ppm"),
-            )
+    jobs; seed count widens the frontier but never changes join
+    geometry. All integer arithmetic (scale DIV d), so the result
+    value-hashes and the DuckDB oracle replays it exactly. Final rollup
+    is one map-side-combinable sum per node. Seed count is the knob:
+    cost ~ |seeds| x BFS(depth), intended for cohort-sized (10s-100s)
+    seed sets."""
+    frontier = seeds.select(F.col(node).alias("seed")).distinct(
+    ).withColumn("node", F.col("seed"))
+    visited = _frontier_bfs(edges, src, dst, frontier, ["seed"], max_depth)
+    return (
+        visited.filter(F.col("dist") > 0)
+        .groupBy("node")
+        .agg(
+            F.count("*").alias("n_reached_from"),
+            F.sum(
+                F.expr(f"CAST({scale} AS BIGINT) DIV dist")
+            ).alias("harmonic_ppm"),
         )
-    finally:
-        e.unpersist()
+    )
 
 
 def reciprocity(

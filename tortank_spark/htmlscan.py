@@ -1,5 +1,5 @@
-"""Shared single-pass HTML tag scanner for the embedded-markup
-extractors (rdfa.py, microdata.py, weblinks.py).
+"""The single-pass HTML tag scanner every embedded-markup extractor
+reads (rdfa.py, microdata.py, weblinks.py).
 
 One regex pass, browser-style error recovery (unclosed elements close
 at EOF, stray close tags pop to the nearest match), raw-text
@@ -15,18 +15,17 @@ deliberately forgiving (double/single-quoted and bare attribute
 values) — crawl HTML is hostile, and a scanner that raises is a
 scanner that loses pages.
 
-rdfa.py keeps its own inline scanner on purpose: RDFa attributes are
-always valued, so it uses a stricter attribute grammar (``attr=value``
-required — a bare ``property`` attribute stays ABSENT rather than
-empty-string, which matters for its property-vs-typeof subject rules),
-whereas microdata REQUIRES bare boolean attributes (``itemscope``).
-The two grammars are a deliberate semantic split, not duplication.
+The attribute grammar is the caller's: ``scan_html(html, attrs=...)``
+takes the blob parser. The default ``parse_attrs`` is lenient and maps
+bare boolean attributes (microdata's ``itemscope``) to ''; rdfa.py
+passes its strict ``attr=value`` grammar, under which a bare
+``property`` stays ABSENT rather than empty, as its subject rules need.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 TAG_RE = re.compile(
     r"<!--.*?-->"                      # comment
@@ -54,10 +53,13 @@ def parse_attrs(blob: str) -> dict[str, str]:
     return out
 
 
-def scan_html(html: str) -> Iterator[tuple]:
+def scan_html(
+    html: str, attrs: Callable[[str], dict[str, str]] = parse_attrs
+) -> Iterator[tuple]:
     """Yield ("start", tag, attrs, self_closing) / ("end", tag) /
-    ("text", chunk) events. Never raises; balanced by construction —
-    every pushed start eventually yields exactly one end event."""
+    ("text", chunk) events; ``attrs`` parses each start tag's attribute
+    blob. Never raises; balanced by construction — every start with
+    ``self_closing`` False yields exactly one end event."""
     html = html or ""
     pos, n = 0, len(html)
     open_tags: list[str] = []
@@ -86,13 +88,13 @@ def scan_html(html: str) -> Iterator[tuple]:
                     if t == tag:
                         break
             continue
-        attrs = parse_attrs(m.group(3))
+        parsed = attrs(m.group(3))
         self_closing = bool(m.group(4)) or tag in VOID
         if tag in RAW_TEXT:
-            yield ("start", tag, attrs, True)
+            yield ("start", tag, parsed, True)
             skip_until = tag
             continue
-        yield ("start", tag, attrs, self_closing)
+        yield ("start", tag, parsed, self_closing)
         if not self_closing:
             open_tags.append(tag)
     while open_tags:  # EOF closes dangling elements

@@ -190,11 +190,18 @@ def run_pipeline(
             n_triples = g["n_canonical_triples"]
             global_skipped = True
     if not global_skipped:
-        edges = spark.read.parquet(str(out / "bucket=*" / "sameas_edges"))
+        # explicit paths, not a bucket=* glob (Spark logs a glob's failed
+        # streaming-sink probe as a FileNotFoundException trace); a
+        # bucket that got no pages wrote only its manifest
+        def bucket_outputs(name: str) -> list[str]:
+            paths = (out / f"bucket={b}" / name for b in range(n_buckets))
+            return [str(p) for p in paths if p.exists()]
+
+        edges = spark.read.parquet(*bucket_outputs("sameas_edges"))
         cmap = connected_components(edges)
         cmap.write.mode("overwrite").parquet(str(cmap_dir))
         cmap = spark.read.parquet(str(cmap_dir))
-        triples = spark.read.parquet(str(out / "bucket=*" / "triples"))
+        triples = spark.read.parquet(*bucket_outputs("triples"))
         # the output count rides on the write job itself (Observation
         # metric) — re-reading triples_canonical just to count it is a
         # second full scan of the largest table in the pipeline

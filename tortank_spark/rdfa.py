@@ -4,8 +4,9 @@ embedded-KG syntaxes ("embedded RDFa/JSON-LD/Turtle in page text").
 RDFa Lite 1.1 (W3C REC, the five attributes ``vocab prefix typeof
 property resource`` plus host-language ``about href src content
 datatype lang``) is the other markup real Common-Crawl pages carry
-schema.org data in. This module scans page HTML with a small
-single-pass tag tokenizer and emits the SAME flat triple tuples as the
+schema.org data in. This module reads page HTML through the shared
+``htmlscan.scan_html`` event stream, with its own strict attribute
+grammar (``_parse_attrs``), and emits the SAME flat triple tuples as the
 Turtle grammar and the JSON-LD expander, so the downstream engine is
 syntax-agnostic.
 
@@ -33,12 +34,12 @@ profile):
 * blank-node labels use the same per-document salted counter as the
   Turtle/JSON-LD paths (``_:{prefix}{n}``, extract.py / SURVEY.md §4).
 
-The tokenizer handles double/single-quoted and bare attributes, HTML
-void elements, self-closing tags, comments, and skips <script>/<style>
-payloads; it NEVER raises on malformed markup — unclosed elements
-close at EOF (the browser-parser behavior), and pages with no RDFa
-attributes simply emit zero triples with a quarantine row, the Turtle
-path's contract.
+The scanner handles double/single-quoted and unquoted attribute
+values, HTML void elements, self-closing tags, comments, and skips
+<script>/<style> payloads; it NEVER raises on malformed markup —
+unclosed elements close at EOF (the browser-parser behavior), and
+pages with no RDFa attributes simply emit zero triples with a
+quarantine row, the Turtle path's contract.
 
 Scale shape: ``extract_rdfa_triples`` runs in the shared
 ``extract.doc_stage`` — one ``mapInArrow`` stage, zero shuffle, column
@@ -52,30 +53,24 @@ import re
 from pyspark.sql import DataFrame
 
 from .extract import doc_stage
+from .htmlscan import WS_RE, scan_html
 from .schema import EXTRACT_SCHEMA
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
-_TAG_RE = re.compile(
-    r"<!--.*?-->"                      # comment
-    r"|<(/)?([a-zA-Z][a-zA-Z0-9-]*)"   # open/close tag name
-    r"((?:\s+[^<>]*?)?)\s*(/)?>",      # attr blob, self-close slash
-    re.DOTALL,
-)
 _ATTR_RE = re.compile(
     r"([a-zA-Z_:][a-zA-Z0-9_:.-]*)\s*=\s*"
     r"(?:\"([^\"]*)\"|'([^']*)'|([^\s\"'=<>`]+))"
 )
 _ABS_IRI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
-_WS_RE = re.compile(r"\s+")
-
-_VOID = {"area", "base", "br", "col", "embed", "hr", "img", "input",
-         "link", "meta", "param", "source", "track", "wbr"}
-_RAW_TEXT = {"script", "style"}
 
 
 def _parse_attrs(blob: str) -> dict[str, str]:
+    """The strict RDFa attribute grammar: ``attr=value`` only, so a bare
+    ``property`` stays absent. ``htmlscan.parse_attrs`` would map it to
+    '', and a ``typeof`` element with an empty ``property`` opens no new
+    subject."""
     return {m.group(1).lower(): m.group(2) or m.group(3) or m.group(4) or ""
             for m in _ATTR_RE.finditer(blob or "")}
 
@@ -93,11 +88,10 @@ def _parse_prefix_attr(value: str) -> list[tuple[str, str]]:
 
 
 class _Frame:
-    __slots__ = ("tag", "subject", "s_kind", "vocab", "prefixes", "lang",
+    __slots__ = ("subject", "s_kind", "vocab", "prefixes", "lang",
                  "lit_props", "lit_dt", "lit_lang", "buf")
 
     def __init__(self):
-        self.tag = ""
         self.subject = None
         self.s_kind = None
         self.vocab = None
@@ -151,17 +145,11 @@ def extract_rdfa_triples(
         counter[0] += 1
         return f"_:{bnode_prefix}{counter[0]}"
 
-    root = _Frame()
-    root.tag = "#root"
-    stack = [root]
-    pos = 0
-    n = len(html or "")
-    html = html or ""
-    skip_until: str | None = None  # raw-text element to fast-skip
+    stack = [_Frame()]  # the root frame: no subject, no vocab
 
     def close_frame(fr: _Frame):
         if fr.lit_props is not None:
-            text = _WS_RE.sub(" ", "".join(fr.buf or [])).strip()
+            text = WS_RE.sub(" ", "".join(fr.buf or [])).strip()
             for p in fr.lit_props:
                 if fr.lit_dt is not None:
                     emit((fr.subject, fr.s_kind, p, text, "literal",
@@ -173,41 +161,20 @@ def extract_rdfa_triples(
                     emit((fr.subject, fr.s_kind, p, text, "literal",
                           XSD + "string", None))
 
-    while pos < n:
-        m = _TAG_RE.search(html, pos)
-        if m is None:
-            text = html[pos:]
-            if skip_until is None and text:
-                for fr in stack:
-                    if fr.buf is not None:
-                        fr.buf.append(text)
-            break
-        if m.start() > pos and skip_until is None:
-            text = html[pos:m.start()]
+    # scan_html yields exactly one "end" per pushed start (EOF
+    # included), so "end" always closes the top frame
+    for ev in scan_html(html, _parse_attrs):
+        if ev[0] == "text":
             for fr in stack:
                 if fr.buf is not None:
-                    fr.buf.append(text)
-        pos = m.end()
-        if m.group(2) is None:
-            continue  # comment
-        closing, tag = bool(m.group(1)), m.group(2).lower()
-        if skip_until is not None:
-            if closing and tag == skip_until:
-                skip_until = None
+                    fr.buf.append(ev[1])
             continue
-        if closing:
-            # close nearest matching open frame (browser recovery)
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i].tag == tag:
-                    while len(stack) > i:
-                        close_frame(stack.pop())
-                    break
+        if ev[0] == "end":
+            close_frame(stack.pop())
             continue
-
+        _, _, attrs, self_closing = ev
         parent = stack[-1]
-        attrs = _parse_attrs(m.group(3))
         fr = _Frame()
-        fr.tag = tag
         fr.vocab = attrs["vocab"] if attrs.get("vocab") else parent.vocab
         fr.prefixes = parent.prefixes
         if "prefix" in attrs:
@@ -306,17 +273,10 @@ def extract_rdfa_triples(
                         emit((tsubj[0], tsubj[1], RDF_TYPE, ti, "iri",
                               None, None))
 
-        self_closing = bool(m.group(4)) or tag in _VOID
-        if tag in _RAW_TEXT:
-            skip_until = tag
-            close_frame(fr)
-        elif self_closing:
+        if self_closing:  # void and raw-text elements included
             close_frame(fr)
         else:
             stack.append(fr)
-
-    while len(stack) > 1:  # EOF closes dangling elements
-        close_frame(stack.pop())
     return triples, None
 
 

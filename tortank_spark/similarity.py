@@ -4,11 +4,12 @@
   product is ``aggregate(zip_with(...))`` column expressions inside
   whole-stage codegen; top-k is a single ORDER BY LIMIT (Spark's
   TakeOrderedAndProject — no full sort materialization).
-* ``lsh_bucketed_topk`` — the scale path: random-hyperplane LSH (fixed
-  seed) assigns each vector a bit-bucket; the query only scans its own
-  bucket (and optionally neighboring probes). At 10^9 vectors this
-  turns a full scan into a partition-pruned scan of ~1/2^bits of the
-  data; signatures are computed once in a vectorized pandas stage.
+* ``lsh_multitable_topk`` — approximate top-k: L seeded random-hyperplane
+  tables (``lsh_table_buckets``, the one LSH kernel, which
+  dedup.embedding_neardup_lsh also keys on); only vectors sharing the
+  query's bucket in some table are scored exactly. At scale each
+  table's bucket column is a partition key, so the scan prunes to the
+  candidate buckets.
 """
 
 from __future__ import annotations
@@ -60,86 +61,25 @@ def topk_cosine(
     )
 
 
-def _hyperplanes(dim: int, n_bits: int, seed: int = 7) -> np.ndarray:
-    rng = np.random.RandomState(seed)
+def _table_planes(dim: int, n_bits: int, table: int) -> np.ndarray:
+    """Table ``table``'s (n_bits, dim) hyperplanes. The seeds are part of
+    the output: the DuckDB oracles replay these exact constants."""
+    rng = np.random.RandomState(7 + 31 * table)
     return rng.normal(size=(n_bits, dim)).astype(np.float64)
 
 
-def lsh_bucket_signatures(
-    df: DataFrame, vec_col: str, dim: int, n_bits: int = 8,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, bucket) — random-hyperplane sign bits packed to a long.
-    Vectorized: one matmul per Arrow batch."""
-    planes = _hyperplanes(dim, n_bits)
-    schema = StructType(
-        [
-            StructField(id_col, df.schema[id_col].dataType, False),
-            StructField("bucket", LongType(), False),
-        ]
+def lsh_table_buckets(mat: np.ndarray, n_bits: int, n_tables: int) -> np.ndarray:
+    """(n, dim) vectors -> (n, n_tables) int64 random-hyperplane LSH
+    buckets: bit i of table t's bucket is the sign of the vector against
+    that table's plane i. One matmul against the stacked (L*b, dim)
+    plane matrix; the dimension is read from ``mat``."""
+    planes = np.concatenate(
+        [_table_planes(mat.shape[1], n_bits, t) for t in range(n_tables)]
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = (1 << np.arange(n_bits, dtype=np.int64))
-        for pdf in batches:
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
-            )
-            bits = (mat @ planes.T) > 0
-            buckets = (bits.astype(np.int64) * weights).sum(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col].values, "bucket": buckets})
-
-    return df.select(id_col, vec_col).mapInPandas(gen, schema=schema)
-
-
-def _probe_buckets(qbucket: int, n_bits: int, n_probes: int) -> list:
-    """Multi-probe sequence: the query bucket, then buckets at hamming
-    distance 1, 2, ... until ``n_probes`` buckets are collected —
-    neighbors differing in one hyperplane sign are the likeliest homes
-    of near-misses (Lv et al., multi-probe LSH, VLDB'07)."""
-    out, dist = [qbucket], 1
-    while len(out) < n_probes and dist <= n_bits:
-        import itertools
-
-        for flip in itertools.combinations(range(n_bits), dist):
-            b = qbucket
-            for f in flip:
-                b ^= 1 << f
-            out.append(b)
-            if len(out) >= n_probes:
-                break
-        dist += 1
-    return out
-
-
-def lsh_bucketed_topk(
-    df: DataFrame, vec_col: str, query: list, k: int = 10,
-    n_bits: int = 8, id_col: str = "vec_id", n_probes: int = 1,
-) -> DataFrame:
-    """Approximate top-k: score only vectors in the query's LSH bucket
-    plus ``n_probes - 1`` neighboring probe buckets. At scale the
-    bucket column is a partition key and this becomes a partition-pruned
-    scan of n_probes/2^n_bits of the data; here it is a filter + the
-    exact scorer. Recall rises with n_probes at linear scan cost —
-    sim_lsh_recall in __spark_entry__.py pins recall@k against the
-    exact path."""
-    dim = len(query)
-    planes = _hyperplanes(dim, n_bits)
-    qbits = (planes @ np.asarray(query, dtype=np.float64)) > 0
-    qbucket = int(
-        (qbits.astype(np.int64) * (1 << np.arange(n_bits, dtype=np.int64))).sum()
+    bits = (mat @ planes.T).reshape(len(mat), n_tables, n_bits) > 0
+    return (bits.astype(np.int64) << np.arange(n_bits, dtype=np.int64)).sum(
+        axis=2
     )
-    probes = _probe_buckets(qbucket, n_bits, n_probes)
-    sigs = lsh_bucket_signatures(df, vec_col, dim, n_bits, id_col)
-    in_bucket = df.join(
-        sigs.filter(F.col("bucket").isin(probes)).select(id_col),
-        id_col, "left_semi",
-    )
-    return topk_cosine(in_bucket, vec_col, query, k, id_col)
-
-
-def _table_planes(dim: int, n_bits: int, table: int) -> np.ndarray:
-    return _hyperplanes(dim, n_bits, seed=7 + 31 * table)
 
 
 def lsh_multitable_candidates(
@@ -148,19 +88,13 @@ def lsh_multitable_candidates(
 ) -> DataFrame:
     """Multi-table LSH candidate set: L independent hyperplane tables;
     a vector is a candidate if it shares the query's bucket in ANY
-    table (collision prob 1-(1-p^b)^L). All L signatures are computed
-    in ONE vectorized pandas stage (one matmul against the stacked
-    (L*b, dim) plane matrix per Arrow batch). At scale each table's
-    bucket column is a partition key; b grows with log(n) and L is the
-    recall knob."""
-    dim = len(query)
-    qv = np.asarray(query, dtype=np.float64)
-    all_planes = np.concatenate(
-        [_table_planes(dim, n_bits, t) for t in range(n_tables)], axis=0
-    )
-    weights = 1 << np.arange(n_bits, dtype=np.int64)
-    qbits = (all_planes @ qv).reshape(n_tables, n_bits) > 0
-    qbuckets = (qbits.astype(np.int64) * weights).sum(axis=1)
+    table (collision prob 1-(1-p^b)^L). All L buckets are computed in
+    ONE vectorized pandas stage (``lsh_table_buckets`` per Arrow batch).
+    At scale each table's bucket column is a partition key; b grows
+    with log(n) and L is the recall knob."""
+    qbuckets = lsh_table_buckets(
+        np.asarray([query], dtype=np.float64), n_bits, n_tables
+    )[0]
 
     schema = StructType(
         [StructField(id_col, df.schema[id_col].dataType, False)]
@@ -171,9 +105,9 @@ def lsh_multitable_candidates(
             mat = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
             )
-            bits = (mat @ all_planes.T).reshape(len(mat), n_tables, n_bits) > 0
-            buckets = (bits.astype(np.int64) * weights).sum(axis=2)
-            hit = (buckets == qbuckets).any(axis=1)
+            hit = (lsh_table_buckets(mat, n_bits, n_tables) == qbuckets).any(
+                axis=1
+            )
             yield pd.DataFrame({id_col: pdf[id_col].values[hit]})
 
     return df.select(id_col, vec_col).mapInPandas(gen, schema=schema)

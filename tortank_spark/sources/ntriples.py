@@ -22,18 +22,22 @@ def _parse_line(line: str, bnode_prefix: str):
     return parse_document(line + "\n", bnode_prefix)
 
 
-def read_ntriples_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Read an N-Triples file into extraction rows; each line is an
-    independent statement so ordinary text splits parallelize it.
+def parse_ntriples_lines(lines: DataFrame) -> DataFrame:
+    """(url, text) rows, one N-Triples line each -> extraction rows; the
+    one line transform of the batch reader and the streaming ingest.
 
-    Blank-node labels stay unsalted on purpose: every line carries the
-    same url (``path``), and a directory written by
+    Blank lines are dropped before the stage; a comment-only line
+    yields a parse_ok status row, the contract of an empty document.
+    Blank-node labels stay unsalted on purpose: a directory written by
     ``write_ntriples(partitions=k)`` is ONE document, so ``_:b1`` names
-    the same node in every part file. Blank lines are dropped before
-    the stage; a comment-only line yields a parse_ok status row, the
-    contract of an empty document."""
-    lines = spark.read.text(path).filter(F.col("value").rlike(r"\S"))
-    return doc_stage(
-        lines.select(F.lit(path).alias("url"), F.col("value").alias("text")),
-        _parse_line, EXTRACT_SCHEMA, salt=False,
-    )
+    the same node in every part file and every line."""
+    return doc_stage(lines.filter(F.col("text").rlike(r"\S")), _parse_line,
+                     EXTRACT_SCHEMA, salt=False)
+
+
+def read_ntriples_lines(spark: SparkSession, path: str) -> DataFrame:
+    """Read an N-Triples file (or directory) into extraction rows with
+    url = ``path``; each line is an independent statement so ordinary
+    text splits parallelize it."""
+    return parse_ntriples_lines(spark.read.text(path).select(
+        F.lit(path).alias("url"), F.col("value").alias("text")))

@@ -5,11 +5,12 @@ N-Triples statement parser (turtle_doc.rs:338-361) — i.e. resumable
 consumption of an append-only source. The Spark-native equivalents:
 
 * ``stream_ntriples_directory`` — readStream.text over a landing
-  directory; each micro-batch runs the SAME vectorized parse stage as
-  batch mode (every pipeline stage is a pure DataFrame transform, so
-  ``foreachBatch`` reuses them verbatim). Checkpointing/exactly-once is
-  Spark's streaming checkpoint; this composes with (rather than
-  replaces) the bucket-manifest resume model of pipeline.py.
+  directory; each micro-batch runs the SAME line transform as the batch
+  reader (``sources.ntriples.parse_ntriples_lines``: every pipeline
+  stage is a pure DataFrame transform, so ``foreachBatch`` reuses them
+  verbatim). Checkpointing/exactly-once is Spark's streaming
+  checkpoint; this composes with (rather than replaces) the
+  bucket-manifest resume model of pipeline.py.
 * ``stream_extract`` — the generic page-stream variant for a streaming
   page source (e.g. Kafka value -> url/text columns upstream).
 
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..extract import extract_triples
+from ..sources.ntriples import parse_ntriples_lines
 
 
 def stream_extract(
@@ -68,15 +70,16 @@ def stream_ntriples_directory(
     trigger_once: bool = True,
 ) -> StreamingQuery:
     """Watch a directory of N-Triples files; parse each line-batch with
-    the vectorized stage (lines are whole statements, so the page
-    parser applies with url = input file)."""
+    ``parse_ntriples_lines`` (url = 'stream'), so the sink holds the
+    rows ``read_ntriples_lines`` gives for the same directory."""
     lines = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", 16)
         .load(in_dir)
         .selectExpr("'stream' AS url", "value AS text")
     )
-    return stream_extract(lines, out_path, checkpoint_path, trigger_once)
+    return stream_extract(lines, out_path, checkpoint_path, trigger_once,
+                          extractor=parse_ntriples_lines)
 
 
 def stream_exact_dedup(
