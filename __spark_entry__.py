@@ -906,20 +906,18 @@ def _q_minhash_neardup(spark, sf_dir):
     docs = _fan(_t(spark, sf_dir, "documents"))
     # persist: the signature stage feeds both sides of the band
     # self-join; the candidate pairs feed the verify join plus both
-    # semi-join sides of the shingle narrowing. Materialize the small
-    # verified output, then release both caches (no leaked storage)
+    # semi-join sides of the shingle narrowing. The verify stage
+    # materializes its small output, so both caches are released
+    # before the threshold runs (no leaked storage)
     sigs = minhash_signatures(docs, "doc_id").persist()
     cand = lsh_candidate_pairs(sigs, "doc_id").persist()
     try:
-        verified, shingle_cache = ngram_jaccard_pairs(
-            docs, cand, "doc_id", cache_shingles=True)
-        with shingle_cache:
-            return verified.filter(F.col("jaccard") >= 0.5).select(
-                "a", "b", F.round("jaccard", 4).alias("jaccard")
-            ).localCheckpoint(eager=True)
+        verified = ngram_jaccard_pairs(docs, cand, "doc_id")
     finally:
         cand.unpersist()
         sigs.unpersist()
+    return verified.filter(F.col("jaccard") >= 0.5).select(
+        "a", "b", F.round("jaccard", 4).alias("jaccard"))
 
 
 def _q_minhash_verified(spark, sf_dir):
@@ -938,15 +936,12 @@ def _q_minhash_verified(spark, sf_dir):
     sigs = minhash_signatures(docs, "doc_id").persist()
     cand = lsh_candidate_pairs(sigs, "doc_id").persist()
     try:
-        verified, shingle_cache = ngram_jaccard_pairs(
-            docs, cand, "doc_id", cache_shingles=True)
-        with shingle_cache:
-            return verified.filter(F.col("jaccard") >= 0.8).select(
-                "a", "b", F.round("jaccard", 4).alias("jaccard")
-            ).localCheckpoint(eager=True)
+        verified = ngram_jaccard_pairs(docs, cand, "doc_id")
     finally:
         cand.unpersist()
         sigs.unpersist()
+    return verified.filter(F.col("jaccard") >= 0.8).select(
+        "a", "b", F.round("jaccard", 4).alias("jaccard"))
 
 
 def _q_zorder_key(spark, sf_dir):
@@ -1081,16 +1076,12 @@ def _q_dedup_clusters(spark, sf_dir):
     sigs = minhash_signatures(docs, "doc_id").persist()
     cand = lsh_candidate_pairs(sigs, "doc_id").persist()
     try:
-        pairs, shingle_cache = ngram_jaccard_pairs(
-            docs, cand, "doc_id", cache_shingles=True)
-        pairs = pairs.filter(F.col("jaccard") >= 0.8)
-        with shingle_cache:
-            return dedup_clusters(pairs, docs, "doc_id").localCheckpoint(
-                eager=True
-            )
+        pairs = ngram_jaccard_pairs(docs, cand, "doc_id")
     finally:
         cand.unpersist()
         sigs.unpersist()
+    return dedup_clusters(pairs.filter(F.col("jaccard") >= 0.8), docs,
+                          "doc_id")
 
 
 _ORACLE_DEDUP_CLUSTERS = r"""

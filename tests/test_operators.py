@@ -1248,20 +1248,6 @@ def test_ngram_jaccard_ladder_matches_allpairs_truth(spark):
     assert got == truth and len(got) > 0
 
 
-def test_ngram_jaccard_lazy_returns_cache_handle(spark):
-    from tortank_spark.dedup import CacheHandle, ngram_jaccard_dedup_pairs
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string"
-    )
-    out, handle = ngram_jaccard_dedup_pairs(docs, "doc_id", eager=False)
-    assert isinstance(handle, CacheHandle)
-    try:
-        assert out.count() == 1
-    finally:
-        handle.release()
-
-
 def test_bgp_join(spark):
     """Conjunctive BGP join — multi-pattern extension of the
     reference's single-pattern list_statements (turtle_doc.rs:405-423):

@@ -288,6 +288,22 @@ def test_pipeline_embedded_mode(spark, tmp_path):
         run_pipeline(spark, pages, out, n_buckets=2, syntax_mode="rdfa")
 
 
+@pytest.mark.parametrize("syntax_mode", ["turtle", "embedded"])
+def test_pipeline_empty_page_table(spark, tmp_path, syntax_mode):
+    """An empty page table is a finished run with an empty canonical
+    table: no bucket writes triples or a sameAs sidecar, so the global
+    phase reads zero paths under the schemas it already knows."""
+    out = str(tmp_path / "kg_empty")
+    pages = spark.createDataFrame([], "url string, text string")
+    stats = run_pipeline(spark, pages, out, n_buckets=2,
+                         syntax_mode=syntax_mode)
+    assert stats["n_canonical_triples"] == 0
+    assert Path(out, "triples_canonical", "_SUCCESS").exists()
+    stats2 = run_pipeline(spark, pages, out, n_buckets=2,
+                          syntax_mode=syntax_mode)
+    assert stats2["global_phase"] == "skipped"
+
+
 def test_ensure_parallelism_fans_out_narrow_input_only(spark):
     """ensure_parallelism (guide §2.4/§6): a narrow source (fewer
     partitions than the cluster) is repartitioned to factor*cores so

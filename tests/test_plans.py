@@ -4,6 +4,8 @@ Catalyst actually produces: column pruning reaching the scan, predicate
 pushdown, broadcast on the small join side, and no cartesian product in
 any bucketed candidate generator."""
 
+import contextlib
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -14,6 +16,41 @@ def plan_of(df) -> str:
         "formatted"
     )
     return jqe.explainString(mode)
+
+
+@contextlib.contextmanager
+def captured_checkpoints(monkeypatch):
+    """Record every ``localCheckpoint`` call made inside the block as a
+    (checkpointed frame, checkpoint) pair. PySpark 4.1 dispatches the
+    call on the classic DataFrame class, so that is the one patched —
+    a patch on the base ``pyspark.sql.DataFrame`` is never called."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    seen = []
+    real = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        out = real(self, *args, **kwargs)
+        seen.append((self, out))
+        return out
+
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrame, "localCheckpoint", spy)
+        yield seen
+
+
+def checkpointed_frame(monkeypatch, build):
+    """Run ``build()`` and return the frame it last checkpointed. The
+    cache-holding builders return a checkpoint, whose own plan is a
+    bare ``Scan ExistingRDD`` with no join in it; the captured frame
+    carries the plan the builder ran. Asserts that plan holds a join,
+    so a plan test reading it cannot pass vacuously."""
+    with captured_checkpoints(monkeypatch) as seen:
+        build()
+    assert seen, "the builder checkpointed nothing"
+    frame = seen[-1][0]
+    assert "Join" in plan_of(frame), "the captured plan holds no join"
+    return frame
 
 
 @pytest.fixture(scope="module")
@@ -70,7 +107,7 @@ def test_top_revenue_broadcasts_dim_side(spark):
 
 @pytest.mark.parametrize("maker",
                          ["minhash", "simhash", "embedding", "rare_ngram"])
-def test_candidate_generators_never_cross_join(spark, maker):
+def test_candidate_generators_never_cross_join(spark, monkeypatch, maker):
     """Every near-dup candidate generator must be a bucketed equi-join;
     a CartesianProduct or BroadcastNestedLoopJoin in the plan means the
     operator silently degraded to all-pairs."""
@@ -93,18 +130,22 @@ def test_candidate_generators_never_cross_join(spark, maker):
             [(i, [float(i), 1.0, 0.5, float(i % 3)]) for i in range(8)],
             "vec_id long, embedding array<double>",
         )
-        cand = dedup.embedding_neardup_lsh(emb, threshold=0.99)
+        cand = checkpointed_frame(
+            monkeypatch, lambda: dedup.embedding_neardup_lsh(emb, threshold=0.99))
     plan = plan_of(cand)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_ngram_verify_shingles_candidates_only(spark):
+def test_ngram_verify_shingles_candidates_only(spark, monkeypatch):
     """The shingle projection must sit ABOVE a LeftSemi narrowing join
     on BOTH sides of the verify: shingles are computed for candidate
     docs only, never the full corpus (at 10^9 docs with a ~1%
     candidate rate the full-corpus projection is ~100x wasted compute
-    — the round-3 hot stage)."""
+    — the round-3 hot stage). The shingled table is cached, so both
+    pair-join sides read it as an InMemoryRelation whose plan prints
+    the final (BroadcastHashJoin ... LeftSemi) and initial adaptive
+    plans, each a projection above its narrowing join."""
     import re
 
     from tortank_spark.dedup import ngram_jaccard_pairs
@@ -115,24 +156,36 @@ def test_ngram_verify_shingles_candidates_only(spark):
     )
     pairs = spark.createDataFrame([(1, 2)], "a long, b long")
     opt = (
-        ngram_jaccard_pairs(docs, pairs, "doc_id")
+        checkpointed_frame(
+            monkeypatch, lambda: ngram_jaccard_pairs(docs, pairs, "doc_id"))
         ._jdf.queryExecution().optimizedPlan().toString()
     )
-    # the optimized logical plan prints parents before children, so
-    # projection-above-join means array_distinct appears BEFORE its
-    # LeftSemi child; two sides -> two of each, interleaved
-    proj = [m.start() for m in re.finditer(r"array_distinct", opt)]
-    semi = [m.start() for m in re.finditer(r"Join LeftSemi", opt)]
-    assert len(semi) == 2, f"expected 2 semi-narrowing joins, got {len(semi)}"
-    assert proj[0] < semi[0] < proj[-1] < semi[1]
+    # plans print parents before children, so projection-above-join
+    # means every array_distinct appears BEFORE its LeftSemi child,
+    # and the next projection only after that join
+    sides = opt.split("InMemoryRelation")[1:]
+    assert len(sides) == 2, f"expected 2 cached shingle sides, got {len(sides)}"
+    for side in sides:
+        proj = [m.start() for m in re.finditer(r"array_distinct", side)]
+        semi = [m.start() for m in re.finditer(r"Join[^\n]*LeftSemi", side)]
+        assert proj and len(proj) == len(semi), (len(proj), len(semi))
+        assert all(p < j for p, j in zip(proj, semi))
+        assert all(j < p for j, p in zip(semi, proj[1:]))
 
 
-def test_dedup_builders_release_their_caches(spark):
-    """minhash_dedup_pairs / embedding_neardup_lsh (eager default) must
-    unpersist their intermediate signature/bucket caches before
-    returning — only the small materialized output may stay pinned
-    (one localCheckpoint RDD per call)."""
-    from tortank_spark.dedup import embedding_neardup_lsh, minhash_dedup_pairs
+def test_dedup_builders_release_their_caches(spark, monkeypatch):
+    """Every cache-holding builder (the near-dup, span and triangle
+    builders) must unpersist its intermediate signature / bucket /
+    shingle / fingerprint / edge caches before returning — only the
+    small materialized output it checkpointed may stay pinned."""
+    from tortank_spark.dedup import (
+        embedding_neardup_lsh, minhash_dedup_pairs, ngram_jaccard_dedup_pairs,
+        ngram_jaccard_pairs,
+    )
+    from tortank_spark.graph import triangle_counts
+    from tortank_spark.textops import (
+        winnow_contamination, winnow_dedup_pairs, winnow_match_spans,
+    )
 
     docs = spark.createDataFrame(
         [(i, f"tok{i} tok{i+1} tok{i+2} tok{i+3}") for i in range(8)],
@@ -142,15 +195,44 @@ def test_dedup_builders_release_their_caches(spark):
         [(i, [float(i), 1.0, 0.5, float(i % 3)]) for i in range(8)],
         "vec_id long, embedding array<double>",
     )
-    jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
-    minhash_dedup_pairs(docs, "doc_id", threshold=0.5).collect()
-    embedding_neardup_lsh(emb, threshold=0.99).collect()
-    after = jsc.getPersistentRDDs().size()
-    assert after - before <= 2, (
-        f"leaked intermediate caches: {after - before} new persistent "
-        f"RDDs after two eager dedup builds (expected <= 2 checkpoints)"
+    pairs = spark.createDataFrame([(1, 2)], "a long, b long")
+    evals = spark.createDataFrame([(0, "tok3 tok4 tok5")],
+                                  "eval_id long, text string")
+    edges = spark.createDataFrame(
+        [(a, b) for a in range(6) for b in range(6) if a < b],
+        "src long, dst long",
     )
+    builders = {
+        "minhash_dedup_pairs":
+            lambda: minhash_dedup_pairs(docs, "doc_id", threshold=0.5),
+        "embedding_neardup_lsh":
+            lambda: embedding_neardup_lsh(emb, threshold=0.99),
+        "ngram_jaccard_pairs":
+            lambda: ngram_jaccard_pairs(docs, pairs, "doc_id"),
+        "ngram_jaccard_dedup_pairs":
+            lambda: ngram_jaccard_dedup_pairs(docs, "doc_id"),
+        "winnow_dedup_pairs": lambda: winnow_dedup_pairs(docs, "doc_id"),
+        "winnow_match_spans": lambda: winnow_match_spans(docs, "doc_id"),
+        "winnow_contamination": lambda: winnow_contamination(docs, evals),
+        "triangle_counts": lambda: triangle_counts(edges),
+    }
+    jsc = spark.sparkContext._jsc
+
+    def persistent_ids():
+        # track IDS, not counts: the async ContextCleaner may reclaim
+        # OTHER tests' dropped checkpoint RDDs mid-test, so count
+        # equality is racy in a full-suite run
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    for name, build in builders.items():
+        before = persistent_ids()
+        with captured_checkpoints(monkeypatch) as seen:
+            build().collect()
+        own = {ckpt._jdf.queryExecution().logical().rdd().id()
+               for _, ckpt in seen}
+        assert own, f"{name} checkpointed nothing"
+        leaked = persistent_ids() - before - own
+        assert not leaked, f"{name} leaked persistent RDDs {leaked}"
 
 
 def test_union_dedup_single_shuffle(spark):
@@ -310,79 +392,29 @@ def test_pbucketed_pattern_scan_prunes_directories(spark, tmp_path_factory):
     assert len(all_buckets) > 1
 
 
-def test_lazy_dedup_builders_persist_and_release_on_request(spark):
-    """eager=False keeps the internal signature/bucket cache (the
-    stage feeds 2-3 plan branches — dropping the persist would re-run
-    the Python stage per branch) and returns an EXPLICIT (df, handle)
-    pair, since the plan node is otherwise unreachable. The handle
-    must keep working however the DataFrame is derived afterwards —
-    the round-4 DataFrame-attribute scheme silently no-opped on any
-    filter/select derivation (ADVICE r04)."""
-    from pyspark.sql import functions as F
-
-    from tortank_spark.dedup import minhash_dedup_pairs, release_caches
-
-    docs = spark.createDataFrame(
-        [(i, f"tok{i} tok{i+1} tok{i+2} tok{i+3}") for i in range(8)],
-        "doc_id long, text string",
-    )
-    jsc = spark.sparkContext._jsc
-
-    def persistent_ids():
-        # track IDS, not counts: the async ContextCleaner may reclaim
-        # OTHER tests' dropped checkpoint RDDs mid-test, so count
-        # equality is racy in a full-suite run
-        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
-
-    before = persistent_ids()
-    out, handle = minhash_dedup_pairs(docs, "doc_id", threshold=0.5,
-                                      eager=False)
-    # derive freely — the handle is independent of the frame object
-    derived = out.filter(F.col("jaccard_est") >= 0.0).select("a", "b")
-    derived.collect()
-    new_ids = persistent_ids() - before
-    assert len(new_ids) == 1, f"expected 1 new cache, got {new_ids}"
-    handle.release()
-    assert not (persistent_ids() & new_ids)
-    handle.release()               # idempotent
-    release_caches(handle)         # helper accepts the handle...
-    release_caches((out, handle))  # ...or the whole result tuple
-    # context-manager form releases on exit
-    out2, h2 = minhash_dedup_pairs(docs, "doc_id", threshold=0.5,
-                                   eager=False)
-    with h2:
-        out2.collect()
-        new2 = persistent_ids() - before
-        assert len(new2) == 1
-    assert not (persistent_ids() & new2)
-
-
-def test_winnow_span_generator_never_cross_joins(spark):
+def test_winnow_span_generator_never_cross_joins(spark, monkeypatch):
     """winnow_match_spans joins a-positions against distinct (b, fp)
     on the capped fingerprint — a bucketed equi-join like every other
     candidate generator; a CartesianProduct/BroadcastNestedLoopJoin in
-    the plan means it degraded to all-pairs. eager=False exposes the
-    unreplayed plan (the eager path checkpoints)."""
-    from tortank_spark.dedup import release_caches
+    the plan means it degraded to all-pairs. The plan read is the one
+    the builder checkpoints (its return value is the checkpoint)."""
     from tortank_spark.textops import winnow_match_spans
 
     docs = spark.createDataFrame(
         [(i, f"shared body text here tail{i} variant{i}") for i in range(6)],
         "doc_id long, text string",
     )
-    out, handle = winnow_match_spans(docs, "doc_id", eager=False)
-    plan = plan_of(out)
+    plan = plan_of(checkpointed_frame(
+        monkeypatch, lambda: winnow_match_spans(docs, "doc_id")))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    release_caches(handle)
 
 
-def test_winnow_contamination_broadcasts_eval_side(spark):
+def test_winnow_contamination_broadcasts_eval_side(spark, monkeypatch):
     """The eval fingerprint table is small by construction (eval sets
     are MBs against a 100-TB corpus): the fp join must be a
     BroadcastHashJoin — a shuffled join here would shuffle the entire
     corpus fingerprint stream — and never a cross join."""
-    from tortank_spark.dedup import release_caches
     from tortank_spark.textops import winnow_contamination
 
     corpus = spark.createDataFrame(
@@ -393,31 +425,28 @@ def test_winnow_contamination_broadcasts_eval_side(spark):
     evals = spark.createDataFrame(
         [(0, "shared eval phrase")], "eval_id long, text string",
     )
-    out, handle = winnow_contamination(corpus, evals, eager=False)
-    plan = plan_of(out)
+    plan = plan_of(checkpointed_frame(
+        monkeypatch, lambda: winnow_contamination(corpus, evals)))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    release_caches(handle)
 
 
-def test_triangle_counts_all_equi_joins(spark):
+def test_triangle_counts_all_equi_joins(spark, monkeypatch):
     """Triangle counting must stay equi-join-only (degree join,
     wedge join on the shared low endpoint, closure probe) — a
     CartesianProduct/BroadcastNestedLoopJoin means the ordering guard
     slipped into the join condition instead of a post-join filter."""
-    from tortank_spark.dedup import release_caches
     from tortank_spark.graph import triangle_counts
 
     edges = spark.createDataFrame(
         [(a, b) for a in range(8) for b in range(8) if a < b],
         "src long, dst long",
     )
-    out, handle = triangle_counts(edges, eager=False)
-    plan = plan_of(out)
+    plan = plan_of(checkpointed_frame(
+        monkeypatch, lambda: triangle_counts(edges)))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    release_caches(handle)
 
 
 def test_asof_join_single_exchange_no_range_join(spark):

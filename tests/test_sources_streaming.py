@@ -56,6 +56,7 @@ def test_ntriples_source(spark, tmp_path):
 
 
 def test_stream_ntriples_directory(spark, tmp_path):
+    from tortank_spark.schema import EXTRACT_SCHEMA
     from tortank_spark.sources import read_ntriples_lines
     from tortank_spark.streaming import stream_ntriples_directory
 
@@ -76,7 +77,7 @@ def test_stream_ntriples_directory(spark, tmp_path):
     q.awaitTermination(120)
     got = spark.read.parquet(outp)
     assert got.filter(F.col("parse_ok")).count() >= 2
-    cols = ["s", "p", "o", "parse_ok"]
+    cols = EXTRACT_SCHEMA.fieldNames()
     assert Counter(map(tuple, got.select(cols).collect())) == Counter(
         map(tuple, read_ntriples_lines(spark, str(ind)).select(cols).collect())
     )

@@ -89,7 +89,7 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     """Exact CC by union-find on the driver — the fast path for edge
     sets that fit one machine. Not a shortcut around distribution: the
     canonical map this feeds is broadcast into the rewrite joins anyway
-    (rewrite_canonical default), so 'fits the driver' is already a
+    (rewrite_canonical), so 'fits the driver' is already a
     standing assumption for the map; when the graph is that small,
     10+ shuffle rounds of star iterations are pure overhead (measured:
     ~10-20 s of Spark jobs for a 13k-edge graph vs <1 s here).
@@ -236,19 +236,12 @@ def sameas_edges(triples: DataFrame) -> DataFrame:
     )
 
 
-def rewrite_canonical(
-    triples: DataFrame,
-    canonical_map: DataFrame,
-    broadcast_map: bool = True,
-) -> DataFrame:
+def rewrite_canonical(triples: DataFrame, canonical_map: DataFrame) -> DataFrame:
     """Rewrite s/o through the canonical map — two joins. The sameAs
-    canonical map is tiny relative to the triple table, so the default
-    force-broadcasts it (two broadcast-hash joins, zero shuffle of the
-    big side); pass broadcast_map=False for a huge map and let AQE pick
-    shuffle-hash with skew splitting."""
-    cmap = canonical_map
-    if broadcast_map:
-        cmap = F.broadcast(cmap)
+    canonical map is tiny relative to the triple table, so it is
+    force-broadcast (two broadcast-hash joins, zero shuffle of the big
+    side)."""
+    cmap = F.broadcast(canonical_map)
     smap = cmap.select(F.col("iri").alias("s"), F.col("canonical").alias("_cs"))
     omap = cmap.select(F.col("iri").alias("_o_iri"), F.col("canonical").alias("_co"))
     # the object join must be gated on o_kind == 'iri': web data is full

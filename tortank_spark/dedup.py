@@ -213,48 +213,6 @@ def minhash_jaccard_estimate(
     )
 
 
-class CacheHandle:
-    """Explicit handle to the internal persisted dependencies of a
-    lazy (``eager=False``) dedup builder result. The builders persist
-    an intermediate (signatures / LSH buckets / fingerprints) that
-    feeds 2-3 plan branches; the plan node is unreachable from the
-    returned DataFrame, so the builder hands this handle back
-    alongside it: ``pairs, caches = minhash_dedup_pairs(..,
-    eager=False)``. Call :meth:`release` after the terminal action, or
-    use it as a context manager. Idempotent.
-
-    (Round-4 attached the dependency list as a Python attribute on the
-    returned DataFrame; any derived frame — filter/select/join —
-    silently lost it and release became a no-op, leaking the cache for
-    the session. An explicit handle survives arbitrary derivation —
-    ADVICE r04.)"""
-
-    def __init__(self, deps: list[DataFrame]):
-        self._deps = list(deps)
-
-    def release(self) -> None:
-        while self._deps:
-            self._deps.pop().unpersist()
-
-    def __enter__(self) -> "CacheHandle":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.release()
-
-
-def release_caches(handle_or_result) -> None:
-    """Release the internal caches of a lazy dedup builder: accepts
-    the :class:`CacheHandle` itself or the whole ``(df, handle)``
-    result tuple. Idempotent."""
-    if isinstance(handle_or_result, CacheHandle):
-        handle_or_result.release()
-    elif isinstance(handle_or_result, tuple):
-        for x in handle_or_result:
-            if isinstance(x, CacheHandle):
-                x.release()
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -262,29 +220,17 @@ def minhash_dedup_pairs(
     threshold: float = 0.7,
     n_hashes: int = 64,
     bands: int = 16,
-    eager: bool = True,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline -> (a, b, jaccard_est).
 
-    Cache lifetime: the signature table feeds BOTH sides of the band
+    Cache lifetime (shared by every near-dup, span and triangle
+    builder): the signature table feeds BOTH sides of the band
     self-join plus the estimate join — without caching, the Python
-    signature stage re-runs 3-4x, so it is ALWAYS persisted. With
-    ``eager`` (default) the small pair output is materialized
-    (localCheckpoint) and the signature cache is released before
-    returning, so repeated calls in a long-lived session cannot
-    accumulate executor storage. With ``eager=False`` the plan stays
-    lazy (use when you write the result out yourself in the same job)
-    and the return value is a ``(pairs_df, CacheHandle)`` tuple —
-    call ``handle.release()`` (or :func:`release_caches`) after your
-    terminal action; the handle stays valid however the DataFrame is
-    further derived (the caller cannot reach the internal plan node
-    any other way)."""
+    signature stage re-runs 3-4x — so it is persisted, the small pair
+    output is materialized (localCheckpoint), and the signature cache
+    is released before returning; repeated calls in a long-lived
+    session cannot accumulate executor storage."""
     sigs = minhash_signatures(df, id_col, text_col, n_hashes).persist()
-    if not eager:
-        pairs = lsh_candidate_pairs(sigs, id_col, bands)
-        est = minhash_jaccard_estimate(sigs, pairs, id_col)
-        out = est.filter(F.col("jaccard_est") >= threshold)
-        return out, CacheHandle([sigs])
     try:
         pairs = lsh_candidate_pairs(sigs, id_col, bands)
         est = minhash_jaccard_estimate(sigs, pairs, id_col)
@@ -460,7 +406,6 @@ def embedding_neardup_pairs(
 def embedding_neardup_lsh(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     threshold: float = 0.9, n_bits: int = 8, n_tables: int = 12,
-    eager: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup, scale tier: candidate pairs share a
     hyperplane-LSH bucket in ANY of L tables (never a cross join —
@@ -474,12 +419,9 @@ def embedding_neardup_lsh(
     agrees; the dimension is read from the batch, so no driver-side
     ``first()`` job); table t's bucket is keyed ``bucket + (t << b)``.
 
-    ``eager`` (default): materialize the small pair output and release
-    the bucket-table cache before returning; with ``eager=False`` the
-    bucket table stays persisted (it feeds both self-join sides) and
-    the return value is a ``(pairs_df, CacheHandle)`` tuple — call
-    ``handle.release()`` after your terminal action (see
-    minhash_dedup_pairs)."""
+    Cache lifetime follows minhash_dedup_pairs: the bucket table feeds
+    both self-join sides, so it is persisted, the small pair output is
+    materialized and the bucket cache released before returning."""
     from .similarity import lsh_table_buckets
 
     schema = StructType(
@@ -526,8 +468,6 @@ def embedding_neardup_lsh(
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", F.round("cosine", 6).alias("cosine"))
     )
-    if not eager:
-        return out, CacheHandle([banded])
     try:
         return out.localCheckpoint(eager=True)
     finally:
@@ -558,8 +498,8 @@ def _shingles_expr(text_col: str, n: int):
 
 def ngram_jaccard_pairs(
     df: DataFrame, pairs: DataFrame, id_col: str, text_col: str = "text",
-    n: int = 3, cache_shingles: bool = False,
-):
+    n: int = 3,
+) -> DataFrame:
     """Exact n-gram (word-shingle) Jaccard on candidate pairs — the
     verification stage. JVM-side: shingle arrays via transform over a
     token sequence, intersection/union sizes via array functions.
@@ -573,12 +513,10 @@ def ngram_jaccard_pairs(
     pairs DF so its subtree isn't recomputed.
 
     The shingled candidate table itself feeds BOTH pair-join sides, so
-    without caching the scan+semi-join+shingle pipeline runs twice.
-    ``cache_shingles=True`` persists it (bounded by the candidate-doc
-    count — the same fits-in-storage argument as the pairs cache) and
-    returns ``(jaccard_df, CacheHandle)``; call ``handle.release()``
-    after the terminal action. Default False keeps the plain-DataFrame
-    return for callers that run the plan once."""
+    without caching the scan+semi-join+shingle pipeline runs twice: it
+    is persisted (bounded by the candidate-doc count), the small
+    Jaccard output is materialized and the shingle cache released
+    before returning — the minhash_dedup_pairs lifetime."""
     cand_ids = (
         pairs.select(F.col("a").alias(id_col))
         .union(pairs.select(F.col("b").alias(id_col)))
@@ -587,9 +525,7 @@ def ngram_jaccard_pairs(
     sh = _shingles_expr(text_col, n)
     with_sh = df.join(cand_ids, id_col, "semi").select(
         F.col(id_col), sh.alias("_sh")
-    )
-    if cache_shingles:
-        with_sh = with_sh.persist()
+    ).persist()
     a = with_sh.select(F.col(id_col).alias("a"), F.col("_sh").alias("_sha"))
     b = with_sh.select(F.col(id_col).alias("b"), F.col("_sh").alias("_shb"))
     j = pairs.join(a, "a").join(b, "b")
@@ -599,9 +535,10 @@ def ngram_jaccard_pairs(
         "a", "b",
         (inter / F.greatest(union, F.lit(1))).alias("jaccard"),
     )
-    if cache_shingles:
-        return out, CacheHandle([with_sh])
-    return out
+    try:
+        return out.localCheckpoint(eager=True)
+    finally:
+        with_sh.unpersist()
 
 
 def rare_ngram_candidate_pairs(
@@ -648,31 +585,26 @@ def rare_ngram_candidate_pairs(
 def ngram_jaccard_dedup_pairs(
     df: DataFrame, id_col: str, text_col: str = "text",
     n: int = 3, max_df: int = 20, threshold: float = 0.5,
-    eager: bool = True,
-):
+) -> DataFrame:
     """Full n-gram-Jaccard dedup ladder: rare-n-gram blocking →
     exact shingle-Jaccard verify on candidates only → threshold.
     Deterministic end to end; the driver oracle replays every stage.
 
-    With ``eager`` the small verified output is materialized and the
-    candidate cache released before returning; ``eager=False``
-    returns ``(df, CacheHandle)`` (see minhash_dedup_pairs)."""
+    The candidate pairs feed the verify join and both semi-join sides
+    of the shingle narrowing, so they are persisted until the verify
+    stage (which materializes its own output) returns; the threshold
+    filter then runs on that materialized result."""
     cand = rare_ngram_candidate_pairs(
         df, id_col, text_col=text_col, n=n, max_df=max_df
     ).persist()
-    verified, shingle_cache = ngram_jaccard_pairs(
-        df, cand, id_col, text_col=text_col, n=n, cache_shingles=True
-    )
-    out = verified.filter(F.col("jaccard") >= threshold).select(
-        "a", "b", F.round("jaccard", 4).alias("jaccard")
-    )
-    if not eager:
-        return out, CacheHandle([cand, *shingle_cache._deps])
     try:
-        with shingle_cache:
-            return out.localCheckpoint(eager=True)
+        verified = ngram_jaccard_pairs(df, cand, id_col,
+                                       text_col=text_col, n=n)
     finally:
         cand.unpersist()
+    return verified.filter(F.col("jaccard") >= threshold).select(
+        "a", "b", F.round("jaccard", 4).alias("jaccard")
+    )
 
 
 def dedup_clusters(

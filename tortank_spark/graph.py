@@ -131,7 +131,7 @@ def pagerank(
             ).localCheckpoint(eager=False)
         # materialize HERE (one chained job over all rounds) so the
         # finally-release doesn't strip the caches before they are
-        # ever hit — the eager path of the triangle_counts convention
+        # ever hit — the triangle_counts cache lifetime
         return rank.localCheckpoint(eager=True)
     finally:
         ed.unpersist()
@@ -512,7 +512,7 @@ def canonical_edges(edges: DataFrame, src: str = "src",
 
 
 def triangle_counts(edges: DataFrame, src: str = "src",
-                    dst: str = "dst", eager: bool = True) -> DataFrame:
+                    dst: str = "dst") -> DataFrame:
     """Exact per-node triangle participation counts -> (node, n_tri):
     how many triangles each vertex belongs to (each triangle counts
     once at each of its three vertices — the clustering-coefficient
@@ -533,11 +533,8 @@ def triangle_counts(edges: DataFrame, src: str = "src",
     list feeds 3 plan branches and the oriented edge set another 3 —
     unpersisted, the whole distinct-self-join chain upstream re-runs
     ~6x (measured 61 s -> ~8 s on the sf0.01 co-purchase graph).
-    ``eager`` (default) materializes the small per-node output and
-    releases both caches; ``eager=False`` returns
-    ``(df, dedup.CacheHandle)``."""
-    from .dedup import CacheHandle
-
+    Both are persisted, the small per-node output is materialized and
+    both caches are released before returning."""
     e = canonical_edges(edges, src, dst).persist()
     deg = (
         e.select(F.col("a").alias("node"))
@@ -580,8 +577,6 @@ def triangle_counts(edges: DataFrame, src: str = "src",
         .unionAll(tri.select(F.col("w").alias("node")))
     )
     out = nodes.groupBy("node").agg(F.count("*").alias("n_tri"))
-    if not eager:
-        return out, CacheHandle([e, oriented])
     try:
         return out.localCheckpoint(eager=True)
     finally:
@@ -686,7 +681,7 @@ def clustering_coefficients(
             .groupBy("node")
             .agg(F.count("*").alias("deg"))
         )
-        tri = triangle_counts(e, "a", "b")  # eager: materializes here
+        tri = triangle_counts(e, "a", "b")  # materializes here
         out = (
             deg.join(tri, "node", "left")
             .select(
@@ -901,12 +896,11 @@ def triangle_count_sampled(
         16, 10,
     ).cast("long") % 1_000_000
     kept = e.filter(gate < p_ppm)
-    per_node, handle = triangle_counts(kept, "a", "b", eager=False)
-    tri = per_node.agg(
+    tri = triangle_counts(kept, "a", "b").agg(
         F.expr("CAST(coalesce(sum(n_tri), 0) DIV 3 AS BIGINT)")
         .alias("n_tri_sampled"))  # integer DIV: the sum is exactly 3T
     n_kept = kept.agg(F.count("*").alias("n_edges_kept"))
-    out = (
+    return (
         tri.crossJoin(n_kept)
         .select(
             F.lit(p_ppm).cast("long").alias("p_ppm"),
@@ -924,8 +918,3 @@ def triangle_count_sampled(
             ).alias("est_n_tri"),
         )
     )
-    rows = out.collect()  # 1 row — materialize, then drop the caches
-    handle.release()
-    return edges.sparkSession.createDataFrame(
-        rows, "p_ppm long, n_edges_kept long, n_tri_sampled long,"
-              " est_n_tri long")

@@ -38,7 +38,7 @@ from .canonicalize import connected_components, rewrite_canonical, sameas_edges
 from .extract import doc_lineage, doc_stage, embedded_triples, triples_only
 from .grammar.turtle import parse_document
 from .linking import best_link_per_mention, detect_mentions, link_mentions, links_as_triples
-from .schema import EXTRACT_SCHEMA
+from .schema import EXTRACT_SCHEMA, TRIPLE_SCHEMA
 
 # syntax_mode -> the per-document extractor every bucket runs
 _PER_DOC = {"turtle": parse_document, "embedded": embedded_triples}
@@ -192,16 +192,18 @@ def run_pipeline(
     if not global_skipped:
         # explicit paths, not a bucket=* glob (Spark logs a glob's failed
         # streaming-sink probe as a FileNotFoundException trace); a
-        # bucket that got no pages wrote only its manifest
-        def bucket_outputs(name: str) -> list[str]:
+        # bucket that got no pages wrote only its manifest, and the
+        # explicit schemas let an empty page table read zero paths
+        def bucket_outputs(name: str, schema) -> DataFrame:
             paths = (out / f"bucket={b}" / name for b in range(n_buckets))
-            return [str(p) for p in paths if p.exists()]
+            return spark.read.schema(schema).parquet(
+                *(str(p) for p in paths if p.exists()))
 
-        edges = spark.read.parquet(*bucket_outputs("sameas_edges"))
+        edges = bucket_outputs("sameas_edges", "src string, dst string")
         cmap = connected_components(edges)
         cmap.write.mode("overwrite").parquet(str(cmap_dir))
         cmap = spark.read.parquet(str(cmap_dir))
-        triples = spark.read.parquet(*bucket_outputs("triples"))
+        triples = bucket_outputs("triples", TRIPLE_SCHEMA)
         # the output count rides on the write job itself (Observation
         # metric) — re-reading triples_canonical just to count it is a
         # second full scan of the largest table in the pipeline

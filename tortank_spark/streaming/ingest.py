@@ -25,6 +25,7 @@ transforms (the standard Spark idempotent-foreachBatch pattern).
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
@@ -70,13 +71,13 @@ def stream_ntriples_directory(
     trigger_once: bool = True,
 ) -> StreamingQuery:
     """Watch a directory of N-Triples files; parse each line-batch with
-    ``parse_ntriples_lines`` (url = 'stream'), so the sink holds the
+    ``parse_ntriples_lines`` (url = ``in_dir``), so the sink holds the
     rows ``read_ntriples_lines`` gives for the same directory."""
     lines = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", 16)
         .load(in_dir)
-        .selectExpr("'stream' AS url", "value AS text")
+        .select(F.lit(in_dir).alias("url"), F.col("value").alias("text"))
     )
     return stream_extract(lines, out_path, checkpoint_path, trigger_once,
                           extractor=parse_ntriples_lines)
@@ -111,8 +112,6 @@ def stream_exact_dedup(
     state by landing bucket and compact periodically, or bound state
     with ``dropDuplicatesWithinWatermark`` when only in-window dedup
     is needed (the standard Spark trade-off)."""
-    import pyspark.sql.functions as F
-
     agg = (
         docs_stream.withColumn("fingerprint", F.md5(F.col(text_col)))
         .groupBy("fingerprint")

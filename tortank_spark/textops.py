@@ -282,7 +282,6 @@ def winnow_doc_fingerprint_set(
 def winnow_dedup_pairs(
     df: DataFrame, id_col: str, text_col: str = "text",
     k: int = 5, w: int = 4, min_shared: int = 12, max_df: int = 50,
-    eager: bool = True,
 ) -> DataFrame:
     """Near-dup candidate pairs from shared winnowing fingerprints
     (the MOSS construction over winnow_fingerprints): docs sharing at
@@ -298,12 +297,8 @@ def winnow_dedup_pairs(
 
     Cache lifetime follows dedup.minhash_dedup_pairs: the fingerprint
     table feeds the df-cap aggregate AND both self-join sides, so it
-    is always persisted; ``eager`` (default) materializes the small
-    pair output and releases it, ``eager=False`` returns a
-    ``(pairs_df, dedup.CacheHandle)`` tuple — call
-    ``handle.release()`` after the terminal action."""
-    from .dedup import CacheHandle
-
+    is persisted, the small pair output is materialized and the
+    fingerprint cache released before returning."""
     # per-doc-distinct (id, fp) straight from the numpy stage: set-
     # equal to winnow_fingerprints().select(id, fp).distinct() but
     # without shipping positions over Arrow or paying the distinct's
@@ -328,18 +323,52 @@ def winnow_dedup_pairs(
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    if not eager:
-        return out, CacheHandle([fps])
     try:
         return out.localCheckpoint(eager=True)
     finally:
         fps.unpersist()
 
 
+def _spans(shared: DataFrame, a: str, b: str, max_gap: int,
+           min_fps: int) -> DataFrame:
+    """Gaps-and-islands over shared fingerprint positions: ``shared``
+    holds distinct (a, b, pos) rows; consecutive positions of one
+    (a, b) pair with char-gap <= ``max_gap`` form one island (the
+    running sum of gap breaks over a window ordered by pos), and an
+    island carrying fewer than ``min_fps`` positions is dropped.
+    -> (a, b, a_start, a_end, n_fps). One window, whole-stage
+    codegen'd, no Python; the span oracles replay the same
+    arithmetic."""
+    from pyspark.sql import Window
+
+    win = Window.partitionBy(a, b).orderBy("pos")
+    islands = shared.withColumn(
+        "_brk",
+        F.when(
+            F.col("pos") - F.lag("pos").over(win) > max_gap, 1
+        ).otherwise(0),
+    ).withColumn(
+        "_isl",
+        F.sum("_brk").over(
+            win.rowsBetween(Window.unboundedPreceding, 0)
+        ),
+    )
+    return (
+        islands.groupBy(a, b, "_isl")
+        .agg(
+            F.min("pos").alias("a_start"),
+            F.max("pos").alias("a_end"),
+            F.count("*").alias("n_fps"),
+        )
+        .filter(F.col("n_fps") >= min_fps)
+        .select(a, b, "a_start", "a_end", "n_fps")
+    )
+
+
 def winnow_match_spans(
     df: DataFrame, id_col: str, text_col: str = "text",
     k: int = 5, w: int = 4, max_gap: int = 50, min_fps: int = 5,
-    max_df: int = 50, eager: bool = True,
+    max_df: int = 50,
 ) -> DataFrame:
     """MOSS-style overlap LOCALIZATION on winnow fingerprints: for
     each ordered doc pair (a < b) sharing rare fingerprints, the
@@ -360,17 +389,12 @@ def winnow_match_spans(
     winnow_dedup_pairs (no bucket exceeds max_df rows per side,
     regardless of corpus growth), the b-side narrows to DISTINCT
     (id, fp) before the join, and the island construction is one
-    window over (a, b) — the classic gaps-and-islands running sum,
-    whole-stage-codegen'd, no Python. Deterministic, fully
-    SQL-replayable (the driver oracle replays fingerprints, df cap,
-    join, and the same window arithmetic). Cache lifetime follows
-    winnow_dedup_pairs: ``eager`` (default) materializes the small
-    span output and releases the fingerprint cache; ``eager=False``
-    returns ``(spans_df, dedup.CacheHandle)``."""
-    from pyspark.sql import Window
-
-    from .dedup import CacheHandle
-
+    window over (a, b) — the classic gaps-and-islands running sum
+    (``_spans``). Deterministic, fully SQL-replayable (the driver
+    oracle replays fingerprints, df cap, join, and the same window
+    arithmetic). Cache lifetime follows winnow_dedup_pairs: the small
+    span output is materialized and the fingerprint cache released
+    before returning."""
     fps = (
         winnow_fingerprints(df, id_col, text_col, k, w)
         .select(id_col, "pos", "fp").distinct().persist()
@@ -391,30 +415,7 @@ def winnow_match_spans(
         .select("a", "b", "pos")
         .distinct()
     )
-    win = Window.partitionBy("a", "b").orderBy("pos")
-    islands = shared.withColumn(
-        "_brk",
-        F.when(
-            F.col("pos") - F.lag("pos").over(win) > max_gap, 1
-        ).otherwise(0),
-    ).withColumn(
-        "_isl",
-        F.sum("_brk").over(
-            win.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    out = (
-        islands.groupBy("a", "b", "_isl")
-        .agg(
-            F.min("pos").alias("a_start"),
-            F.max("pos").alias("a_end"),
-            F.count("*").alias("n_fps"),
-        )
-        .filter(F.col("n_fps") >= min_fps)
-        .select("a", "b", "a_start", "a_end", "n_fps")
-    )
-    if not eager:
-        return out, CacheHandle([fps])
+    out = _spans(shared, "a", "b", max_gap, min_fps)
     try:
         return out.localCheckpoint(eager=True)
     finally:
@@ -425,7 +426,7 @@ def winnow_contamination(
     corpus: DataFrame, eval_df: DataFrame, id_col: str = "doc_id",
     eval_id_col: str = "eval_id", text_col: str = "text",
     k: int = 5, w: int = 4, max_gap: int = 50, min_fps: int = 5,
-    max_df: int = 50, eager: bool = True,
+    max_df: int = 50,
 ) -> DataFrame:
     """Train-vs-eval contamination spans: where does a CORPUS document
     reproduce material from a (small) EVAL set? Same islands
@@ -442,11 +443,8 @@ def winnow_contamination(
     in the corpus document to excise or flag.
 
     Deterministic and fully SQL-replayable; `tests/test_plans.py`
-    pins the broadcast (BroadcastHashJoin, no cross join)."""
-    from pyspark.sql import Window
-
-    from .dedup import CacheHandle
-
+    pins the broadcast (BroadcastHashJoin, no cross join). Cache
+    lifetime follows winnow_dedup_pairs."""
     cfps = (
         winnow_fingerprints(corpus, id_col, text_col, k, w)
         .select(id_col, "pos", "fp").distinct().persist()
@@ -464,30 +462,7 @@ def winnow_contamination(
         .select(id_col, eval_id_col, "pos")
         .distinct()
     )
-    win = Window.partitionBy(id_col, eval_id_col).orderBy("pos")
-    islands = shared.withColumn(
-        "_brk",
-        F.when(
-            F.col("pos") - F.lag("pos").over(win) > max_gap, 1
-        ).otherwise(0),
-    ).withColumn(
-        "_isl",
-        F.sum("_brk").over(
-            win.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    out = (
-        islands.groupBy(id_col, eval_id_col, "_isl")
-        .agg(
-            F.min("pos").alias("a_start"),
-            F.max("pos").alias("a_end"),
-            F.count("*").alias("n_fps"),
-        )
-        .filter(F.col("n_fps") >= min_fps)
-        .select(id_col, eval_id_col, "a_start", "a_end", "n_fps")
-    )
-    if not eager:
-        return out, CacheHandle([cfps])
+    out = _spans(shared, id_col, eval_id_col, max_gap, min_fps)
     try:
         return out.localCheckpoint(eager=True)
     finally:
