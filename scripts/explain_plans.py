@@ -5,8 +5,10 @@ operators and assert the plan properties we design for:
 * filters push down to the scan (PushedFilters)
 * the alias-dict / canonical-map joins are BroadcastHashJoin
 * whole-stage codegen covers the relational operators
-* every page extractor plans to one MapInArrow, no MapInPandas and no
-  Exchange, and so do a pipeline bucket's triples in both syntax modes
+* every page extractor and per-row kernel (out-links, MinHash and
+  SimHash signatures, the three media stages) plans to one MapInArrow,
+  no MapInPandas and no Exchange, and so do a pipeline bucket's triples
+  in both syntax modes
 """
 
 import os
@@ -68,16 +70,28 @@ def main():
     print("   scan reads:", [l.strip() for l in p.splitlines()
                              if "ReadSchema" in l][:1])
 
-    # 1b. every page extractor is ONE Arrow per-document stage: one
-    # MapInArrow, no pandas stage, no shuffle
+    # 1b. every page extractor and per-row kernel is ONE Arrow row
+    # stage: one MapInArrow, no pandas stage, no shuffle
+    from tortank_spark.dedup import minhash_signatures, simhash_signatures
     from tortank_spark.extract import extract_embedded
     from tortank_spark.jsonld import extract_jsonld
     from tortank_spark.microdata import extract_microdata
+    from tortank_spark.multimodal import (
+        extract_features, make_media_table, resize_images, sample_frames,
+    )
     from tortank_spark.rdfa import extract_rdfa
+    from tortank_spark.weblinks import extract_links
 
-    for fn in (extract_triples, extract_jsonld, extract_rdfa,
-               extract_microdata, extract_embedded):
-        p = plan_of(fn(pages))
+    media = make_media_table(spark)
+    stages = [(fn, fn(pages)) for fn in (
+        extract_triples, extract_jsonld, extract_rdfa, extract_microdata,
+        extract_embedded, extract_links)]
+    stages += [(fn, fn(pages, "url"))
+               for fn in (minhash_signatures, simhash_signatures)]
+    stages += [(fn, fn(media))
+               for fn in (extract_features, resize_images, sample_frames)]
+    for fn, df in stages:
+        p = plan_of(df)
         tree = p.split("\n\n")[0]
         one_stage = (sum("MapInArrow" in l for l in tree.splitlines()) == 1
                      and "MapInPandas" not in p and "Exchange" not in p)

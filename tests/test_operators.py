@@ -614,6 +614,34 @@ def test_multimodal_resize_and_frame_sample(spark):
     }
 
 
+def test_row_kernels_emit_no_rows_on_empty_input(spark):
+    """A row kernel may emit no row for a row: a page without
+    ``<a href>``, a page with null text and a media table whose only
+    video has no duration give zero rows with the declared schema, and
+    partitions that hold no rows do not fail the stage."""
+    from tortank_spark.multimodal import (
+        FRAME_SCHEMA, MEDIA_SCHEMA, media_fixture_rows, sample_frames,
+    )
+    from tortank_spark.weblinks import LINKS_SCHEMA, extract_links
+
+    sc = spark.sparkContext
+    pages = spark.createDataFrame(
+        sc.parallelize([("http://a.example/", "<p>no links</p>"),
+                        ("http://b.example/", None)], 4),
+        "url string, text string",
+    )
+    assert sorted(pages.rdd.glom().map(len).collect()) == [0, 0, 1, 1]
+    links = extract_links(pages)
+    assert links.schema == LINKS_SCHEMA and links.collect() == []
+
+    rows = media_fixture_rows(6)
+    no_frames = [r for r in rows if r[2] != "video"] + [
+        (*r[:6], None) for r in rows[2:3]]  # a video without a duration
+    media = spark.createDataFrame(sc.parallelize(no_frames, 8), MEDIA_SCHEMA)
+    frames = sample_frames(media)
+    assert frames.schema == FRAME_SCHEMA and frames.collect() == []
+
+
 def test_ivf_ann_planted_clusters(spark):
     """IVF coarse quantizer: on clustered data the query's list holds
     its true neighbors, so probing 2/8 lists recovers the exact top-k;

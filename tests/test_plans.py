@@ -5,6 +5,7 @@ pushdown, broadcast on the small join side, and no cartesian product in
 any bucketed candidate generator."""
 
 import contextlib
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -53,6 +54,20 @@ def checkpointed_frame(monkeypatch, build):
     return frame
 
 
+def _ancestors(lines, i):
+    """The operator lines above ``lines[i]`` in a printed plan tree,
+    nearest first: each is the closest earlier line at a shallower
+    indent than the one before it."""
+    def depth(ln):
+        return len(re.match(r"[\s:+-]*", ln).group())
+
+    d = depth(lines[i])
+    for ln in reversed(lines[:i]):
+        if depth(ln) < d:
+            d = depth(ln)
+            yield ln
+
+
 @pytest.fixture(scope="module")
 def pages_parquet(spark, tmp_path_factory):
     from tortank_spark import fixtures
@@ -74,6 +89,41 @@ def test_extraction_prunes_scan_to_url_text(spark, pages_parquet):
     read_schema = scan[scan.index("ReadSchema"):].splitlines()[0]
     assert "url" in read_schema and "text" in read_schema
     assert "html" not in read_schema and "warc_ts" not in read_schema
+
+
+def _row_kernel(spark, stage):
+    from tortank_spark import dedup, multimodal, weblinks
+
+    docs = spark.createDataFrame(
+        [(i, f'<a href="/p{i}">tok{i}</a> tok{i+1} tok{i+2}')
+         for i in range(8)],
+        "doc_id long, text string",
+    )
+    media = multimodal.make_media_table(spark, 6)
+    return {
+        "extract_links": lambda: weblinks.extract_links(
+            docs.selectExpr("concat('http://h.example/', doc_id) AS url",
+                            "text")),
+        "minhash_signatures": lambda: dedup.minhash_signatures(docs, "doc_id"),
+        "simhash_signatures": lambda: dedup.simhash_signatures(docs, "doc_id"),
+        "extract_features": lambda: multimodal.extract_features(media),
+        "resize_images": lambda: multimodal.resize_images(media),
+        "sample_frames": lambda: multimodal.sample_frames(media),
+    }[stage]()
+
+
+@pytest.mark.parametrize("stage", [
+    "extract_links", "minhash_signatures", "simhash_signatures",
+    "extract_features", "resize_images", "sample_frames",
+])
+def test_row_kernels_plan_one_map_in_arrow(spark, stage):
+    """Every per-row Python kernel runs in ``extract.row_stage``: its
+    plan holds exactly one MapInArrow (one Arrow batch loop) and no
+    MapInPandas (no pandas frame built from row tuples)."""
+    plan = plan_of(_row_kernel(spark, stage))
+    tree = plan.split("\n\n")[0]
+    assert sum("MapInArrow" in ln for ln in tree.splitlines()) == 1, tree
+    assert "MapInPandas" not in plan
 
 
 def test_pattern_filter_pushes_down(spark, pages_parquet):
@@ -145,9 +195,8 @@ def test_ngram_verify_shingles_candidates_only(spark, monkeypatch):
     — the round-3 hot stage). The shingled table is cached, so both
     pair-join sides read it as an InMemoryRelation whose plan prints
     the final (BroadcastHashJoin ... LeftSemi) and initial adaptive
-    plans, each a projection above its narrowing join."""
-    import re
-
+    plans, each a projection above its narrowing join — and neither
+    hash-partitions the full-text table on its way to that join."""
     from tortank_spark.dedup import ngram_jaccard_pairs
 
     docs = spark.createDataFrame(
@@ -171,6 +220,22 @@ def test_ngram_verify_shingles_candidates_only(spark, monkeypatch):
         assert proj and len(proj) == len(semi), (len(proj), len(semi))
         assert all(p < j for p, j in zip(proj, semi))
         assert all(j < p for j, p in zip(semi, proj[1:]))
+    # the candidate-id side is broadcast, so the (doc_id, text) scan
+    # reaches its LeftSemi without a hash exchange: every operator
+    # between a text scan and the join above it is checked
+    lines = opt.splitlines()
+    scans = [i for i, ln in enumerate(lines)
+             if re.search(r"Scan ExistingRDD\[[^\]]*\btext#", ln)]
+    assert scans, "no text scan in the captured plan"
+    for i in scans:
+        ups = []
+        for ln in _ancestors(lines, i):
+            ups.append(ln)
+            if "LeftSemi" in ln:
+                break
+        assert "LeftSemi" in ups[-1], ups
+        assert not any("Exchange hashpartitioning(doc_id" in u
+                       for u in ups), ups
 
 
 def test_dedup_builders_release_their_caches(spark, monkeypatch):

@@ -12,8 +12,10 @@ Four tiers, cheapest first — the standard web-corpus dedup ladder:
 
 Scale notes: candidate generation is groupBy(bucket) + self-join within
 bucket — worst case quadratic per bucket, so bucket width (bands/rows)
-is the skew knob; AQE skew-join handles residual hot buckets. All
-signatures are computed in one Arrow pandas stage over the text column.
+is the skew knob; AQE skew-join handles residual hot buckets. MinHash
+and SimHash signatures are each computed in one ``extract.row_stage``
+(a single Arrow stage) over the text column; the embedding bands stay a
+per-batch pandas matrix stage.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .extract import row_stage
 from .textops import doc_fingerprint
 
 _TOKEN_RE = re.compile(r"\s+")
@@ -86,7 +89,7 @@ def _minhash_params(n_hashes: int, seed: int = 42):
 
 def _shingle_hashes(toks: list, k: int, vocab: dict) -> np.ndarray:
     """Distinct k-shingle 64-bit hashes, vectorized: each UNIQUE token
-    is blake2b-hashed once per batch (vocab cache), then shingle hashes
+    is blake2b-hashed once per task (vocab cache), then shingle hashes
     are a polynomial combination of the k token-hash arrays — no
     per-shingle Python hashing (the round-1 hot spot)."""
     if not toks:
@@ -121,8 +124,8 @@ def minhash_signatures(
     n_hashes: int = 64,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """(id, signature[array<long>]) per doc; vectorized over Arrow
-    batches with numpy (a*x+b mod p universal hashing)."""
+    """(id, signature[array<long>]) per doc, one ``row_stage``; each
+    doc's signature is one numpy op (a*x+b mod p universal hashing)."""
     a, b = _minhash_params(n_hashes)
     schema = StructType(
         [
@@ -131,32 +134,28 @@ def minhash_signatures(
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vocab: dict = {}
-        for pdf in batches:
-            out_ids, out_sigs = [], []
-            for did, text in zip(pdf[id_col].values, pdf[text_col].values):
-                if len(vocab) > 1_000_000:
-                    # bound the per-task cache on huge vocabularies —
-                    # checked per DOC so a single giant batch cannot
-                    # blow past the bound between checks
-                    vocab.clear()
-                toks = [t for t in _TOKEN_RE.split((text or "").lower().strip())
-                        if t]
-                sh = _shingle_hashes(toks, shingle_k, vocab)
-                if sh.size == 0:
-                    sig = np.zeros(n_hashes, dtype=np.int64)
-                else:
-                    xs = (sh & np.uint64(_MAXH)).astype(np.int64)
-                    # (a*x + b) mod p, exact in int64, then min over
-                    # shingles per hash fn
-                    m = (a[:, None] * xs[None, :] + b[:, None]) % _MERSENNE31
-                    sig = m.min(axis=1)
-                out_ids.append(did)
-                out_sigs.append(sig.tolist())
-            yield pd.DataFrame({id_col: out_ids, "signature": out_sigs})
+    # token-hash cache: closure state, so each task deserializes its
+    # own empty dict (the lifetime of a per-partition local)
+    vocab: dict = {}
 
-    return df.select(id_col, text_col).mapInPandas(gen, schema=schema)
+    def per_row(did, text):
+        if len(vocab) > 1_000_000:
+            # bound the per-task cache on huge vocabularies — checked
+            # per DOC so a single giant batch cannot blow past it
+            vocab.clear()
+        toks = [t for t in _TOKEN_RE.split((text or "").lower().strip()) if t]
+        sh = _shingle_hashes(toks, shingle_k, vocab)
+        if sh.size == 0:
+            sig = np.zeros(n_hashes, dtype=np.int64)
+        else:
+            xs = (sh & np.uint64(_MAXH)).astype(np.int64)
+            # (a*x + b) mod p, exact in int64, then min over shingles
+            # per hash fn
+            m = (a[:, None] * xs[None, :] + b[:, None]) % _MERSENNE31
+            sig = m.min(axis=1)
+        return ((did, sig.tolist()),)
+
+    return row_stage(df, [id_col, text_col], per_row, schema)
 
 
 def lsh_candidate_pairs(
@@ -248,10 +247,11 @@ def simhash_signatures(
     """64-bit SimHash over tokens (Charikar); near-dups differ in few
     bits. Token weight = occurrence count; bit b of the signature is
     set iff the weighted ±1 sum over token-hash bit b is strictly
-    positive. Vectorized per UNIQUE token (hash cached per task, one
-    (unique × 64) matrix op per doc). The md5-low-64 token hash is
-    deliberately SQL-reproducible — the driver's DuckDB oracle
-    recomputes every signature bit-exactly (see _md5_64)."""
+    positive. One ``row_stage``, vectorized per UNIQUE token (hash
+    cached per task, one (unique × 64) matrix op per doc). The
+    md5-low-64 token hash is deliberately SQL-reproducible — the
+    driver's DuckDB oracle recomputes every signature bit-exactly (see
+    _md5_64)."""
     from collections import Counter
 
     schema = StructType(
@@ -261,39 +261,33 @@ def simhash_signatures(
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bits = np.arange(64, dtype=np.uint64)
-        vocab: dict = {}
-        for pdf in batches:
-            ids, sigs = [], []
-            for did, text in zip(pdf[id_col].values, pdf[text_col].values):
-                if len(vocab) > 1_000_000:
-                    vocab.clear()
-                counts = Counter(
-                    t for t in _TOKEN_RE.split((text or "").lower()) if t
-                )
-                if counts:
-                    hs = np.empty(len(counts), dtype=np.uint64)
-                    ws = np.empty(len(counts), dtype=np.int64)
-                    for i, (t, w) in enumerate(counts.items()):
-                        h = vocab.get(t)
-                        if h is None:
-                            h = vocab[t] = _md5_64(t)
-                        hs[i] = h
-                        ws[i] = w
-                    signs = np.where(
-                        (hs[:, None] >> bits[None, :]) & np.uint64(1),
-                        ws[:, None], -ws[:, None],
-                    )
-                    acc = signs.sum(axis=0)
-                else:
-                    acc = np.zeros(64, dtype=np.int64)
-                sig = int(((acc > 0).astype(np.uint64) << bits).sum(dtype=np.uint64))
-                ids.append(did)
-                sigs.append(sig - (1 << 64) if sig >= (1 << 63) else sig)
-            yield pd.DataFrame({id_col: ids, "simhash": sigs})
+    bits = np.arange(64, dtype=np.uint64)
+    vocab: dict = {}  # per-task token-hash cache, as in minhash_signatures
 
-    return df.select(id_col, text_col).mapInPandas(gen, schema=schema)
+    def per_row(did, text):
+        if len(vocab) > 1_000_000:
+            vocab.clear()
+        counts = Counter(t for t in _TOKEN_RE.split((text or "").lower()) if t)
+        if counts:
+            hs = np.empty(len(counts), dtype=np.uint64)
+            ws = np.empty(len(counts), dtype=np.int64)
+            for i, (t, w) in enumerate(counts.items()):
+                h = vocab.get(t)
+                if h is None:
+                    h = vocab[t] = _md5_64(t)
+                hs[i] = h
+                ws[i] = w
+            signs = np.where(
+                (hs[:, None] >> bits[None, :]) & np.uint64(1),
+                ws[:, None], -ws[:, None],
+            )
+            acc = signs.sum(axis=0)
+        else:
+            acc = np.zeros(64, dtype=np.int64)
+        sig = int(((acc > 0).astype(np.uint64) << bits).sum(dtype=np.uint64))
+        return ((did, sig - (1 << 64) if sig >= (1 << 63) else sig),)
+
+    return row_stage(df, [id_col, text_col], per_row, schema)
 
 
 # Manku/Jain/Das Sarma (WWW'07) multi-index layout: split the 64-bit
@@ -523,7 +517,9 @@ def ngram_jaccard_pairs(
         .distinct()
     )
     sh = _shingles_expr(text_col, n)
-    with_sh = df.join(cand_ids, id_col, "semi").select(
+    # broadcast the small id set: a shuffled semi-join would
+    # hash-partition every (id, text) row just to drop most of them
+    with_sh = df.join(F.broadcast(cand_ids), id_col, "semi").select(
         F.col(id_col), sh.alias("_sh")
     ).persist()
     a = with_sh.select(F.col(id_col).alias("a"), F.col("_sh").alias("_sha"))

@@ -6,10 +6,12 @@ P1-P24, SURVEY.md §2.2), the JSON-LD island expander and the RDFa-Lite
 and microdata scanners. ``doc_stage`` runs any of them as ONE
 Arrow-batched ``mapInArrow`` stage over the page table: state is
 document-scoped (prefix redefinition mid-doc, turtle_doc.rs:489-540) so
-a document is the natural unit of work, and documents are rows. Arrow
-moves batches JVM<->Python; the per-doc parse is pure Python but
-amortized across whole batches — there is no per-row Python UDF
-dispatch and no pandas conversion.
+a document is the natural unit of work, and documents are rows. That
+stage is ``row_stage``, which every per-row Python kernel of the engine
+runs in (out-links, MinHash/SimHash signatures and the media stages
+too). Arrow moves batches JVM<->Python; the per-doc parse is pure
+Python but amortized across whole batches — there is no per-row Python
+UDF dispatch and no pandas conversion.
 
 Scale design (100 TB / 10^12 docs):
 * embarrassingly parallel — no shuffle; parallelism = input splits.
@@ -25,7 +27,7 @@ Scale design (100 TB / 10^12 docs):
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from functools import partial
 
 import pyarrow as pa
@@ -42,6 +44,35 @@ def _salt(url: str) -> str:
     return hashlib.sha1(url.encode("utf-8", "surrogatepass")).hexdigest()[:12] + "-"
 
 
+def row_stage(
+    df: DataFrame,
+    cols: list[str],
+    per_row: Callable[..., Iterable[tuple]],
+    schema: StructType,
+) -> DataFrame:
+    """Run ``per_row(*values)`` over every row of ``df.select(*cols)``
+    as one ``mapInArrow`` stage; the call returns the row's output
+    tuples in ``schema`` order, and a row may return none.
+
+    Each Arrow batch is turned around on its own: one Python list per
+    output column (a list of row tuples costs ~2x on array
+    construction — this is the per-triple hot path), one ``pa.array``
+    per column typed from the schema, nothing held across batches."""
+    names = schema.fieldNames()
+    types = [f.type for f in to_arrow_schema(schema)]
+
+    def run(batches):
+        for rb in batches:
+            out = [[] for _ in names]
+            for values in zip(*(c.to_pylist() for c in rb.columns)):
+                for col, vals in zip(out, zip(*per_row(*values))):
+                    col.extend(vals)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=t) for c, t in zip(out, types)], names)
+
+    return df.select(*cols).mapInArrow(run, schema=schema)
+
+
 def doc_stage(
     pages: DataFrame,
     per_doc: Callable[[str, str], tuple[list[tuple], str | None]],
@@ -50,7 +81,7 @@ def doc_stage(
     salt: bool,
 ) -> DataFrame:
     """Run ``per_doc(text, bnode_prefix) -> (rows, error)`` over every
-    (url, text) page as one ``mapInArrow`` stage.
+    (url, text) page as one ``row_stage``.
 
     ``schema`` is the stage output: ``url``, then one field per
     element of a row tuple, then ``parse_ok`` and ``error``. A page
@@ -58,40 +89,17 @@ def doc_stage(
     quarantine row ``(url, nulls..., parse_ok = error is None,
     error)``. ``salt`` prefixes blank-node labels with sha1(url)[:12]
     so they are unique across documents; unsalted labels are the
-    reference's per-doc counter ``_:1, _:2, ...``.
+    reference's per-doc counter ``_:1, _:2, ...``."""
+    blank = (None,) * (len(schema.fieldNames()) - 3)
 
-    Each Arrow batch is turned around on its own: one Python list per
-    output column (a list of row tuples costs ~2x on array
-    construction — this is the per-triple hot path), one ``pa.array``
-    per column, nothing held across batches."""
-    names = schema.fieldNames()
-    types = [f.type for f in to_arrow_schema(schema)]
-    blank = (None,) * (len(names) - 3)
+    def per_page(url, text):
+        rows, err = per_doc(text or "", _salt(url) if salt else "")
+        ok = err is None
+        if not ok or not rows:
+            return ((url, *blank, ok, err),)
+        return [(url, *r, ok, err) for r in rows]
 
-    def run(batches):
-        for rb in batches:
-            urls, oks, errs = [], [], []
-            mid = [[] for _ in blank]
-            for url, text in zip(
-                rb.column(0).to_pylist(), rb.column(1).to_pylist()
-            ):
-                rows, err = per_doc(text or "", _salt(url) if salt else "")
-                ok = err is None
-                if not ok or not rows:
-                    rows = (blank,)
-                n = len(rows)
-                urls.extend([url] * n)
-                for col, vals in zip(mid, zip(*rows)):
-                    col.extend(vals)
-                oks.extend([ok] * n)
-                errs.extend([err] * n)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t)
-                 for c, t in zip([urls, *mid, oks, errs], types)],
-                names,
-            )
-
-    return pages.select("url", "text").mapInArrow(run, schema=schema)
+    return row_stage(pages, ["url", "text"], per_page, schema)
 
 
 def extract_triples(

@@ -21,6 +21,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .extract import row_stage
 from .schema import PAGE_SCHEMA
 
 REF_FIXTURE_DIR = Path("/root/reference/examples/turtle_doc")
@@ -158,24 +159,20 @@ def _bnode_heavy_text(n: int = 1000) -> str:
     return "".join(parts)
 
 
-def _synthetic_docs(n_pages: int, include_broken: bool,
-                    include_heavy: bool, heavy_sets: int):
-    """(url, text) per page-table row, in row order: the broken page,
-    ``heavy_sets`` heavy pairs, then filler up to n_pages (a filler
-    page's index is its row index)."""
-    docs = []
-    if include_broken:
-        docs.append(("https://synth.example.org/broken/0", BROKEN_DOC))
-    if include_heavy:
-        for h in range(heavy_sets):
-            docs.append((f"https://synth.example.org/big/{h}",
-                         _big_page_text()))
-            docs.append((f"https://synth.example.org/bnodes/{h}",
-                         _bnode_heavy_text()))
-    for i in range(len(docs), n_pages):
-        docs.append((f"https://synth.example.org/page/{i:08d}",
-                     _filler_text(i)))
-    return docs
+def _synthetic_doc(i: int, include_broken: bool, include_heavy: bool,
+                   heavy_sets: int) -> tuple[str, str]:
+    """(url, text) of page-table row ``i``: the broken page first, then
+    ``heavy_sets`` heavy pairs, then filler (a filler page's index is
+    its row index)."""
+    j = i - include_broken
+    if j < 0:
+        return "https://synth.example.org/broken/0", BROKEN_DOC
+    if include_heavy and j < 2 * heavy_sets:
+        h, bnodes = divmod(j, 2)
+        if bnodes:
+            return f"https://synth.example.org/bnodes/{h}", _bnode_heavy_text()
+        return f"https://synth.example.org/big/{h}", _big_page_text()
+    return f"https://synth.example.org/page/{i:08d}", _filler_text(i)
 
 
 def make_pages(
@@ -186,35 +183,28 @@ def make_pages(
     include_heavy: bool = True,
     heavy_sets: int = 1,
 ) -> DataFrame:
-    """Build the synthetic page table: (optionally) one broken page
-    for the quarantine path and ``heavy_sets`` heavy-page pairs — a
-    multi-MB doc and a bnode-dense doc each — then deterministic
-    filler up to n_pages.
+    """Build the synthetic page table of ``n_pages`` rows: (optionally)
+    one broken page for the quarantine path and ``heavy_sets``
+    heavy-page pairs — a multi-MB doc and a bnode-dense doc each — then
+    deterministic filler. Each row is built on the executors from its
+    index, so no page text ships inside a task.
 
     ``heavy_sets`` exists for the weak-scaling bench: the big leg's
     corpus must be an exact k-fold multiple of the small leg's work,
     so a constant-size heavy tail would skew the per-core work ratio
     (~16% at the bench's corpus sizes) — the big leg passes
     heavy_sets=k to keep the legs proportional."""
-    rows = [
-        _page_row(url, i, text)
-        for i, (url, text) in enumerate(_synthetic_docs(
-            n_pages, include_broken, include_heavy, heavy_sets))
-    ]
-    return spark.createDataFrame(rows, PAGE_SCHEMA).repartition(n_partitions)
 
+    def per_row(i):
+        url, text = _synthetic_doc(i, include_broken, include_heavy,
+                                   heavy_sets)
+        html = ('<html><body><script type="text/turtle">' + text
+                + "</script></body></html>").encode("utf-8")
+        return ((url, BASE_TS + timedelta(seconds=i), html, text,
+                 LANGS[i % len(LANGS)]),)
 
-def _page_row(url: str, i: int, text: str):
-    html = (
-        '<html><body><script type="text/turtle">' + text + "</script></body></html>"
-    ).encode("utf-8")
-    return (
-        url,
-        BASE_TS + timedelta(seconds=i),
-        bytearray(html),
-        text,
-        LANGS[i % len(LANGS)],
-    )
+    return row_stage(spark.range(n_pages, numPartitions=n_partitions),
+                     ["id"], per_row, PAGE_SCHEMA)
 
 
 def make_golden_triples(spark: SparkSession) -> DataFrame:
@@ -242,8 +232,8 @@ def make_alias_dict(spark: SparkSession) -> DataFrame:
     import re
 
     entities: dict[str, str] = {}
-    for _, text in _synthetic_docs(64, True, True, 1):
-        triples, err = parse_document(text)
+    for i in range(64):
+        triples, err = parse_document(_synthetic_doc(i, True, True, 1)[1])
         if err:
             continue
         for s, s_kind, p, o, o_kind, o_dt, o_lang in triples:

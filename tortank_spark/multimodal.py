@@ -12,10 +12,13 @@ environment; those fall back to a clearly-marked deterministic stub
 
 Design notes for 100 TB of media:
 * media bytes ride in their own table keyed by content hash; feature
-  extraction is mapInPandas over (hash, bytes) so the wide binary
-  column never joins through a shuffle — features join back by hash.
-* maxRecordsPerBatch must be lowered for multi-MB blobs (Arrow batch
-  memory = rows x blob size); extract_features takes a batch-rows hint.
+  extraction, resize and frame sampling each run as one
+  ``extract.row_stage`` (a single ``mapInArrow`` stage) over (hash,
+  type, bytes), so the wide binary column never joins through a
+  shuffle — results join back by hash.
+* Arrow batch memory = rows x blob size, and no stage here takes a
+  batch-size option: for multi-MB blobs, lower the session's
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` for the job.
 * feature math uses exact-integer sums in float64 so the DuckDB
   oracle reproduces every value bit-for-bit from the fixture formula.
 """
@@ -24,12 +27,10 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-import pyspark.sql.functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -39,6 +40,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .extract import row_stage
 
 MEDIA_SCHEMA = StructType(
     [
@@ -63,6 +66,11 @@ FEATURE_SCHEMA = StructType(
         StructField("decode_ok", StringType(), False),  # ok|stubbed|error
     ]
 )
+
+
+# what the per-medium stages read: the wide ``content`` blob and the
+# two keys, never the metadata a stage does not use
+_MEDIA_COLS = ["content_sha256", "media_type", "content"]
 
 
 class UnsupportedMediaFormat(Exception):
@@ -272,35 +280,20 @@ def _decode_features(mt: str, blob: bytes) -> tuple[list, str]:
 
 
 def extract_features(media: DataFrame) -> DataFrame:
-    """(content_sha256, media_type, content) -> feature rows via
-    mapInPandas. PPM/BMP/WAV decode for real (pure numpy); compressed
-    formats go through DECODERS (stub by default)."""
+    """(content_sha256, media_type, content) -> one feature row per
+    medium, in one ``row_stage``. PPM/BMP/WAV decode for real (pure
+    numpy); compressed formats go through DECODERS (stub by default)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sha, mt, blob in zip(
-                pdf["content_sha256"].values,
-                pdf["media_type"].values,
-                pdf["content"].values,
-            ):
-                try:
-                    feat, status = _decode_features(
-                        mt, bytes(blob) if blob is not None else b""
-                    )
-                    rows.append((sha, mt, feat, status))
-                except NotImplementedError:
-                    rows.append((sha, mt, None, "stubbed"))
-                except Exception:
-                    rows.append((sha, mt, None, "error"))
-            yield pd.DataFrame(
-                rows,
-                columns=["content_sha256", "media_type", "feature", "decode_ok"],
-            )
+    def per_row(sha, mt, blob):
+        try:
+            feat, status = _decode_features(mt, blob or b"")
+            return ((sha, mt, feat, status),)
+        except NotImplementedError:
+            return ((sha, mt, None, "stubbed"),)
+        except Exception:
+            return ((sha, mt, None, "error"),)
 
-    return media.select("content_sha256", "media_type", "content").mapInPandas(
-        gen, schema=FEATURE_SCHEMA
-    )
+    return row_stage(media, _MEDIA_COLS, per_row, FEATURE_SCHEMA)
 
 
 RESIZED_SCHEMA = StructType(
@@ -309,7 +302,7 @@ RESIZED_SCHEMA = StructType(
         StructField("out_width", LongType(), False),
         StructField("out_height", LongType(), False),
         StructField("resized", BinaryType(), True),
-        # checksum (sum of raster bytes) computed in the same pandas
+        # checksum (sum of raster bytes) computed in the same row
         # stage — lets the driver oracle pin the resample math without
         # shipping the raster through the value-hash
         StructField("resized_sum", LongType(), True),
@@ -354,54 +347,37 @@ def box_resize(arr: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
 
 
 def resize_images(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """Image resize over mapInPandas: (hash, bytes) -> (hash, resized
-    RGB raster, w*h*3 bytes row-major). PPM/BMP decode + box-filter
-    resample for real; compressed formats fall back to the stub."""
+    """Image resize in one ``row_stage``: (hash, bytes) -> (hash,
+    resized RGB raster, w*h*3 bytes row-major). PPM/BMP decode +
+    box-filter resample for real; compressed formats fall back to the
+    stub; a non-image row is ``skipped``."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sha, mt, blob in zip(
-                pdf["content_sha256"].values,
-                pdf["media_type"].values,
-                pdf["content"].values,
-            ):
-                if mt != "image":
-                    rows.append((sha, width, height, None, None, "skipped"))
-                    continue
-                b = bytes(blob) if blob is not None else b""
-                try:
-                    # recognized-but-unsupported variants (e.g. 32-bpp
-                    # or RLE BMP) fall back to the stub, matching the
-                    # extract_features contract; only corrupt data in a
-                    # supported container becomes 'error'
-                    arr = None
-                    try:
-                        if b.startswith(b"P6"):
-                            arr = decode_ppm(b)
-                        elif b.startswith(b"BM"):
-                            arr = decode_bmp(b)
-                    except UnsupportedMediaFormat:
-                        arr = None
-                    if arr is not None:
-                        out = box_resize(arr, width, height).tobytes()
-                        rows.append((sha, width, height, bytearray(out),
-                                     sum(out), "ok"))
-                    else:
-                        out = _stub_resize(b, width, height)
-                        rows.append((sha, width, height, bytearray(out),
-                                     sum(out), "stubbed"))
-                except Exception:
-                    rows.append((sha, width, height, None, None, "error"))
-            yield pd.DataFrame(
-                rows,
-                columns=["content_sha256", "out_width", "out_height",
-                         "resized", "resized_sum", "decode_ok"],
-            )
+    def per_row(sha, mt, blob):
+        if mt != "image":
+            return ((sha, width, height, None, None, "skipped"),)
+        b = blob or b""
+        try:
+            # recognized-but-unsupported variants (e.g. 32-bpp or RLE
+            # BMP) fall back to the stub, matching the extract_features
+            # contract; only corrupt data in a supported container
+            # becomes 'error'
+            arr = None
+            try:
+                if b.startswith(b"P6"):
+                    arr = decode_ppm(b)
+                elif b.startswith(b"BM"):
+                    arr = decode_bmp(b)
+            except UnsupportedMediaFormat:
+                arr = None
+            if arr is not None:
+                out, status = box_resize(arr, width, height).tobytes(), "ok"
+            else:
+                out, status = _stub_resize(b, width, height), "stubbed"
+            return ((sha, width, height, out, sum(out), status),)
+        except Exception:
+            return ((sha, width, height, None, None, "error"),)
 
-    return media.select("content_sha256", "media_type", "content").mapInPandas(
-        gen, schema=RESIZED_SCHEMA
-    )
+    return row_stage(media, _MEDIA_COLS, per_row, RESIZED_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(
@@ -416,36 +392,26 @@ FRAME_SCHEMA = StructType(
 
 
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling over mapInPandas: one output row per
-    sampled timestamp (explode happens INSIDE the pandas stage so the
-    multi-MB source blob crosses Arrow once, not once per frame). Frame
-    decode is stubbed; the fan-out shape, metadata pruning and
-    timestamp arithmetic are real."""
+    """Video frame sampling in one ``row_stage``: one output row per
+    sampled timestamp of a video with a duration, none for any other
+    row (the explode happens INSIDE the stage, so the multi-MB source
+    blob crosses Arrow once, not once per frame). Frame decode is
+    stubbed; the fan-out shape, metadata pruning and timestamp
+    arithmetic are real."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sha, mt, blob, dur in zip(
-                pdf["content_sha256"].values,
-                pdf["media_type"].values,
-                pdf["content"].values,
-                pdf["meta_duration_ms"].values,
-            ):
-                if mt != "video" or dur is None:
-                    continue
-                b = bytes(blob) if blob is not None else b""
-                for idx, ts in enumerate(range(0, int(dur), every_ms)):
-                    frame = hashlib.sha256(b + ts.to_bytes(8, "little")).digest()
-                    rows.append((sha, idx, ts, bytearray(frame), "stubbed"))
-            yield pd.DataFrame(
-                rows,
-                columns=["content_sha256", "frame_idx", "frame_ts_ms",
-                         "frame", "decode_ok"],
-            )
+    def per_row(sha, mt, blob, dur):
+        if mt != "video" or dur is None:
+            return ()
+        b = blob or b""
+        return [
+            (sha, idx, ts,
+             hashlib.sha256(b + ts.to_bytes(8, "little")).digest(),
+             "stubbed")
+            for idx, ts in enumerate(range(0, dur, every_ms))
+        ]
 
-    return media.select(
-        "content_sha256", "media_type", "content", "meta_duration_ms"
-    ).mapInPandas(gen, schema=FRAME_SCHEMA)
+    return row_stage(media, [*_MEDIA_COLS, "meta_duration_ms"], per_row,
+                     FRAME_SCHEMA)
 
 
 def media_fixture_rows(n: int = 32) -> list:

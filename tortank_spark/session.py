@@ -12,8 +12,9 @@ multi-executor cluster:
   would size this to ~2-3x total cores.
 * Arrow maxRecordsPerBatch stays at the 10k default: benchmarking showed
   2k batches double extraction wall time at local[32] (more Python
-  round-trips per partition); lower it per-job only for multi-MB binary
-  blobs (see multimodal.py).
+  round-trips per partition); lower it on the session only for a job
+  over multi-MB binary blobs (multimodal.py's stages take no batch-size
+  option).
 """
 
 from __future__ import annotations

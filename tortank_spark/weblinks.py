@@ -4,9 +4,10 @@ graph is what pagerank/harmonic/hits/kcore (graph.py) consume at web
 scale, and tortank has no analogue (single-document model); this is
 the Common-Crawl-style "web graph product" stage of the north rule.
 
-* ``extract_links``: one Arrow-batched ``mapInPandas`` stage over
-  (url, text) that runs the shared tag scanner (htmlscan.py) and
-  emits (url, href, rel, anchor) per ``<a href>`` — anchor text
+* ``extract_links``: one ``extract.row_stage`` (a single
+  ``mapInArrow`` stage) over (url, text) that runs the shared tag
+  scanner (htmlscan.py) per page and emits (url, href, rel, anchor)
+  per ``<a href>`` (a page without one emits no row): anchor text
   whitespace-normalized like the RDFa text-content rule, nofollow
   surfaced via ``rel`` so the ranking layer can weight it. Relative
   hrefs are resolved against the page url's scheme://host (path-level
@@ -24,15 +25,13 @@ celebrity host pair collapses map-side before the exchange.
 
 from __future__ import annotations
 
-import hashlib
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .extract import row_stage
 from .htmlscan import WS_RE, scan_html
 
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
@@ -103,16 +102,8 @@ def extract_page_links(page_url: str, html: str) -> list[tuple]:
 
 def extract_links(pages: DataFrame) -> DataFrame:
     """pages(url, text, ...) -> (url, href, rel, anchor)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for url, text in zip(pdf["url"].values, pdf["text"].values):
-                rows.extend(extract_page_links(url, text))
-            yield pd.DataFrame(
-                rows, columns=["url", "href", "rel", "anchor"])
-
-    return pages.select("url", "text").mapInPandas(gen, schema=LINKS_SCHEMA)
+    return row_stage(pages, ["url", "text"], extract_page_links,
+                     LINKS_SCHEMA)
 
 
 def _host(col):
