@@ -640,8 +640,8 @@ LIMIT 50
 def _q_filter_decision(spark, sf_dir):
     """The corpus-cleaning gate: keep/drop + first-failing-rule reason
     (too_short -> low_stopword -> lang_und) per document
-    (textops.filter_decision over quality_features + the Arrow
-    language-ID stage). FULL value oracle replays the ladder with
+    (textops.filter_decision over quality_features + the column-
+    expression language ID). FULL value oracle replays the ladder with
     unrounded ratios."""
     from tortank_spark.textops import filter_decision
 
@@ -663,15 +663,18 @@ def _q_quality(spark, sf_dir):
 
 def _text_oracles() -> dict[str, str]:
     """DuckDB twins for the text operators, generated from the SAME
-    stopword profiles the Spark UDFs use (tortank_spark.textops) so the
-    two sides cannot drift. Semantics pinned:
+    stopword profiles the Spark column expressions use
+    (tortank_spark.textops) so the two sides cannot drift. Semantics
+    pinned:
     * quality: Spark array_intersect and DuckDB list_intersect both
       return DISTINCT common elements; \\p{Punct} (Java) and [[:punct:]]
       (RE2) are the same ASCII set.
-    * lang-id: best profile by distinct-stopword hits with
-      insertion-order tie-break (en,fr,de,es,nl) — the CASE ladder
-      below reproduces it exactly (an earlier language that ties the
-      max satisfies its >= row first).
+    * lang-id: best profile by distinct-stopword hits over '\\s+'
+      tokens (neither Java regex nor RE2 counts a non-ASCII space as
+      \\s), with insertion-order tie-break (en,fr,de,es,nl) — the CASE
+      ladder below reproduces it exactly (an earlier language that ties
+      the max satisfies its >= row first). A NULL text gives 'nl' here
+      and 'und' in Spark; the documents table has none.
     """
     from tortank_spark.textops import _LANG_PROFILES
 

@@ -5,10 +5,12 @@ operators and assert the plan properties we design for:
 * filters push down to the scan (PushedFilters)
 * the alias-dict / canonical-map joins are BroadcastHashJoin
 * whole-stage codegen covers the relational operators
-* every page extractor and per-row kernel (out-links, MinHash and
-  SimHash signatures, the three media stages) plans to one MapInArrow,
-  no MapInPandas and no Exchange, and so do a pipeline bucket's triples
-  in both syntax modes
+* every page extractor, per-row kernel (out-links, MinHash and
+  SimHash signatures, the three media stages) and numpy batch stage
+  (winnow fingerprints, LSH candidates, IVF assignment, embedding
+  bands) plans to one MapInArrow, no MapInPandas and no Exchange, and
+  so do a pipeline bucket's triples in both syntax modes
+* language ID and the cleaning gate plan no Python stage at all
 """
 
 import os
@@ -19,6 +21,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+import numpy as np
 import pyspark.sql.functions as F
 
 from tortank_spark.session import get_spark
@@ -70,9 +73,12 @@ def main():
     print("   scan reads:", [l.strip() for l in p.splitlines()
                              if "ReadSchema" in l][:1])
 
-    # 1b. every page extractor and per-row kernel is ONE Arrow row
-    # stage: one MapInArrow, no pandas stage, no shuffle
-    from tortank_spark.dedup import minhash_signatures, simhash_signatures
+    # 1b. every page extractor, per-row kernel and numpy batch stage is
+    # ONE Arrow stage: one MapInArrow, no pandas stage, no shuffle; and
+    # language ID (alone and in the cleaning gate) has no Python stage
+    from tortank_spark.dedup import (
+        _embedding_band_keys, minhash_signatures, simhash_signatures,
+    )
     from tortank_spark.extract import extract_embedded
     from tortank_spark.jsonld import extract_jsonld
     from tortank_spark.microdata import extract_microdata
@@ -80,16 +86,34 @@ def main():
         extract_features, make_media_table, resize_images, sample_frames,
     )
     from tortank_spark.rdfa import extract_rdfa
+    from tortank_spark.similarity import (
+        ivf_assign_inline, lsh_multitable_candidates,
+    )
+    from tortank_spark.textops import (
+        detect_language, filter_decision, winnow_doc_fingerprint_set,
+        winnow_fingerprints,
+    )
     from tortank_spark.weblinks import extract_links
 
     media = make_media_table(spark)
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    dim = len(emb.first()["embedding"])
     stages = [(fn, fn(pages)) for fn in (
         extract_triples, extract_jsonld, extract_rdfa, extract_microdata,
         extract_embedded, extract_links)]
     stages += [(fn, fn(pages, "url"))
-               for fn in (minhash_signatures, simhash_signatures)]
+               for fn in (minhash_signatures, simhash_signatures,
+                          winnow_fingerprints, winnow_doc_fingerprint_set)]
     stages += [(fn, fn(media))
                for fn in (extract_features, resize_images, sample_frames)]
+    stages += [
+        (lsh_multitable_candidates,
+         lsh_multitable_candidates(emb, "embedding", [1.0] * dim)),
+        (ivf_assign_inline,
+         ivf_assign_inline(emb, "embedding", np.eye(dim)[:4])),
+        (_embedding_band_keys,
+         _embedding_band_keys(emb, "vec_id", "embedding", 8, 12)),
+    ]
     for fn, df in stages:
         p = plan_of(df)
         tree = p.split("\n\n")[0]
@@ -98,6 +122,14 @@ def main():
         print(f"{'ok  ' if one_stage else 'FAIL'} {fn.__name__} one "
               "MapInArrow, no MapInPandas, no Exchange")
         ok &= one_stage
+    docs = pages.withColumnRenamed("url", "doc_id")
+    for fn in (detect_language, filter_decision):
+        p = plan_of(fn(docs))
+        no_python = not any(n in p for n in (
+            "MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"))
+        print(f"{'ok  ' if no_python else 'FAIL'} {fn.__name__} has no "
+              "Python stage")
+        ok &= no_python
 
     # 1c. a pipeline bucket's triples come straight off that stage:
     # one MapInArrow and no shuffle (no bucket-wide distinct) for both

@@ -1,11 +1,9 @@
 """End-to-end extraction gate: pages -> mapInArrow parse -> triples,
 compared against the reference goldens with the reference's own
-set-difference semantics (P/R must be 1.0 on the fixture corpus), plus
-the byte-identical text passthrough invariant from BASELINE.json. The
+set-difference semantics (P/R must be 1.0 on the fixture corpus). The
 parity tests need the reference corpus; the rest run on the synthetic
-page table."""
-
-import hashlib
+page table. The byte-identical text passthrough invariant from
+BASELINE.json is checked on the landed page table in test_pipeline."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -13,7 +11,7 @@ import pytest
 from tortank_spark import fixtures
 from tortank_spark.fixtures import REF_FIXTURE_DIR
 from tortank_spark.compare import pr_overall, pr_per_url
-from tortank_spark.extract import doc_metrics, extract_triples, triples_only
+from tortank_spark.extract import extract_triples, triples_only
 
 
 @pytest.mark.needs_reference
@@ -75,18 +73,6 @@ def test_broken_page_quarantined_not_fatal(spark):
     assert bad[0]["error"]
     # good rows unaffected
     assert triples_only(extracted).count() > 0
-
-
-def test_text_byte_fidelity_per_url(spark):
-    """BASELINE.json input_hint: extracted text byte-identical per url.
-    The pipeline never rewrites pages.text; the metrics table carries a
-    sha1 witness which must match a driver-side recomputation."""
-    pages = fixtures.make_pages(spark, n_pages=40)
-    metrics = {r["url"]: r for r in doc_metrics(pages).collect()}
-    for url, text in pages.select("url", "text").collect():
-        want_sha = hashlib.sha1(text.encode("utf-8")).hexdigest()
-        assert metrics[url]["text_sha1"] == want_sha
-        assert metrics[url]["n_chars"] == len(text)
 
 
 def test_salted_bnode_labels_globally_unique(spark):

@@ -267,7 +267,30 @@ def test_lsh_ann_finds_self_bucket(spark):
     assert top and top[0]["vec_id"] == 7 and top[0]["cosine"] == 1.0
 
 
+def test_vector_matrix_matches_per_row_stack():
+    """A batch's vector column is read as one matrix equal to stacking
+    its rows — also for a sliced array, whose child values start
+    mid-buffer — and a batch holding a null or ragged vector fails
+    rather than shift the rows after it."""
+    import numpy as np
+    import pyarrow as pa
+
+    from tortank_spark.similarity import vector_matrix
+
+    vecs = pa.array([[(i * 3 + j) / 7 for j in range(3)] for i in range(5)],
+                    type=pa.list_(pa.float32()))[1:4]
+    want = np.stack([np.asarray(v, dtype=np.float64)
+                     for v in vecs.to_pylist()])
+    assert np.array_equal(vector_matrix(vecs), want)
+    for bad in ([[1.0, 2.0], None], [[1.0, 2.0], [3.0]]):
+        with pytest.raises(ValueError):
+            vector_matrix(pa.array(bad, type=pa.list_(pa.float32())))
+
+
 def test_textops_counts_and_quality(spark):
+    import duckdb
+
+    import __spark_entry__ as entrymod
     from tortank_spark.textops import (
         detect_language,
         doc_fingerprint,
@@ -284,20 +307,34 @@ def test_textops_counts_and_quality(spark):
             # ("der"): the tie must resolve by profile insertion order
             # (fr precedes de) — pinned against the oracle's >=-ladder
             (4, "le der tiebreak row"),
+            # an interior em space / NBSP is not a token break: neither
+            # Java regex nor RE2 counts a non-ASCII space as "\s"
+            (5, "the\u2003of"),
+            (6, "the\u00a0of"),
+            (7, None),
         ],
         "doc_id long, text string",
     )
     counts = {r["doc_id"]: r["n"] for r in docs.select(
         "doc_id", token_count(F.col("text")).alias("n")).collect()}
-    assert counts == {1: 6, 2: 11, 3: 0, 4: 4}
+    assert counts == {1: 6, 2: 11, 3: 0, 4: 4, 5: 1, 6: 1, 7: None}
     q = quality_features(docs).filter(F.col("doc_id") == 1).collect()[0]
     assert q["q_n_tokens"] == 6 and q["q_stopword_ratio"] > 0
     langs = {r["doc_id"]: r["lang_pred"]
              for r in detect_language(docs).collect()}
     assert langs[1] == "en" and langs[2] == "fr"
     assert langs[3] == "und" and langs[4] == "fr"
+    assert langs[5] == langs[6] == langs[7] == "und"
+    # the DuckDB oracle agrees on every non-null text (its SQL gives a
+    # NULL text 'nl', where Spark gives 'und')
+    con = duckdb.connect()
+    con.register("documents", docs.filter(F.col("text").isNotNull())
+                 .toPandas())
+    oracle = dict(con.execute(
+        entrymod._text_oracles()["text_lang_id"]).fetchall())
+    assert oracle == {i: lang for i, lang in langs.items() if i != 7}
     fps = docs.select(doc_fingerprint(F.col("text")).alias("fp")).collect()
-    assert len({r["fp"] for r in fps}) == 4
+    assert len({r["fp"] for r in fps}) == 6
 
 
 def test_multimodal_feature_plumbing(spark):
@@ -618,9 +655,19 @@ def test_row_kernels_emit_no_rows_on_empty_input(spark):
     """A row kernel may emit no row for a row: a page without
     ``<a href>``, a page with null text and a media table whose only
     video has no duration give zero rows with the declared schema, and
-    partitions that hold no rows do not fail the stage."""
+    partitions that hold no rows do not fail the stage — nor any of
+    the numpy batch stages."""
+    import numpy as np
+
+    from tortank_spark.dedup import _embedding_band_keys
     from tortank_spark.multimodal import (
         FRAME_SCHEMA, MEDIA_SCHEMA, media_fixture_rows, sample_frames,
+    )
+    from tortank_spark.similarity import (
+        ivf_assign_inline, lsh_multitable_candidates,
+    )
+    from tortank_spark.textops import (
+        winnow_doc_fingerprint_set, winnow_fingerprints,
     )
     from tortank_spark.weblinks import LINKS_SCHEMA, extract_links
 
@@ -640,6 +687,26 @@ def test_row_kernels_emit_no_rows_on_empty_input(spark):
     media = spark.createDataFrame(sc.parallelize(no_frames, 8), MEDIA_SCHEMA)
     frames = sample_frames(media)
     assert frames.schema == FRAME_SCHEMA and frames.collect() == []
+
+    # the numpy batch stages over tables whose partitions hold no row
+    docs = spark.createDataFrame(sc.parallelize([], 4),
+                                 "doc_id long, text string")
+    emb = spark.createDataFrame(sc.parallelize([], 4),
+                                "vec_id long, embedding array<float>")
+    for out, schema in [
+        (winnow_fingerprints(docs, "doc_id"),
+         "struct<doc_id:bigint,pos:bigint,fp:bigint>"),
+        (winnow_doc_fingerprint_set(docs, "doc_id"),
+         "struct<doc_id:bigint,fp:bigint>"),
+        (lsh_multitable_candidates(emb, "embedding", [1.0, 0.0]),
+         "struct<vec_id:bigint>"),
+        (ivf_assign_inline(emb, "embedding", np.eye(2)),
+         "struct<vec_id:bigint,embedding:array<float>,list_id:bigint>"),
+        (_embedding_band_keys(emb, "vec_id", "embedding", 4, 3),
+         "struct<vec_id:bigint,key:bigint>"),
+    ]:
+        assert out.rdd.getNumPartitions() == 4
+        assert out.schema.simpleString() == schema and out.collect() == []
 
 
 def test_ivf_ann_planted_clusters(spark):

@@ -34,6 +34,11 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     stats = run_pipeline(spark, pages, out, n_buckets=2, alias_dict=alias)
     assert stats["buckets_ran"] == [0, 1]
     assert stats["n_canonical_triples"] > 0
+    # byte fidelity (BASELINE.json input_hint): the landed page table
+    # the buckets extract from holds every url's text unchanged
+    landed = spark.read.parquet(out + "/pages_bucketed")
+    assert dict(landed.select("url", "text").collect()) == dict(
+        pages.select("url", "text").collect())
 
     assert stats["global_phase"] == "ran"
 

@@ -91,8 +91,10 @@ def test_extraction_prunes_scan_to_url_text(spark, pages_parquet):
     assert "html" not in read_schema and "warc_ts" not in read_schema
 
 
-def _row_kernel(spark, stage):
-    from tortank_spark import dedup, multimodal, weblinks
+def _map_stage(spark, stage):
+    import numpy as np
+
+    from tortank_spark import dedup, multimodal, similarity, textops, weblinks
 
     docs = spark.createDataFrame(
         [(i, f'<a href="/p{i}">tok{i}</a> tok{i+1} tok{i+2}')
@@ -100,6 +102,10 @@ def _row_kernel(spark, stage):
         "doc_id long, text string",
     )
     media = multimodal.make_media_table(spark, 6)
+    emb = spark.createDataFrame(
+        [(i, [float((i * j) % 7 - 3) for j in range(4)]) for i in range(8)],
+        "vec_id long, embedding array<float>",
+    )
     return {
         "extract_links": lambda: weblinks.extract_links(
             docs.selectExpr("concat('http://h.example/', doc_id) AS url",
@@ -109,21 +115,50 @@ def _row_kernel(spark, stage):
         "extract_features": lambda: multimodal.extract_features(media),
         "resize_images": lambda: multimodal.resize_images(media),
         "sample_frames": lambda: multimodal.sample_frames(media),
+        "winnow_fingerprints": lambda: textops.winnow_fingerprints(
+            docs, "doc_id"),
+        "winnow_doc_fingerprint_set": lambda:
+            textops.winnow_doc_fingerprint_set(docs, "doc_id"),
+        "lsh_multitable_candidates": lambda:
+            similarity.lsh_multitable_candidates(emb, "embedding",
+                                                 [1.0, 0.0, 0.0, 0.0]),
+        "ivf_assign_inline": lambda: similarity.ivf_assign_inline(
+            emb, "embedding", np.eye(4)),
+        "embedding_band_keys": lambda: dedup._embedding_band_keys(
+            emb, "vec_id", "embedding", 4, 3),
     }[stage]()
 
 
 @pytest.mark.parametrize("stage", [
     "extract_links", "minhash_signatures", "simhash_signatures",
     "extract_features", "resize_images", "sample_frames",
+    "winnow_fingerprints", "winnow_doc_fingerprint_set",
+    "lsh_multitable_candidates", "ivf_assign_inline",
+    "embedding_band_keys",
 ])
 def test_row_kernels_plan_one_map_in_arrow(spark, stage):
-    """Every per-row Python kernel runs in ``extract.row_stage``: its
-    plan holds exactly one MapInArrow (one Arrow batch loop) and no
-    MapInPandas (no pandas frame built from row tuples)."""
-    plan = plan_of(_row_kernel(spark, stage))
+    """Every Python map stage runs in ``extract.batch_stage`` (the
+    per-row kernels through ``row_stage``): its plan holds exactly one
+    MapInArrow (one Arrow batch loop) and no MapInPandas (no pandas
+    frame built per batch)."""
+    plan = plan_of(_map_stage(spark, stage))
     tree = plan.split("\n\n")[0]
     assert sum("MapInArrow" in ln for ln in tree.splitlines()) == 1, tree
     assert "MapInPandas" not in plan
+
+
+@pytest.mark.parametrize("op", ["detect_language", "filter_decision"])
+def test_language_id_plans_no_python_stage(spark, op):
+    """Language ID and the cleaning gate built on it are column
+    expressions: no Python map or eval node in the plan."""
+    from tortank_spark import textops
+
+    docs = spark.createDataFrame([(1, "the cat is in the hat")],
+                                 "doc_id long, text string")
+    plan = plan_of(getattr(textops, op)(docs))
+    for node in ("MapInArrow", "MapInPandas", "ArrowEvalPython",
+                 "BatchEvalPython"):
+        assert node not in plan, plan
 
 
 def test_pattern_filter_pushes_down(spark, pages_parquet):

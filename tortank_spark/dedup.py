@@ -14,8 +14,8 @@ Scale notes: candidate generation is groupBy(bucket) + self-join within
 bucket — worst case quadratic per bucket, so bucket width (bands/rows)
 is the skew knob; AQE skew-join handles residual hot buckets. MinHash
 and SimHash signatures are each computed in one ``extract.row_stage``
-(a single Arrow stage) over the text column; the embedding bands stay a
-per-batch pandas matrix stage.
+(a single Arrow stage) over the text column; the embedding bands are
+one ``extract.batch_stage`` over a per-batch vector matrix.
 """
 
 from __future__ import annotations
@@ -23,10 +23,8 @@ from __future__ import annotations
 import hashlib
 import re
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.types import (
@@ -36,7 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .extract import row_stage
+from .extract import batch_stage, repeat_each, row_stage
 from .textops import doc_fingerprint
 
 _TOKEN_RE = re.compile(r"\s+")
@@ -397,6 +395,31 @@ def embedding_neardup_pairs(
     )
 
 
+def _embedding_band_keys(
+    emb: DataFrame, id_col: str, vec_col: str, n_bits: int, n_tables: int,
+) -> DataFrame:
+    """(id, key): one row per vector and LSH table, keyed
+    ``bucket + (table << n_bits)`` so every table has its own key
+    space — the bands of ``embedding_neardup_lsh``, one
+    ``batch_stage``."""
+    from .similarity import lsh_table_buckets, vector_matrix
+
+    schema = StructType(
+        [
+            StructField(id_col, emb.schema[id_col].dataType, False),
+            StructField("key", LongType(), False),
+        ]
+    )
+    offsets = np.arange(n_tables, dtype=np.int64) << n_bits
+
+    def per_batch(ids, vecs):
+        keys = lsh_table_buckets(vector_matrix(vecs), n_bits, n_tables)
+        return (repeat_each(ids, n_tables),
+                (keys + offsets).ravel())
+
+    return batch_stage(emb, [id_col, vec_col], per_batch, schema)
+
+
 def embedding_neardup_lsh(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     threshold: float = 0.9, n_bits: int = 8, n_tables: int = 12,
@@ -416,34 +439,10 @@ def embedding_neardup_lsh(
     Cache lifetime follows minhash_dedup_pairs: the bucket table feeds
     both self-join sides, so it is persisted, the small pair output is
     materialized and the bucket cache released before returning."""
-    from .similarity import lsh_table_buckets
-
-    schema = StructType(
-        [
-            StructField(id_col, emb.schema[id_col].dataType, False),
-            StructField("key", LongType(), False),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
-            )
-            # disjoint key space per table: key = table * 2^b + bucket
-            keys = lsh_table_buckets(mat, n_bits, n_tables) + (
-                np.arange(n_tables, dtype=np.int64) << n_bits
-            )
-            ids = np.repeat(pdf[id_col].values, n_tables)
-            yield pd.DataFrame({id_col: ids, "key": keys.ravel()})
-
     # persist: the banded keys feed both sides of the self-join —
     # uncached, the Python bucketing stage runs twice
-    banded = emb.select(id_col, vec_col).mapInPandas(
-        gen, schema=schema
-    ).persist()
+    banded = _embedding_band_keys(emb, id_col, vec_col, n_bits,
+                                  n_tables).persist()
     l, r = banded.alias("l"), banded.alias("r")
     cand = (
         l.join(

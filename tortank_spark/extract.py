@@ -9,9 +9,12 @@ document-scoped (prefix redefinition mid-doc, turtle_doc.rs:489-540) so
 a document is the natural unit of work, and documents are rows. That
 stage is ``row_stage``, which every per-row Python kernel of the engine
 runs in (out-links, MinHash/SimHash signatures and the media stages
-too). Arrow moves batches JVM<->Python; the per-doc parse is pure
-Python but amortized across whole batches — there is no per-row Python
-UDF dispatch and no pandas conversion.
+too). ``row_stage`` is one form of ``batch_stage``, the engine's only
+Python map stage: the numpy stages (winnow fingerprints, LSH and IVF
+buckets, embedding bands) hand it whole-batch columns instead. Arrow
+moves batches JVM<->Python; the per-doc parse is pure Python but
+amortized across whole batches — there is no per-row Python UDF
+dispatch and no pandas conversion.
 
 Scale design (100 TB / 10^12 docs):
 * embarrassingly parallel — no shuffle; parallelism = input splits.
@@ -27,9 +30,10 @@ Scale design (100 TB / 10^12 docs):
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Sequence
 from functools import partial
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
@@ -44,6 +48,39 @@ def _salt(url: str) -> str:
     return hashlib.sha1(url.encode("utf-8", "surrogatepass")).hexdigest()[:12] + "-"
 
 
+def batch_stage(
+    df: DataFrame,
+    cols: list[str],
+    per_batch: Callable[..., Sequence],
+    schema: StructType,
+) -> DataFrame:
+    """Run ``per_batch(*arrays)`` over every Arrow batch of
+    ``df.select(*cols)`` as one ``mapInArrow`` stage: it gets the
+    batch's pyarrow columns and returns one column per ``schema``
+    field. A pyarrow ``Array`` passes through as is; anything else
+    (a list, a numpy array) becomes ``pa.array(c, type=t)``, typed
+    from the schema. A batch with no rows yields nothing, so
+    ``per_batch`` never sees one; nothing is held across batches."""
+    names = schema.fieldNames()
+    types = [f.type for f in to_arrow_schema(schema)]
+
+    def run(batches):
+        for rb in batches:
+            if rb.num_rows:
+                yield pa.RecordBatch.from_arrays(
+                    [c if isinstance(c, pa.Array) else pa.array(c, type=t)
+                     for c, t in zip(per_batch(*rb.columns), types)], names)
+
+    return df.select(*cols).mapInArrow(run, schema=schema)
+
+
+def repeat_each(values: pa.Array, counts: int | Sequence[int]) -> pa.Array:
+    """``values[i]`` repeated ``counts[i]`` times (or ``counts`` times
+    when it is one int), keeping its Arrow type: a batch key fanned
+    out to its output rows."""
+    return values.take(np.repeat(np.arange(len(values)), counts))
+
+
 def row_stage(
     df: DataFrame,
     cols: list[str],
@@ -51,26 +88,23 @@ def row_stage(
     schema: StructType,
 ) -> DataFrame:
     """Run ``per_row(*values)`` over every row of ``df.select(*cols)``
-    as one ``mapInArrow`` stage; the call returns the row's output
-    tuples in ``schema`` order, and a row may return none.
+    as one ``batch_stage``; the call returns the row's output tuples in
+    ``schema`` order, and a row may return none.
 
-    Each Arrow batch is turned around on its own: one Python list per
-    output column (a list of row tuples costs ~2x on array
-    construction — this is the per-triple hot path), one ``pa.array``
-    per column typed from the schema, nothing held across batches."""
+    Each batch keeps one Python list per output column (a list of row
+    tuples costs ~2x on array construction — this is the per-triple
+    hot path), and ``batch_stage`` turns each list into one
+    ``pa.array``."""
     names = schema.fieldNames()
-    types = [f.type for f in to_arrow_schema(schema)]
 
-    def run(batches):
-        for rb in batches:
-            out = [[] for _ in names]
-            for values in zip(*(c.to_pylist() for c in rb.columns)):
-                for col, vals in zip(out, zip(*per_row(*values))):
-                    col.extend(vals)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t) for c, t in zip(out, types)], names)
+    def per_batch(*arrays):
+        out = [[] for _ in names]
+        for values in zip(*(c.to_pylist() for c in arrays)):
+            for col, vals in zip(out, zip(*per_row(*values))):
+                col.extend(vals)
+        return out
 
-    return df.select(*cols).mapInArrow(run, schema=schema)
+    return batch_stage(df, cols, per_batch, schema)
 
 
 def doc_stage(
@@ -138,28 +172,6 @@ def doc_lineage(extracted: DataFrame) -> DataFrame:
         F.count("s").alias("n_triples"),
         F.min(F.col("parse_ok").cast("int")).cast("boolean").alias("parse_ok"),
         F.first("error", ignorenulls=True).alias("error"),
-    )
-
-
-def doc_metrics(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
-    """Per-document lineage/metrics rows: parse status, triple count,
-    byte-fidelity witness (sha1 of text) — the per-row invariant of
-    BASELINE.json input_hint is checked against this table.
-
-    Standalone auditing entry point: it runs extract_triples. A job
-    that already extracts takes ``doc_lineage`` of those rows instead
-    (as pipeline._run_bucket does)."""
-    text = F.coalesce(F.col("text"), F.lit(""))
-    witness = pages.select(
-        "url",
-        F.sha1(F.encode(text, "UTF-8")).alias("text_sha1"),
-        F.length(text).alias("n_chars"),
-    )
-    return (
-        doc_lineage(extract_triples(pages, fixture_mode))
-        .join(witness, "url")
-        .select("url", "parse_ok", "n_triples", "error", "text_sha1",
-                "n_chars")
     )
 
 

@@ -14,13 +14,13 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+
+from .extract import batch_stage
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -68,6 +68,19 @@ def _table_planes(dim: int, n_bits: int, table: int) -> np.ndarray:
     return rng.normal(size=(n_bits, dim)).astype(np.float64)
 
 
+def vector_matrix(vecs: pa.Array) -> np.ndarray:
+    """One Arrow batch's vector column -> its (n, dim) float64 matrix,
+    read from the flat child values in one conversion (no per-row
+    array). ``batch_stage`` never passes a 0-row batch, so ``n > 0``
+    and the reshape can infer ``dim``; a null or ragged vector fails
+    the batch rather than shift the rows after it."""
+    dims = np.diff(vecs.offsets.to_numpy())
+    if vecs.null_count or dims.min() != dims.max():
+        raise ValueError("a vector batch needs non-null vectors of one dim")
+    flat = vecs.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(vecs), -1)
+
+
 def lsh_table_buckets(mat: np.ndarray, n_bits: int, n_tables: int) -> np.ndarray:
     """(n, dim) vectors -> (n, n_tables) int64 random-hyperplane LSH
     buckets: bit i of table t's bucket is the sign of the vector against
@@ -89,7 +102,7 @@ def lsh_multitable_candidates(
     """Multi-table LSH candidate set: L independent hyperplane tables;
     a vector is a candidate if it shares the query's bucket in ANY
     table (collision prob 1-(1-p^b)^L). All L buckets are computed in
-    ONE vectorized pandas stage (``lsh_table_buckets`` per Arrow batch).
+    ONE ``extract.batch_stage`` (``lsh_table_buckets`` per Arrow batch).
     At scale each table's bucket column is a partition key; b grows
     with log(n) and L is the recall knob."""
     qbuckets = lsh_table_buckets(
@@ -100,17 +113,12 @@ def lsh_multitable_candidates(
         [StructField(id_col, df.schema[id_col].dataType, False)]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
-            )
-            hit = (lsh_table_buckets(mat, n_bits, n_tables) == qbuckets).any(
-                axis=1
-            )
-            yield pd.DataFrame({id_col: pdf[id_col].values[hit]})
+    def per_batch(ids, vecs):
+        hit = (lsh_table_buckets(vector_matrix(vecs), n_bits, n_tables)
+               == qbuckets).any(axis=1)
+        return (ids.filter(pa.array(hit)),)
 
-    return df.select(id_col, vec_col).mapInPandas(gen, schema=schema)
+    return batch_stage(df, [id_col, vec_col], per_batch, schema)
 
 
 def lsh_multitable_topk(
@@ -207,8 +215,9 @@ def ivf_assign(
 def ivf_assign_inline(
     df: DataFrame, vec_col: str, centroids: np.ndarray
 ) -> DataFrame:
-    """All of ``df``'s columns + ``list_id``, computed IN the same
-    Arrow pass (no join): the build-path variant of ``ivf_assign``.
+    """All of ``df``'s columns, passed through untouched, + ``list_id``,
+    computed IN the same Arrow pass (no join): the build-path variant
+    of ``ivf_assign``.
     At 10^9 vectors this is the difference between one narrow map stage
     and a full shuffle join of the vector table against its own
     assignment."""
@@ -217,18 +226,14 @@ def ivf_assign_inline(
     schema = StructType(
         list(df.schema.fields) + [StructField("list_id", LongType(), False)]
     )
+    cols = df.columns
+    vi = cols.index(vec_col)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
-            )
-            d = cnorm[None, :] - 2.0 * (mat @ cent.T)
-            out = pdf.copy()
-            out["list_id"] = d.argmin(axis=1)
-            yield out
+    def per_batch(*arrays):
+        d = cnorm[None, :] - 2.0 * (vector_matrix(arrays[vi]) @ cent.T)
+        return (*arrays, d.argmin(axis=1))
 
-    return df.mapInPandas(gen, schema=schema)
+    return batch_stage(df, cols, per_batch, schema)
 
 
 def ivf_topk(

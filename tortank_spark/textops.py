@@ -2,21 +2,21 @@
 ``documents`` table: token counting, quality scoring, fingerprinting,
 language identification.
 
-Everything except language-ID is pure column expressions (JVM,
-whole-stage codegen). Language-ID is an Arrow-batched pandas UDF using
-a tiny built-in stopword profile — the classic n-gram/stopword
-heuristic, no external models.
+Everything except the two winnow fingerprint stages is pure column
+expressions (JVM, whole-stage codegen), language ID included: a tiny
+built-in stopword profile — the classic n-gram/stopword heuristic, no
+external models. The winnow stages are numpy kernels run in
+``extract.batch_stage``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructField, StructType
+
+from .extract import batch_stage, repeat_each
 
 _WS = r"\s+"
 
@@ -28,6 +28,10 @@ _LANG_PROFILES = {
     "es": {"el", "la", "de", "y", "los", "que", "un", "una", "es", "en"},
     "nl": {"de", "het", "een", "en", "van", "is", "dat", "op", "te", "niet"},
 }
+
+
+def _profile(lang: str) -> Column:
+    return F.array([F.lit(w) for w in sorted(_LANG_PROFILES[lang])])
 
 
 def token_count(text: Column) -> Column:
@@ -45,9 +49,8 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     n_chars = F.length(t)
     n_tokens = token_count(t)
     n_punct = F.length(F.regexp_replace(t, r"[^\p{Punct}]", ""))
-    stop = F.array([F.lit(w) for w in sorted(_LANG_PROFILES["en"])])
     toks = F.split(F.lower(F.trim(t)), _WS)
-    n_stop = F.size(F.array_intersect(toks, stop))
+    n_stop = F.size(F.array_intersect(toks, _profile("en")))
     return df.select(
         "*",
         n_chars.alias("q_n_chars"),
@@ -185,7 +188,7 @@ def winnow_fingerprints(
     fingerprint. Hash comparisons happen in uint64 on both engines;
     the emitted fp is the two's-complement int64 of the uint64 hash.
 
-    Scale shape: one Arrow pandas stage, no shuffle, and the per-doc
+    Scale shape: one ``extract.batch_stage``, no shuffle, and the per-doc
     work is ~k+3 numpy vector ops over the codepoint array (no
     per-gram Python-level hashing — the round-4 md5 formulation cost
     one interpreter hashlib call per character, the repo's most
@@ -202,36 +205,22 @@ def winnow_fingerprints(
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # per-doc RESULT ARRAYS, concatenated once per batch: the
-            # round-4 shape collected (pos, fp) pairs through a Python
-            # set + per-element appends — on the 1.9 MB heavy doc that
-            # is ~1.7M interpreter iterations (~11 s measured, dwarfing
-            # even the old md5 loop)
-            pos_parts, fp_parts, counts = [], [], []
-            for text in pdf[text_col].values:
-                pos, hs = _winnow_select(text, k, w)
-                pos_parts.append(pos)
-                # uint64 -> int64 view IS the two's-complement reinterp
-                fp_parts.append(hs.view(np.int64))
-                counts.append(pos.size)
-            if not counts:
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col].values[:0],
-                     "pos": np.zeros(0, dtype=np.int64),
-                     "fp": np.zeros(0, dtype=np.int64)}
-                )
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].values, counts),
-                    "pos": np.concatenate(pos_parts),
-                    "fp": np.concatenate(fp_parts),
-                }
-            )
+    def per_batch(ids, texts):
+        # per-doc RESULT ARRAYS, concatenated once per batch: the
+        # round-4 shape collected (pos, fp) pairs through a Python set
+        # + per-element appends — on the 1.9 MB heavy doc that is
+        # ~1.7M interpreter iterations (~11 s measured, dwarfing even
+        # the old md5 loop)
+        pos_parts, fp_parts = [], []
+        for text in texts.to_pylist():
+            pos, hs = _winnow_select(text, k, w)
+            pos_parts.append(pos)
+            # uint64 -> int64 view IS the two's-complement reinterp
+            fp_parts.append(hs.view(np.int64))
+        return (repeat_each(ids, [p.size for p in pos_parts]),
+                np.concatenate(pos_parts), np.concatenate(fp_parts))
 
-    return df.select(id_col, text_col).mapInPandas(gen, schema=schema)
+    return batch_stage(df, [id_col, text_col], per_batch, schema)
 
 
 def winnow_doc_fingerprint_set(
@@ -256,27 +245,13 @@ def winnow_doc_fingerprint_set(
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fp_parts, counts = [], []
-            for text in pdf[text_col].values:
-                fps = np.unique(_winnow_select(text, k, w)[1])
-                fp_parts.append(fps.view(np.int64))
-                counts.append(fps.size)
-            if not counts:
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col].values[:0],
-                     "fp": np.zeros(0, dtype=np.int64)}
-                )
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].values, counts),
-                    "fp": np.concatenate(fp_parts),
-                }
-            )
+    def per_batch(ids, texts):
+        fp_parts = [np.unique(_winnow_select(t, k, w)[1]).view(np.int64)
+                    for t in texts.to_pylist()]
+        return (repeat_each(ids, [f.size for f in fp_parts]),
+                np.concatenate(fp_parts))
 
-    return df.select(id_col, text_col).mapInPandas(gen, schema=schema)
+    return batch_stage(df, [id_col, text_col], per_batch, schema)
 
 
 def winnow_dedup_pairs(
@@ -472,54 +447,24 @@ def winnow_contamination(
 def detect_language(
     df: DataFrame, text_col: str = "text", out_col: str = "lang_pred"
 ) -> DataFrame:
-    """Stopword-profile language ID as an Arrow pandas UDF (the n-gram
-    heuristic of SURVEY/brief; no per-row Python dispatch — batch-level
-    pandas string ops)."""
-    fields = df.schema.fields + [StructField(out_col, StringType(), True)]
-    schema = StructType(fields)
-    cols = [f.name for f in df.schema.fields]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        langs = list(_LANG_PROFILES)
-        for pdf in batches:
-            # fully columnar profile match: explode the token lists to
-            # one long frame, inner-merge against the (tiny) profile
-            # table, count distinct (row, lang) hits, take the argmax
-            # per row. (Round-4 looped rows in Python for the set
-            # intersection — constant tiny work per row, but the
-            # explode+merge keeps the whole batch in pandas C code.)
-            toks = pdf[text_col].fillna("").str.lower().str.split()
-            ex = toks.explode().dropna().reset_index()
-            ex.columns = ["_row", "_tok"]
-            prof = pd.DataFrame(
-                [(lang, t) for lang in langs for t in _LANG_PROFILES[lang]],
-                columns=["_lang", "_tok"],
-            )
-            hits = (
-                ex.drop_duplicates()
-                .merge(prof, on="_tok")
-                .groupby(["_row", "_lang"], sort=False)
-                .size()
-                .reset_index(name="_n")
-            )
-            if len(hits):
-                # tie-break = profile INSERTION order (en before fr
-                # before de ...), matching the oracle's >=-ladder and
-                # the round-4 loop's first-strict-max semantics
-                hits["_ord"] = hits["_lang"].map(
-                    {lang: i for i, lang in enumerate(langs)}
-                )
-                best = hits.sort_values(
-                    ["_n", "_ord"], ascending=[False, True], kind="stable"
-                ).drop_duplicates("_row").set_index("_row")["_lang"]
-            else:
-                best = pd.Series(dtype=object)
-            pdf[out_col] = (
-                pd.Series(pdf.index, index=pdf.index).map(best).fillna("und")
-            )
-            yield pdf[cols + [out_col]]
-
-    return df.mapInPandas(gen, schema=schema)
+    """Stopword-profile language ID (the n-gram heuristic of
+    SURVEY/brief) as column expressions, no Python stage: each
+    profile's hit count is the number of its stopwords among the
+    text's distinct ``\\s+`` tokens (``quality_features``' own
+    tokenization), and the first language in profile order (en, fr,
+    de, es, nl) whose count is the maximum wins — the oracle's CASE
+    ladder with its insertion-order tie-break. A text with no hit (or
+    a null text) is ``und``."""
+    toks = F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
+                   _WS)
+    hits = {lang: F.size(F.array_intersect(toks, _profile(lang)))
+            for lang in _LANG_PROFILES}
+    best = F.greatest(*hits.values())
+    pred = F.when(best == 0, F.lit("und"))
+    *ladder, last = hits
+    for lang in ladder:
+        pred = pred.when(hits[lang] == best, F.lit(lang))
+    return df.select("*", pred.otherwise(F.lit(last)).alias(out_col))
 
 
 def salient_terms(
@@ -622,8 +567,8 @@ def filter_decision(
     the decision a training-data pipeline actually materializes —
     keep/drop plus an auditable drop reason for corpus reporting.
 
-    One pass: quality features are column expressions, language ID is
-    the one Arrow stage, the ladder is a CASE expression. Thresholds
+    One pass of column expressions with no Python stage: quality
+    features, language ID and the ladder (a CASE expression). Thresholds
     compare IEEE doubles computed identically by any engine from the
     same integer counts, so the decision is value-hash stable."""
     q = quality_features(df, text_col)
