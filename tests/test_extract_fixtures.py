@@ -3,15 +3,21 @@ compared against the reference goldens with the reference's own
 set-difference semantics (P/R must be 1.0 on the fixture corpus). The
 parity tests need the reference corpus; the rest run on the synthetic
 page table. The byte-identical text passthrough invariant from
-BASELINE.json is checked on the landed page table in test_pipeline."""
+BASELINE.json is checked here on the text every extractor is handed,
+and on the landed page table in test_pipeline."""
+
+import hashlib
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import (
+    BooleanType, IntegerType, StringType, StructField, StructType,
+)
 
 from tortank_spark import fixtures
 from tortank_spark.fixtures import REF_FIXTURE_DIR
 from tortank_spark.compare import pr_overall, pr_per_url
-from tortank_spark.extract import extract_triples, triples_only
+from tortank_spark.extract import doc_stage, extract_triples, triples_only
 
 
 @pytest.mark.needs_reference
@@ -75,6 +81,36 @@ def test_broken_page_quarantined_not_fatal(spark):
     assert triples_only(extracted).count() > 0
 
 
+def test_text_byte_fidelity_per_url(spark):
+    """BASELINE.json input_hint: extracted text byte-identical per url.
+    The extraction stage hands every per-doc parser the page text
+    unchanged: a witness parser run through ``doc_stage`` reports the
+    sha1 and length of what it received, which must match a driver-side
+    recomputation."""
+    pages = fixtures.make_pages(spark, n_pages=40)
+
+    def witness(text, _prefix):
+        sha = hashlib.sha1(text.encode("utf-8")).hexdigest()
+        return [(sha, len(text))], None
+
+    schema = StructType([
+        StructField("url", StringType()),
+        StructField("text_sha1", StringType()),
+        StructField("n_chars", IntegerType()),
+        StructField("parse_ok", BooleanType()),
+        StructField("error", StringType()),
+    ])
+    got = {r["url"]: r for r in
+           doc_stage(pages, witness, schema, salt=True).collect()}
+    want = pages.select("url", "text").collect()
+    assert len(got) == len(want)
+    for url, text in want:
+        assert got[url]["text_sha1"] == hashlib.sha1(
+            text.encode("utf-8")).hexdigest()
+        assert got[url]["n_chars"] == len(text)
+        assert got[url]["parse_ok"]
+
+
 def test_salted_bnode_labels_globally_unique(spark):
     """Production mode salts labels by url hash: no bnode label may
     collide across documents (10^12-doc requirement scaled down)."""
@@ -105,7 +141,7 @@ def test_query_uuid_real_fixture(spark):
     import pyspark.sql.functions as F
 
     from tortank_spark.algebra import pattern_filter
-    from tortank_spark.extract import extract_triples, triples_only
+    from tortank_spark.extract import doc_stage, extract_triples, triples_only
 
     text = (REF_FIXTURE_DIR / "query" / "complemented.ttl").read_text(
         encoding="utf-8")
