@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from tortank_spark.session import ensure_parallelism as _fan
+from tortank_spark.textops import WS
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -33,6 +34,22 @@ EX = "http://example.org/"
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _sql_tokens(text: str) -> str:
+    """DuckDB twin of textops.tokens over the SQL expression ``text``
+    (callers lowercase it first). Every tokenizing oracle takes its
+    token list from here; RE2 reads textops.WS exactly as Java regex
+    and Python re do."""
+    return (f"list_filter(regexp_split_to_array({text}, '{WS}'),"
+            " x -> x <> '')")
+
+
+def _sql_token_text(text: str) -> str:
+    """The tokens of ``text`` joined by one space, '' when there are
+    none: Spark's concat_ws/array_join give '' for an empty array,
+    DuckDB's array_to_string gives NULL."""
+    return f"coalesce(array_to_string({_sql_tokens(text)}, ' '), '')"
 
 
 # ---------------------------------------------------------------- entry
@@ -385,7 +402,7 @@ def _q_repetition(spark, sf_dir):
     return repetition_signals(docs)
 
 
-_ORACLE_REPETITION = r"""
+_ORACLE_REPETITION = f"""
 WITH d AS (
   SELECT doc_id,
          CASE WHEN doc_id % 2 = 0
@@ -397,8 +414,7 @@ WITH d AS (
 base AS (
   SELECT doc_id,
          list_filter(string_split(text, chr(10)), x -> x <> '') AS ls,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     t -> t <> '') AS tk
+         {_sql_tokens("lower(text)")} AS tk
   FROM d
 ),
 tok AS (
@@ -616,8 +632,7 @@ def _oracle_tfidf_topk() -> str:
 WITH toks AS (
   SELECT doc_id, t.term AS term
   FROM documents,
-       unnest(list_filter(regexp_split_to_array(lower(trim(text)),
-                                                '\\s+'),
+       unnest(list_filter({_sql_tokens("lower(text)")},
                           t -> t IN ({terms}))) AS t(term)
 ),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
@@ -663,33 +678,30 @@ def _q_quality(spark, sf_dir):
 
 def _text_oracles() -> dict[str, str]:
     """DuckDB twins for the text operators, generated from the SAME
-    stopword profiles the Spark column expressions use
-    (tortank_spark.textops) so the two sides cannot drift. Semantics
-    pinned:
+    stopword profiles and token expression (``_sql_tokens``) the Spark
+    column expressions use (tortank_spark.textops) so the two sides
+    cannot drift. Semantics pinned:
     * quality: Spark array_intersect and DuckDB list_intersect both
       return DISTINCT common elements; \\p{Punct} (Java) and [[:punct:]]
       (RE2) are the same ASCII set.
-    * lang-id: best profile by distinct-stopword hits over '\\s+'
-      tokens (neither Java regex nor RE2 counts a non-ASCII space as
-      \\s), with insertion-order tie-break (en,fr,de,es,nl) — the CASE
-      ladder below reproduces it exactly (an earlier language that ties
-      the max satisfies its >= row first). A NULL text gives 'nl' here
-      and 'und' in Spark; the documents table has none.
+    * lang-id: best profile by distinct-stopword hits over the tokens
+      of the lowercased text (a NULL text reads as ''), with
+      insertion-order tie-break (en,fr,de,es,nl) — the CASE ladder
+      below reproduces it exactly (an earlier language that ties the
+      max satisfies its >= row first).
     """
     from tortank_spark.textops import _LANG_PROFILES
 
     def lst(lang):
         return "[" + ", ".join(f"'{w}'" for w in sorted(_LANG_PROFILES[lang])) + "]"
 
-    toks = (r"list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),"
-            r" t -> t <> '')")
+    toks = _sql_tokens("lower(text)")
+    n_tokens = f"len({_sql_tokens('text')})"
     quality = f"""
         WITH q AS (
           SELECT doc_id,
                  length(text) AS n_chars,
-                 CASE WHEN length(trim(text)) = 0 THEN 0
-                      ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                 END AS n_tokens,
+                 {n_tokens} AS n_tokens,
                  len(list_intersect(list_distinct({toks}), {lst("en")}))
                      AS n_stop
           FROM documents
@@ -708,7 +720,12 @@ def _text_oracles() -> dict[str, str]:
         conds = " AND ".join(f"{lang} >= {o}" for o in langs[i + 1:])
         ladder.append(f"WHEN {conds} THEN '{lang}'")
     lang_id = f"""
-        WITH tk AS (SELECT doc_id, list_distinct({toks}) AS tk FROM documents),
+        WITH tk AS (
+          SELECT doc_id,
+                 list_distinct({_sql_tokens("lower(coalesce(text, ''))")})
+                   AS tk
+          FROM documents
+        ),
         n AS (SELECT doc_id, {counts} FROM tk)
         SELECT doc_id,
                CASE WHEN greatest({", ".join(langs)}) = 0 THEN 'und'
@@ -720,9 +737,7 @@ def _text_oracles() -> dict[str, str]:
         WITH toks AS (
           SELECT doc_id, t.term AS term
           FROM documents,
-               unnest(list_filter(regexp_split_to_array(lower(trim(text)),
-                                                        '\\s+'),
-                                  t -> t <> '')) AS t(term)
+               unnest({toks}) AS t(term)
         ),
         tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
         dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
@@ -741,9 +756,7 @@ def _text_oracles() -> dict[str, str]:
     decision = f"""
         WITH q AS (
           SELECT doc_id,
-                 CASE WHEN length(trim(text)) = 0 THEN 0
-                      ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                 END AS n_tokens,
+                 {n_tokens} AS n_tokens,
                  len(list_intersect(list_distinct({toks}), {lst("en")}))
                      AS n_stop
           FROM documents
@@ -1087,23 +1100,26 @@ def _q_dedup_clusters(spark, sf_dir):
                           "doc_id")
 
 
-_ORACLE_DEDUP_CLUSTERS = r"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     t -> t <> '') AS tk
+# the distinct 3-gram shingle set per document (dedup._shingles_expr),
+# shared by every n-gram Jaccard oracle; a doc of under 3 tokens is one
+# shingle, '' for a blank doc as on Spark (see _sql_token_text)
+_SQL_SHINGLES = f"""toks AS (
+  SELECT doc_id, {_sql_tokens("lower(text)")} AS tk
   FROM documents
 ),
 sh AS (
   SELECT doc_id,
          CASE WHEN len(tk) < 3
-              THEN list_distinct([array_to_string(tk, ' ')])
+              THEN [coalesce(array_to_string(tk, ' '), '')]
               ELSE list_distinct(list_transform(
                      range(1, len(tk) - 1),
                      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))
          END AS sh
   FROM toks
-),
+)"""
+
+_ORACLE_DEDUP_CLUSTERS = f"""
+WITH RECURSIVE {_SQL_SHINGLES},
 pairs AS (
   SELECT a.doc_id AS a, b.doc_id AS b
   FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -1134,30 +1150,15 @@ def _minhash_truth_sql(threshold: float) -> str:
     """Exact all-pairs 3-gram Jaccard at ``threshold`` — the ground
     truth the LSH ladder rows are compared against (O(n^2), oracle
     side only)."""
-    return r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     t -> t <> '') AS tk
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         CASE WHEN len(tk) < 3
-              THEN list_distinct([array_to_string(tk, ' ')])
-              ELSE list_distinct(list_transform(
-                     range(1, len(tk) - 1),
-                     i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))
-         END AS sh
-  FROM toks
-)
+    return f"""
+WITH {_SQL_SHINGLES}
 SELECT a.doc_id AS a, b.doc_id AS b,
        round(len(list_intersect(a.sh, b.sh))::DOUBLE
              / len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
 FROM sh a JOIN sh b ON a.doc_id < b.doc_id
 WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
-      / len(list_distinct(list_concat(a.sh, b.sh))) >= {thr}
-""".replace("{thr}", repr(threshold))
+      / len(list_distinct(list_concat(a.sh, b.sh))) >= {threshold!r}
+"""
 
 
 _ORACLE_MINHASH_VERIFIED = _minhash_truth_sql(0.8)
@@ -1183,23 +1184,8 @@ def _q_ngram_jaccard(spark, sf_dir):
 # Replays the FULL ladder: same shingle definition as
 # _minhash_truth_sql, then df-capped rare-gram blocking, then exact
 # Jaccard on the blocked candidates only.
-_ORACLE_NGRAM_JACCARD = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
-                     t -> t <> '') AS tk
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         CASE WHEN len(tk) < 3
-              THEN list_distinct([array_to_string(tk, ' ')])
-              ELSE list_distinct(list_transform(
-                     range(1, len(tk) - 1),
-                     i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))
-         END AS sh
-  FROM toks
-),
+_ORACLE_NGRAM_JACCARD = f"""
+WITH {_SQL_SHINGLES},
 posts AS (SELECT doc_id, unnest(sh) AS gram FROM sh),
 rare AS (SELECT gram FROM posts GROUP BY gram
          HAVING count(*) BETWEEN 2 AND 20),
@@ -1234,12 +1220,10 @@ def _q_simhash(spark, sf_dir):
 # (bit b of md5_64(token) ? +count : -count) is strictly positive;
 # the final CASE converts the unsigned bit-pack to the signed long the
 # Spark side emits. Empty-token docs get signature 0 via the LEFT JOIN.
-_ORACLE_SIMHASH = r"""
+_ORACLE_SIMHASH = f"""
 WITH toks AS (
   SELECT doc_id, t.tok AS tok, count(*) AS w
-  FROM documents,
-       unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                          x -> x <> '')) AS t(tok)
+  FROM documents, unnest({_sql_tokens("lower(text)")}) AS t(tok)
   GROUP BY 1, 2
 ),
 th AS (
@@ -1582,8 +1566,9 @@ def _q_winnow_fingerprint(spark, sf_dir):
     matches every (doc_id, pos, fp) row. (Round 4 used md5-low-64 —
     SQL-reproducible but one interpreter hashlib call per CHARACTER in
     the production path; the polynomial keeps full value parity at
-    ~5 numpy vector ops per document.) Whitespace normalization is the
-    shared explicit ASCII class textops._WS_CLASS on both engines."""
+    ~5 numpy vector ops per document.) Both engines hash the same
+    normalized text: the lowercase tokens (textops.split_tokens, and
+    _sql_tokens here) joined by one space."""
     from tortank_spark.textops import winnow_fingerprints
 
     docs = _fan(_t(spark, sf_dir, "documents"))
@@ -1625,18 +1610,12 @@ _WINNOW_FIN_MUL = ("CAST((CAST(xor(hp, hp >> 33) AS HUGEINT)"
 # w member hashes; rank orders (hash ASC, pos DESC) so rn=1 is the
 # paper's rightmost minimum; uint64 comparisons on both engines, fp
 # emitted as the two's-complement int64 (same conversion as simhash).
-# Normalization: explicit ASCII whitespace class (textops._WS_CLASS)
-# with empty tokens filtered — byte-identical to the Python side's
-# re.split-and-join (str.split's Unicode whitespace vs RE2's ASCII \s
-# was a latent parity gap; ADVICE r04).
+# Normalization: the lowercase tokens joined by one space, the Python
+# side's textops._normalize_ws.
 _ORACLE_WINNOW = r"""
 WITH norm AS (
   SELECT doc_id,
-         array_to_string(
-           list_filter(
-             regexp_split_to_array(lower(coalesce(text, '')),
-                                   '[ \t\n\r\f\v]+'),
-             x -> x <> ''), ' ') AS t
+         __TOKEN_TEXT__ AS t
   FROM documents
 ),
 short0 AS (
@@ -1693,6 +1672,7 @@ FROM sel
 # full of literal '%' mod operators)
 _ORACLE_WINNOW = (
     _ORACLE_WINNOW
+    .replace("__TOKEN_TEXT__", _sql_token_text("lower(text)"))
     .replace("__SHORT_POLY__", _WINNOW_SHORT_POLY)
     .replace("__GRAM_POLY__", _WINNOW_GRAM_POLY)
     .replace("__FIN_MUL__", _WINNOW_FIN_MUL)
@@ -3433,11 +3413,9 @@ def _q_collocations(spark, sf_dir):
     return collocations(_t(spark, sf_dir, "documents"), min_count=3)
 
 
-_ORACLE_COLLOCATIONS = """
+_ORACLE_COLLOCATIONS = f"""
 WITH docs AS MATERIALIZED (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                     x -> x <> '') AS l
+  SELECT doc_id, {_sql_tokens("lower(text)")} AS l
   FROM documents
 ),
 toks AS MATERIALIZED (SELECT unnest(l) AS tok FROM docs),
@@ -3473,12 +3451,9 @@ def _q_length_quantiles(spark, sf_dir):
     )
 
 
-_ORACLE_LENGTH_QUANTILES = """
+_ORACLE_LENGTH_QUANTILES = f"""
 WITH tc AS (
-  SELECT lang,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-         END AS v
+  SELECT lang, len({_sql_tokens("text")}) AS v
   FROM documents
 ),
 ranked AS (
@@ -3508,14 +3483,10 @@ def _q_boilerplate(spark, sf_dir):
     )
 
 
-_ORACLE_BOILERPLATE = """
+_ORACLE_BOILERPLATE = f"""
 WITH units AS MATERIALIZED (
-  SELECT source AS g, doc_id, trim(u) AS u
-  FROM (
-    SELECT source, doc_id,
-           unnest(string_split_regex(lower(text), '\\s+')) AS u
-    FROM documents
-  ) WHERE trim(u) <> ''
+  SELECT source AS g, doc_id, unnest({_sql_tokens("lower(text)")}) AS u
+  FROM documents
 ),
 udf_ AS MATERIALIZED (
   SELECT g, u, count(DISTINCT doc_id) AS ldf FROM units GROUP BY g, u
@@ -4465,20 +4436,15 @@ def _q_text_chunks(spark, sf_dir):
     return chunk_windows(docs, "doc_id", "text", size=64, overlap=16)
 
 
-_ORACLE_TEXT_CHUNKS = """
+_ORACLE_TEXT_CHUNKS = f"""
 WITH d AS (
-  SELECT doc_id AS id,
-         string_split(trim(regexp_replace(
-           text, '[ \t\n\r\f\v]+', ' ', 'g')), ' ') AS toks
-  FROM documents
-  WHERE length(trim(regexp_replace(
-          text, '[ \t\n\r\f\v]+', ' ', 'g'))) > 0
+  SELECT doc_id AS id, {_sql_tokens("text")} AS toks FROM documents
 ),
 s AS (
   SELECT id, toks,
          unnest(generate_series(
            0, greatest(len(toks) - 16 - 1, 0), 48)) AS start
-  FROM d
+  FROM d WHERE len(toks) > 0
 )
 SELECT id,
        CAST(start // 48 AS BIGINT) AS chunk_id,
@@ -4886,25 +4852,19 @@ def oracle_sql() -> dict[str, str]:
             ORDER BY revenue DESC, orderkey ASC
             LIMIT 20
         """,
-        "dedup_exact": """
-            SELECT md5(array_to_string(
-                     regexp_split_to_array(lower(trim(text)), '\\s+'), ' '))
-                   AS fingerprint,
+        "dedup_exact": f"""
+            SELECT md5({_sql_token_text("lower(text)")}) AS fingerprint,
                    min(doc_id) AS doc_id,
                    count(*) AS n_dups
             FROM documents GROUP BY 1
         """,
-        "text_token_count": """
-            SELECT doc_id,
-                   CASE WHEN length(trim(text)) = 0 THEN 0
-                        ELSE len(regexp_split_to_array(trim(text), '\\s+'))
-                   END AS n_tokens
+        "text_token_count": f"""
+            SELECT doc_id, len({_sql_tokens("text")}) AS n_tokens
             FROM documents
         """,
-        "text_fingerprint": """
+        "text_fingerprint": f"""
             SELECT doc_id,
-                   md5(array_to_string(
-                     regexp_split_to_array(lower(trim(text)), '\\s+'), ' ')) AS fp
+                   md5({_sql_token_text("lower(text)")}) AS fp
             FROM documents
         """,
         **_text_oracles(),

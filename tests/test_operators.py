@@ -312,12 +312,18 @@ def test_textops_counts_and_quality(spark):
             (5, "the\u2003of"),
             (6, "the\u00a0of"),
             (7, None),
+            # leading/trailing tab and newline add no empty token;
+            # U+000B splits and U+2028 does not, on every engine
+            (8, "\tfoo\n"),
+            (9, "a\x0bb"),
+            (10, "a\u2028b"),
         ],
         "doc_id long, text string",
     )
     counts = {r["doc_id"]: r["n"] for r in docs.select(
         "doc_id", token_count(F.col("text")).alias("n")).collect()}
-    assert counts == {1: 6, 2: 11, 3: 0, 4: 4, 5: 1, 6: 1, 7: None}
+    assert counts == {1: 6, 2: 11, 3: 0, 4: 4, 5: 1, 6: 1, 7: None,
+                      8: 1, 9: 2, 10: 1}
     q = quality_features(docs).filter(F.col("doc_id") == 1).collect()[0]
     assert q["q_n_tokens"] == 6 and q["q_stopword_ratio"] > 0
     langs = {r["doc_id"]: r["lang_pred"]
@@ -325,16 +331,15 @@ def test_textops_counts_and_quality(spark):
     assert langs[1] == "en" and langs[2] == "fr"
     assert langs[3] == "und" and langs[4] == "fr"
     assert langs[5] == langs[6] == langs[7] == "und"
-    # the DuckDB oracle agrees on every non-null text (its SQL gives a
-    # NULL text 'nl', where Spark gives 'und')
+    assert langs[9] == "en" and langs[8] == langs[10] == "und"
     con = duckdb.connect()
-    con.register("documents", docs.filter(F.col("text").isNotNull())
-                 .toPandas())
+    con.register("documents", docs.toPandas())
     oracle = dict(con.execute(
         entrymod._text_oracles()["text_lang_id"]).fetchall())
-    assert oracle == {i: lang for i, lang in langs.items() if i != 7}
+    assert oracle == langs
     fps = docs.select(doc_fingerprint(F.col("text")).alias("fp")).collect()
-    assert len({r["fp"] for r in fps}) == 6
+    # "" and NULL share the empty-token fingerprint
+    assert len({r["fp"] for r in fps}) == 9
 
 
 def test_multimodal_feature_plumbing(spark):
@@ -1126,44 +1131,82 @@ def test_winnow_numpy_hash_matches_python_replay(spark):
         assert got[i] == _py_winnow_replay(t), (i, t)
 
 
-def test_winnow_oracle_parity_on_edge_whitespace(spark, tmp_path):
-    """Spark winnow_fingerprints vs the driver's DuckDB oracle SQL on
-    documents containing NBSP, U+2028, vertical tab, form feed, and
-    leading/trailing tabs/newlines — the exact edge ADVICE r04 flagged
-    as a latent parity gap between Python str.split() (Unicode
-    whitespace) and RE2 '\\s' (ASCII). Both engines now share the
-    explicit class textops._WS_CLASS; this test pins the agreement
-    with actual non-ASCII-whitespace fixtures rather than relying on
-    the sf corpus never containing one."""
+# every query that tokenizes text, on either engine
+_TOKENIZING_QUERIES = [
+    "text_token_count", "text_fingerprint", "dedup_exact", "text_quality",
+    "text_lang_id", "text_salient_terms", "text_tfidf_topk",
+    "text_filter_decision", "text_repetition", "text_collocations",
+    "text_boilerplate", "text_length_quantiles", "text_chunks",
+    "text_winnow", "dedup_simhash", "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+]
+
+
+def _edge_whitespace_documents():
+    """A ``documents`` table whose texts hold the whitespace on which
+    the ``\\s`` and ``\\v`` of Java regex, RE2 and Python re disagree
+    (NBSP, U+000B, U+000C, U+0085, U+2028, U+2029), a leading tab, a
+    trailing newline and blank texts. Planted for the operators that
+    need them: a near-duplicate pair (docs 0/1, one source), the
+    tf-idf query terms, a bigram repeated four times and a 90-token
+    document."""
+    base = ("the quick brown fox jumps over the lazy dog while spark"
+            " merge jobs write vector data to the lake and the river"
+            " bank is in the hat of the old town")
+    long_doc = " ".join(
+        f"w{i}" + ("\u2028" if i % 7 == 0 else "\x0b" if i % 5 == 0
+                   else " ")
+        for i in range(90))
+    rows = [
+        (0, base.replace("brown fox", "brown\u00a0fox"), "en", "s0"),
+        (1, "\t" + base + " again\n", "en", "s0"),
+        (2, "vertical\x0btab and form\x0cfeed split the spark tokens",
+         "en", "s1"),
+        (3, "line\u2028separator and para\u2029graph and next\u0085line"
+            " stay inside merge tokens", "en", "s1"),
+        (4, "", "fr", "s2"),
+        (5, "   ", "fr", "s2"),
+        (6, "\t\n", "fr", "s2"),
+        (7, "\u00a0", "fr", "s3"),
+        (8, "new york is big\nnew york is old\nnew york\u00a0is new york"
+            " and the vector of the city", "en", "s3"),
+        (9, long_doc, "fr", "s3"),
+    ]
+    return {
+        "doc_id": [r[0] for r in rows],
+        "text": [r[1] for r in rows],
+        "lang": [r[2] for r in rows],
+        "source": [r[3] for r in rows],
+        "n_chars": [len(r[1]) for r in rows],
+    }
+
+
+@pytest.mark.parametrize("name", _TOKENIZING_QUERIES)
+def test_tokenizer_oracle_parity_on_edge_whitespace(spark, tmp_path, name):
+    """One whitespace-token contract on both engines: each tokenizing
+    query on Spark and its DuckDB oracle agree value for value on
+    texts the sf corpora never hold (they contain only ASCII spaces),
+    and each returns at least one row, so no case passes vacuously."""
     import duckdb
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     import __spark_entry__ as entrymod
-    from tortank_spark.textops import winnow_fingerprints
+    from scripts.check_oracles import value_hash
 
-    texts = [
-        "\t leading tabs and trailing newlines \n\n",
-        "nbsp inside and U+2028 inside stay token chars",
-        "vertical\x0btab and form\x0cfeed DO split",
-        "plain ascii control case",
-        "  ",  # only non-ASCII ws -> norm is the 2-char text
-    ]
-    pdf = pd.DataFrame(
-        {"doc_id": list(range(len(texts))), "text": texts}
-    )
-    docs = spark.createDataFrame(pdf)
-    spark_rows = {
-        (r["doc_id"], r["pos"], r["fp"])
-        for r in winnow_fingerprints(docs, "doc_id").collect()
-    }
+    path = tmp_path / "documents.parquet"
+    pq.write_table(pa.table(_edge_whitespace_documents()), path)
+    sdf = entrymod.queries()[name](spark, str(tmp_path))
+    scols = sdf.columns
+    srows = [[r[c] for c in scols] for r in sdf.collect()]
     con = duckdb.connect()
-    con.register("documents", pdf)
-    oracle_rows = {
-        tuple(r) for r in con.execute(
-            entrymod.oracle_sql()["text_winnow"]
-        ).fetchall()
-    }
-    assert spark_rows == oracle_rows
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    rel = con.execute(entrymod.oracle_sql()[name])
+    dcols = [d[0] for d in rel.description]
+    drows = rel.fetchall()
+    assert srows
+    assert sorted(scols) == sorted(dcols)
+    assert value_hash(scols, srows) == value_hash(dcols, drows)
 
 
 def test_winnow_match_spans_localizes_planted_overlap(spark):

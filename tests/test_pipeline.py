@@ -311,7 +311,7 @@ def test_pipeline_empty_page_table(spark, tmp_path, syntax_mode):
 
 def test_ensure_parallelism_fans_out_narrow_input_only(spark):
     """ensure_parallelism (guide §2.4/§6): a narrow source (fewer
-    partitions than the cluster) is repartitioned to factor*cores so
+    partitions than the cluster) is repartitioned to 2 x cores so
     compute-heavy stages see full parallelism; an input that already
     has >= defaultParallelism partitions passes through untouched (at
     scale the helper must never introduce a shuffle). Row values are

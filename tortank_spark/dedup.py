@@ -21,7 +21,6 @@ one ``extract.batch_stage`` over a per-batch vector matrix.
 from __future__ import annotations
 
 import hashlib
-import re
 import struct
 
 import numpy as np
@@ -35,9 +34,8 @@ from pyspark.sql.types import (
 )
 
 from .extract import batch_stage, repeat_each, row_stage
-from .textops import doc_fingerprint
+from .textops import doc_fingerprint, split_tokens, tokens
 
-_TOKEN_RE = re.compile(r"\s+")
 # universal-hash modulus for minhash: the 31-bit Mersenne prime. The
 # choice is load-bearing: with p = 2^31-1, a,b < p and x masked to 31
 # bits, a*x + b < 2^62 fits int64 EXACTLY and the mod is a genuine
@@ -141,7 +139,7 @@ def minhash_signatures(
             # bound the per-task cache on huge vocabularies — checked
             # per DOC so a single giant batch cannot blow past it
             vocab.clear()
-        toks = [t for t in _TOKEN_RE.split((text or "").lower().strip()) if t]
+        toks = split_tokens((text or "").lower())
         sh = _shingle_hashes(toks, shingle_k, vocab)
         if sh.size == 0:
             sig = np.zeros(n_hashes, dtype=np.int64)
@@ -265,7 +263,7 @@ def simhash_signatures(
     def per_row(did, text):
         if len(vocab) > 1_000_000:
             vocab.clear()
-        counts = Counter(t for t in _TOKEN_RE.split((text or "").lower()) if t)
+        counts = Counter(split_tokens((text or "").lower()))
         if counts:
             hs = np.empty(len(counts), dtype=np.uint64)
             ws = np.empty(len(counts), dtype=np.int64)
@@ -469,13 +467,14 @@ def embedding_neardup_lsh(
 
 def _shingles_expr(text_col: str, n: int):
     """Distinct word n-gram (shingle) array as a pure column
-    expression — whitespace-tokenize, lowercase, slide an n-window;
+    expression — lowercase, ``textops.tokens``, slide an n-window;
     a doc shorter than n tokens contributes its whole text as one
     shingle. Shared by the Jaccard verify stage and the rare-n-gram
-    blocker so both see byte-identical shingle sets (and the DuckDB
-    oracles replay the same definition)."""
-    toks = F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda t: t != "")
+    blocker so both see byte-identical shingle sets; the MinHash and
+    SimHash stages read the same tokens through
+    ``textops.split_tokens``, and the DuckDB oracles replay the same
+    definition."""
+    toks = tokens(F.lower(F.col(text_col)))
     sh = F.when(
         F.size(toks) < n, F.array(F.concat_ws(" ", toks))
     ).otherwise(

@@ -46,7 +46,6 @@ RDF_TYPE = RDF_NS + "type"
 RDF_NIL = RDF_NS + "nil"
 RDF_FIRST = RDF_NS + "first"
 RDF_REST = RDF_NS + "rest"
-RDF_LANG_STRING = RDF_NS + "langString"
 
 I64_MIN = -(2**63)
 I64_MAX = 2**63 - 1

@@ -75,17 +75,15 @@ from .lexical import (
     rust_f64_str,
 )
 
-# nom's multispace0 is exactly space/tab/CR/LF (not unicode whitespace).
-_WS_RE = re.compile(r"[ \t\r\n]*")
+# nom's multispace is exactly space/tab/CR/LF (not unicode whitespace).
 _WS1_RE = re.compile(r"[ \t\r\n]+")
-# PN_LOCAL_ESC set from the reference grammar (src/lib.rs:34); note it
-# contains '\\' and ':' so escape sequences are kept verbatim inside
-# local names (the escaped() branch in triple_common_parser.rs:53 is
-# shadowed by the take_while branch).
-_PN_LOCAL_EXTRA = set("_~-!$&\\:()*+=/?#%")
 # prefix = unicode alphanumerics (Rust char::is_alphanumeric excludes
 # '_'); local name = alphanumerics + PN_LOCAL_ESC ('\w' covers '_',
-# which is in the escape set anyway)
+# which is in the escape set anyway). The PN_LOCAL_ESC set comes from
+# the reference grammar (src/lib.rs:34); it contains '\\' and ':' so
+# escape sequences are kept verbatim inside local names (the escaped()
+# branch in triple_common_parser.rs:53 is shadowed by the take_while
+# branch).
 _PFX_RE = re.compile(r"[^\W_]*", re.UNICODE)
 _BNODE_LABEL_RE = re.compile(r"[\w.\-\u00b7\u0300-\u036f\u203f-\u2040]*", re.UNICODE)
 _LOCAL_RE = re.compile(r"[\w~\-!$&\\:()*+=/?#%]*", re.UNICODE)

@@ -235,18 +235,11 @@ def _stub_decoder(media_type: str, blob: bytes) -> np.ndarray:
     """STUB for COMPRESSED formats only (JPEG/MP3/H.264 need codec libs
     absent in this container). Deterministic fake features derived from
     the bytes so the plumbing is testable; a real deployment replaces
-    DECODERS entries with PIL/librosa/etc. (Raise NotImplementedError
-    instead by registering `_raise_decoder`.)"""
+    DECODERS entries with PIL/librosa/etc."""
     h = hashlib.sha256(blob or b"").digest()
     return (
         np.frombuffer(h, dtype=np.uint8).astype(np.float64) / 255.0
     )[:16]
-
-
-def _raise_decoder(media_type: str, blob: bytes) -> np.ndarray:
-    raise NotImplementedError(
-        f"no {media_type} codec available in this environment"
-    )
 
 
 DECODERS: dict[str, Callable[[str, bytes], np.ndarray]] = {

@@ -24,7 +24,7 @@ import os
 from pyspark.sql import SparkSession
 
 
-def ensure_parallelism(df, factor: int = 2):
+def ensure_parallelism(df):
     """Give a narrow source at least cluster parallelism before an
     expensive per-row stage (guide §2.4/§6: scan parallelism bounds
     the whole job when the stage after it is compute-heavy).
@@ -40,14 +40,14 @@ def ensure_parallelism(df, factor: int = 2):
     Scale-adaptive by construction: when the input already has at
     least ``defaultParallelism`` partitions (any real at-scale input,
     where files >> cores), this is a NO-OP — it never introduces a
-    shuffle of well-partitioned data. The repartition target derives
-    from the session's core count, never a constant.
+    shuffle of well-partitioned data. The repartition target is twice
+    the session's core count, never a fixed partition number.
     """
     sc = df.sparkSession.sparkContext
     p = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= p:
         return df
-    return df.repartition(factor * p)
+    return df.repartition(2 * p)
 
 
 def get_spark(app: str = "tortank-spark", cpus: int | None = None,

@@ -11,14 +11,34 @@ external models. The winnow stages are numpy kernels run in
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.types import StructField, StructType
 
 from .extract import batch_stage, repeat_each
+from .session import ensure_parallelism
 
-_WS = r"\s+"
+# The one whitespace-token contract of the text and near-dup operators
+# and their DuckDB oracles: a token is a maximal run of characters
+# outside this ASCII class, never empty. Spelled with \x0B, not \v or
+# \s: Java regex, RE2 and Python re read this spelling identically,
+# where Java's \v also matches U+0085/U+2028/U+2029 and the engines'
+# \s disagree on U+000B and on non-ASCII spaces.
+WS = r"[ \t\n\r\f\x0B]+"
+_WS_RE = re.compile(WS)
+
+
+def tokens(text: Column) -> Column:
+    """The whitespace tokens of ``text`` (callers lowercase it first)."""
+    return F.filter(F.split(text, WS), lambda t: t != "")
+
+
+def split_tokens(text: str | None) -> list[str]:
+    """Python twin of ``tokens``: the same tokens of one string."""
+    return [t for t in _WS_RE.split(text or "") if t]
 
 # tiny deterministic stopword profiles (public common-word lists)
 _LANG_PROFILES = {
@@ -36,10 +56,7 @@ def _profile(lang: str) -> Column:
 
 def token_count(text: Column) -> Column:
     """Whitespace token count (0 for empty/blank text)."""
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(
-        F.size(F.split(t, _WS))
-    )
+    return F.size(tokens(text))
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -49,8 +66,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     n_chars = F.length(t)
     n_tokens = token_count(t)
     n_punct = F.length(F.regexp_replace(t, r"[^\p{Punct}]", ""))
-    toks = F.split(F.lower(F.trim(t)), _WS)
-    n_stop = F.size(F.array_intersect(toks, _profile("en")))
+    n_stop = F.size(F.array_intersect(tokens(F.lower(t)), _profile("en")))
     return df.select(
         "*",
         n_chars.alias("q_n_chars"),
@@ -65,8 +81,7 @@ def doc_fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint: md5 over the
     whitespace-normalized, lowercased token stream — the exact-dedup
     key. (A rolling/polynomial variant lives in dedup.simhash.)"""
-    norm = F.concat_ws(" ", F.split(F.lower(F.trim(text)), _WS))
-    return F.md5(norm)
+    return F.md5(F.concat_ws(" ", tokens(F.lower(text))))
 
 
 # winnowing k-gram hash constants — shared bit-for-bit by the numpy
@@ -86,23 +101,9 @@ def doc_fingerprint(text: Column) -> Column:
 _WINNOW_B = 1099511628211
 _WINNOW_C = 2685821657736338717
 
-# whitespace normalization: an EXPLICIT ASCII class used verbatim by
-# both engines (Python re here, RE2 regexp_split_to_array in the
-# oracle). Python str.split() (full Unicode: NBSP, U+2028, ...) vs
-# DuckDB '\s' (ASCII-only RE2) silently diverge on non-ASCII
-# whitespace — pinning one shared class closes that latent parity gap
-# (tested with NBSP/U+2028 fixtures in test_operators).
-_WS_CLASS = r"[ \t\n\r\f\v]+"
-_WS_SPLIT_RE = None  # compiled lazily (module import stays light)
-
-
 def _normalize_ws(text: str | None) -> str:
-    global _WS_SPLIT_RE
-    if _WS_SPLIT_RE is None:
-        import re
-
-        _WS_SPLIT_RE = re.compile(_WS_CLASS)
-    return " ".join(t for t in _WS_SPLIT_RE.split((text or "").lower()) if t)
+    """The lowercase tokens joined by one space: the winnow input."""
+    return " ".join(split_tokens((text or "").lower()))
 
 
 def _winnow_gram_hashes(norm: str, k: int) -> list[int]:
@@ -450,13 +451,11 @@ def detect_language(
     """Stopword-profile language ID (the n-gram heuristic of
     SURVEY/brief) as column expressions, no Python stage: each
     profile's hit count is the number of its stopwords among the
-    text's distinct ``\\s+`` tokens (``quality_features``' own
-    tokenization), and the first language in profile order (en, fr,
-    de, es, nl) whose count is the maximum wins — the oracle's CASE
-    ladder with its insertion-order tie-break. A text with no hit (or
-    a null text) is ``und``."""
-    toks = F.split(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
-                   _WS)
+    text's distinct lowercase ``tokens``, and the first language in
+    profile order (en, fr, de, es, nl) whose count is the maximum
+    wins — the oracle's CASE ladder with its insertion-order
+    tie-break. A text with no hit (or a null text) is ``und``."""
+    toks = tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     hits = {lang: F.size(F.array_intersect(toks, _profile(lang)))
             for lang in _LANG_PROFILES}
     best = F.greatest(*hits.values())
@@ -488,11 +487,8 @@ def salient_terms(
     from pyspark.sql import Window
 
     toks = df.select(
-        id_col,
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("term"),
-    ).filter(F.col("term") != "")
+        id_col, F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
+    )
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     w = Window.partitionBy(id_col).orderBy(
@@ -534,7 +530,7 @@ def tfidf_topk(
         id_col,
         F.explode(
             F.filter(
-                F.split(F.lower(F.trim(F.col(text_col))), _WS),
+                tokens(F.lower(F.col(text_col))),
                 lambda t: t.isin(*terms),
             )
         ).alias("term"),
@@ -654,10 +650,7 @@ def repetition_signals(
         id_col,
         n_lines.alias("n_lines"),
         dup_line_frac.alias("dup_line_frac"),
-        F.filter(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-            lambda x: x != F.lit(""),
-        ).alias("_toks"),
+        tokens(F.lower(F.col(text_col))).alias("_toks"),
     )
     toks = base.select(id_col, F.explode("_toks").alias("_tok"))
     tok_counts = toks.groupBy(id_col, "_tok").agg(
@@ -726,11 +719,8 @@ def collocations(
     table and a broadcast 1-row total. The n_xy*N*scale product runs
     in DECIMAL(38,0) (~1e32 worst case at 10^13 tokens — the hits
     overflow discipline); the quotient is emitted BIGINT."""
-    arr = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-        lambda x: x != "",
-    )
-    docs = df.select(F.col(id_col).alias("_id"), arr.alias("l"))
+    docs = df.select(F.col(id_col).alias("_id"),
+                     tokens(F.lower(F.col(text_col))).alias("l"))
     toks = docs.select(F.explode("l").alias("tok"))
     uni = toks.groupBy("tok").agg(F.count("*").alias("c"))
     total = toks.agg(F.count("*").alias("n"))
@@ -771,8 +761,8 @@ def boilerplate_stats(
     min_docs: int = 2, min_frac_ppm: int = 300_000,
 ) -> DataFrame:
     """Per-document boilerplate share -> (id, n_units, n_boiler,
-    boiler_ppm): a unit (``line`` split on newline, or ``token`` split
-    on whitespace — both lowercased+trimmed) counts as boilerplate
+    boiler_ppm): a unit (a lowercased ``line`` split on newline and
+    trimmed, or a lowercased whitespace ``token``) counts as boilerplate
     within its GROUP (domain/source) when it appears in >= ``min_docs``
     distinct documents AND in >= ``min_frac_ppm`` of the group's
     documents. The crawl-cleaning primitive: nav bars, cookie banners,
@@ -793,20 +783,15 @@ def boilerplate_stats(
     dictionary is vocabulary-sized per group, never corpus-sized; a
     unit's fan-in is bounded by its group's page count, so one domain
     cannot straggle the whole corpus."""
-    sep = {"line": r"\n", "token": r"\s+"}[unit]
-    # small-file parallelism guard: a corpus that arrives as one tiny
-    # parquet file plans ONE input partition, serializing the explode
-    # (per-row work here is heavy: tokenization x threshold joins);
-    # at real scale many input files make this a no-op
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    low = F.lower(F.col(text_col))
+    raw = {"line": F.split(low, r"\n"), "token": tokens(low)}[unit]
+    # a corpus that arrives as one tiny parquet file plans ONE input
+    # partition, serializing the explode and its threshold joins
+    df = ensure_parallelism(df)
     units = (
         df.select(
             F.col(group_col).alias("_g"), F.col(id_col).alias("_id"),
-            F.explode(
-                F.split(F.lower(F.col(text_col)), sep)
-            ).alias("_raw"),
+            F.explode(raw).alias("_raw"),
         )
         .select("_g", "_id", F.trim(F.col("_raw")).alias("_u"))
         .filter(F.col("_u") != "")
@@ -889,10 +874,11 @@ def chunk_windows(
     chunk_text): split each document into token windows of ``size``
     with ``overlap`` tokens shared between consecutive windows — the
     passage-preparation step every RAG / pretraining pipeline runs
-    between cleaning and embedding. Whitespace tokens (the explicit
-    shared class _WS_CLASS, same as the winnow path); chunk_id is the
-    0-based window index; the last window may be short but is never
-    empty; empty/blank documents emit NOTHING (no phantom chunk).
+    between cleaning and embedding. Tokens are ``tokens`` of the text
+    as written (case kept), joined back with one space; chunk_id is
+    the 0-based window index; the last window may be short but is
+    never empty; empty/blank documents emit NOTHING (no phantom
+    chunk).
 
     Stride = size - overlap (must be positive). A document of n
     tokens yields ceil(max(n - overlap, 1) / stride) windows —
@@ -905,8 +891,7 @@ def chunk_windows(
     if overlap >= size:
         raise ValueError("overlap must be smaller than size")
     stride = size - overlap
-    toks = F.split(
-        F.trim(F.regexp_replace(F.col(text_col), _WS_CLASS, " ")), " ")
+    toks = tokens(F.col(text_col))
     n = F.size(toks)
     starts = F.sequence(
         F.lit(0),
@@ -921,7 +906,6 @@ def chunk_windows(
             starts.alias("_starts"),
         )
         .filter(F.col("_n") > 0)
-        .filter(F.length(F.concat_ws("", "_toks")) > 0)
         .select("id", "_toks", "_n",
                 F.posexplode("_starts").alias("chunk_id", "_start"))
     )

@@ -33,6 +33,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from .extract import row_stage
 from .htmlscan import WS_RE, scan_html
+from .textops import tokens
 
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
 _HOST_RE = re.compile(r"^([a-z][a-z0-9+.-]*)://([^/?#]*)", re.IGNORECASE)
@@ -140,10 +141,12 @@ def anchor_alias_candidates(
     one host repeating an anchor a million times is one vote) and
     union into the alias table.
 
-    Normalization: lowercase + collapsed whitespace (the shared
-    explicit class, htmlscan.WS_RE semantics); empty anchors and —
-    by default — rel=nofollow links are dropped. ``min_count`` prunes
-    the singleton tail BEFORE the result materializes.
+    Normalization: the lowercase ``textops.tokens`` of the anchor
+    joined by one space (``extract_page_links`` has already collapsed
+    every Unicode whitespace run with htmlscan.WS_RE, Python's
+    ``\\s``); empty anchors and — by default — rel=nofollow links are
+    dropped. ``min_count`` prunes the singleton tail BEFORE the result
+    materializes.
 
     Scale shape: ONE shuffle on (alias, dst) with map-side combine;
     n_hosts rides the same grouping as a count-distinct expand. The
@@ -152,8 +155,7 @@ def anchor_alias_candidates(
     collapses map-side.
     """
     a = links.select(
-        F.lower(F.trim(F.regexp_replace(
-            F.col("anchor"), r"[ \t\n\r\f\v]+", " "))).alias("alias"),
+        F.array_join(tokens(F.lower(F.col("anchor"))), " ").alias("alias"),
         F.col("href").alias("dst"),
         _host(F.col("url")).alias("src_host"),
         F.col("rel"),
