@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from tortank_spark.session import ensure_parallelism as _fan
+from tortank_spark.linking import MENTION_SPLIT
 from tortank_spark.textops import WS
 
 TABLES = [
@@ -1748,9 +1749,10 @@ def _q_transitive_closure(spark, sf_dir):
     p_partkey DIV 2 — a binary tree ~11 levels deep at sf0.01, so the
     semi-naive loop genuinely iterates). tortank answers reachability
     only pair-at-a-time via repeated list_statements; materializing
-    the closure once (graph.transitive_closure, Datalog semi-naive:
-    per-round work is frontier-sized, one Spark job per round) turns
-    every downstream ancestor query into a single equi-join. FULL
+    the closure once (graph.transitive_closure, Datalog semi-naive
+    as a labeled frontier BFS: per-round work is frontier-sized, one
+    driver-side count per round) turns every downstream ancestor
+    query into a single equi-join. FULL
     value oracle: DuckDB replays the closure with a recursive CTE."""
     from tortank_spark.graph import transitive_closure
 
@@ -4756,7 +4758,7 @@ def oracle_sql() -> dict[str, str]:
             toks AS (
               SELECT 'urn:doc:' || doc_id AS url, t.tok AS mention
               FROM documents,
-                   unnest(regexp_split_to_array(lower(text), '[^0-9a-z_-]+')) AS t(tok)
+                   unnest(regexp_split_to_array(lower(text), '{MENTION_SPLIT}')) AS t(tok)
               WHERE length(t.tok) >= 3
             ),
             tf AS (SELECT url, mention, count(*) AS tf FROM toks GROUP BY 1, 2)
@@ -4769,7 +4771,7 @@ def oracle_sql() -> dict[str, str]:
             toks AS (
               SELECT 'urn:doc:' || doc_id AS url, t.tok AS mention
               FROM documents,
-                   unnest(regexp_split_to_array(lower(text), '[^0-9a-z_-]+')) AS t(tok)
+                   unnest(regexp_split_to_array(lower(text), '{MENTION_SPLIT}')) AS t(tok)
               WHERE length(t.tok) >= 3
             ),
             de AS (

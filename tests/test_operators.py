@@ -1187,6 +1187,14 @@ def test_tokenizer_oracle_parity_on_edge_whitespace(spark, tmp_path, name):
     query on Spark and its DuckDB oracle agree value for value on
     texts the sf corpora never hold (they contain only ASCII spaces),
     and each returns at least one row, so no case passes vacuously."""
+    _assert_documents_oracle_parity(spark, tmp_path, name,
+                                    _edge_whitespace_documents())
+
+
+def _assert_documents_oracle_parity(spark, tmp_path, name, documents):
+    """Query ``name`` on Spark and its DuckDB oracle over one
+    ``documents`` table (a column dict) agree value for value and
+    return at least one row."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -1195,7 +1203,7 @@ def test_tokenizer_oracle_parity_on_edge_whitespace(spark, tmp_path, name):
     from scripts.check_oracles import value_hash
 
     path = tmp_path / "documents.parquet"
-    pq.write_table(pa.table(_edge_whitespace_documents()), path)
+    pq.write_table(pa.table(documents), path)
     sdf = entrymod.queries()[name](spark, str(tmp_path))
     scols = sdf.columns
     srows = [[r[c] for c in scols] for r in sdf.collect()]
@@ -1207,6 +1215,19 @@ def test_tokenizer_oracle_parity_on_edge_whitespace(spark, tmp_path, name):
     assert srows
     assert sorted(scols) == sorted(dcols)
     assert value_hash(scols, srows) == value_hash(dcols, drows)
+
+
+@pytest.mark.parametrize("name", ["kg_entity_link", "kg_entity_cooccur"])
+def test_mention_oracle_parity_on_non_ascii_letters(spark, tmp_path, name):
+    """One mention-token rule on both engines: a non-ASCII letter stays
+    inside a mention in Spark and in the DuckDB oracle alike, so
+    ``éspark`` and ``sparké`` link nothing on either side. The sf
+    corpora are ASCII; the ASCII doc keeps both queries non-empty."""
+    texts = ["the éspark engine", "sparké query", "customer table",
+             "spark query on the customer table"]
+    _assert_documents_oracle_parity(
+        spark, tmp_path, name,
+        {"doc_id": list(range(len(texts))), "text": texts})
 
 
 def test_winnow_match_spans_localizes_planted_overlap(spark):
@@ -1469,8 +1490,7 @@ def test_transitive_closure_known_graphs(spark):
     forward pairs; a diamond (a->b, a->c, b->d, c->d) adds (a,d)
     exactly once; a 3-cycle reaches everything INCLUDING self-pairs
     (SPARQL property-path semantics: x p+ x holds via the cycle);
-    duplicate edges change nothing. Semi-naive and recursive-doubling
-    must agree on every case."""
+    duplicate edges change nothing."""
     from tortank_spark.graph import transitive_closure
 
     chain = [(1, 2), (2, 3), (3, 4), (1, 2)]
@@ -1485,17 +1505,29 @@ def test_transitive_closure_known_graphs(spark):
     } | {(a, b) for a in (20, 21, 22) for b in (20, 21, 22)}
     got = {(r["src"], r["dst"]) for r in transitive_closure(df).collect()}
     assert got == want
-    got2 = {
+
+
+def test_transitive_closure_round_cap(spark):
+    """``max_rounds`` caps path length: on a 6-edge chain, two rounds
+    past the edge set itself reach exactly the pairs joined by paths
+    of at most 3 edges."""
+    from tortank_spark.graph import transitive_closure
+
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)], "src long, dst long"
+    )
+    want = {(a, b) for a in range(7) for b in range(a + 1, min(a + 3, 6) + 1)}
+    got = {
         (r["src"], r["dst"])
-        for r in transitive_closure(df, doubling=True).collect()
+        for r in transitive_closure(df, max_rounds=2).collect()
     }
-    assert got2 == want
+    assert got == want
 
 
 def test_transitive_closure_random_dag_vs_python(spark):
     """Randomized check: closure of a seeded random DAG (edges only
     low->high so it is acyclic) equals a pure-Python Warshall
-    fixpoint, for both algorithms."""
+    fixpoint."""
     import random
 
     from tortank_spark.graph import transitive_closure
@@ -1518,12 +1550,8 @@ def test_transitive_closure_random_dag_vs_python(spark):
                 changed = True
     want = {(u, v) for u in range(n) for v in reach[u]}
     df = spark.createDataFrame(edges, "src long, dst long")
-    for kw in ({}, {"doubling": True}):
-        got = {
-            (r["src"], r["dst"])
-            for r in transitive_closure(df, **kw).collect()
-        }
-        assert got == want
+    got = {(r["src"], r["dst"]) for r in transitive_closure(df).collect()}
+    assert got == want
 
 
 def test_pagerank_integer_exact_replay(spark):

@@ -358,7 +358,7 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path_factory):
     joins' requirement, proven at the plan level)."""
     import re
 
-    from tortank_spark.storage import read_table, write_bucketed
+    from tortank_spark.storage import write_bucketed
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -370,9 +370,7 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path_factory):
         )
         write_bucketed(a, "t_bucket_a", ["s"], n_buckets=8, sort_cols=["s"])
         write_bucketed(b, "t_bucket_b", ["s"], n_buckets=8, sort_cols=["s"])
-        j = read_table(spark, "t_bucket_a").join(
-            read_table(spark, "t_bucket_b"), "s"
-        )
+        j = spark.table("t_bucket_a").join(spark.table("t_bucket_b"), "s")
         plan = plan_of(j)
         assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 0
         assert "SortMergeJoin" in plan
@@ -576,9 +574,9 @@ def test_asof_join_single_exchange_no_range_join(spark):
 
 def test_transitive_closure_and_pagerank_equi_joins_only(spark):
     """Both iterative graph ops must stay equi-join geometry end to
-    end — the doubling closure self-join is on the midpoint column,
-    the pagerank contrib join on the src id; no plan may contain a
-    CartesianProduct or BroadcastNestedLoopJoin."""
+    end — the closure frontier join is on the vertex id, the pagerank
+    contrib join on the src id; no plan may contain a CartesianProduct
+    or BroadcastNestedLoopJoin."""
     from tortank_spark.graph import pagerank, transitive_closure
 
     edges = spark.createDataFrame(
@@ -586,7 +584,6 @@ def test_transitive_closure_and_pagerank_equi_joins_only(spark):
     )
     for df in (
         transitive_closure(edges, max_rounds=3),
-        transitive_closure(edges, max_rounds=2, doubling=True),
         pagerank(edges, iterations=2),
     ):
         plan = plan_of(df)

@@ -194,9 +194,11 @@ def connected_components(
         return (sig, int(row["b"] or 0)) if with_bytes else sig
 
     # LAZY localCheckpoint: the signature aggregate is the action that
-    # materializes it, so each round costs ONE Spark job, not two (the
-    # checkpoint still truncates lineage — without it the iterative
-    # plan grows exponentially and kills the driver at analysis time).
+    # materializes it, so no round runs a separate materialization job
+    # (under AQE planning the round's shuffle stages still run as jobs
+    # of their own; the checkpoint truncates lineage — without it the
+    # iterative plan grows exponentially and kills the driver at
+    # analysis time).
     # The first aggregate additionally sums id bytes for the
     # driver-path gate (same job, one extra partial-agg column).
     cur = _orient(edges).localCheckpoint(eager=False)

@@ -22,15 +22,17 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 
-def _edge_sig(df: DataFrame):
-    """Order-independent set signature (count, xor of row hashes) of an
-    (src, dst) edge set in ONE aggregate job — same convergence idiom
-    as canonicalize.connected_components (canonicalize.py:130)."""
-    row = df.agg(
-        F.count("*").alias("n"),
-        F.expr("bit_xor(xxhash64(src, dst))").alias("x"),
-    ).collect()[0]
-    return row["n"], row["x"]
+def edge_set(edges: DataFrame, src: str = "src",
+             dst: str = "dst") -> DataFrame:
+    """The distinct directed (src, dst) pairs of ``edges`` with no null
+    endpoint — the one edge-set rule every graph operator starts from
+    (self-loops, symmetrization and partitioning stay with the callers
+    that need them)."""
+    return (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+    )
 
 
 def pagerank(
@@ -61,8 +63,10 @@ def pagerank(
     all AQE-skew-splittable; the degree-annotated edge list is
     persisted once and released in ``finally``; lineage is truncated
     per round by a lazy localCheckpoint so the 10-round plan stays
-    linear (the connected_components idiom — one chained job, no
-    per-round driver sync at all since the round count is fixed).
+    linear. The round count is fixed, so no round waits on a
+    convergence check, but under AQE planning a round's checkpoint
+    runs that round's shuffle stages as jobs (19 jobs for
+    ``iterations=3`` on a 12-edge chain at local[4]).
 
     ``seeds`` (a 1-column frame of node ids) switches to PERSONALIZED
     PageRank (Haveliwala 2002): the teleport term lands only on seed
@@ -72,11 +76,7 @@ def pagerank(
     Same integer arithmetic, same per-round plan — the seed flag is
     one broadcast-size left join folded into the loop-invariant node
     table, so the per-round cost is unchanged."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
+    e = edge_set(edges, src, dst)
     deg = e.groupBy("src").agg(F.count("*").alias("odeg"))
     # pre-partition the two LOOP-INVARIANT tables on their join keys
     # ONCE: the per-round contrib join then reuses ed's partitioning
@@ -129,9 +129,9 @@ def pagerank(
                     )
                 ).cast("long").alias("rank"),
             ).localCheckpoint(eager=False)
-        # materialize HERE (one chained job over all rounds) so the
-        # finally-release doesn't strip the caches before they are
-        # ever hit — the triangle_counts cache lifetime
+        # materialize HERE so the finally-release doesn't strip the
+        # caches before they are ever hit — the triangle_counts cache
+        # lifetime
         return rank.localCheckpoint(eager=True)
     finally:
         ed.unpersist()
@@ -153,8 +153,10 @@ def hits(
     v' = v_raw * scale DIV max(sum(v_raw), 1), so scores sum to
     ~``scale`` and every round is associative, rerun-stable, and
     engine-replayable. The normalizer rides in as a broadcast 1-row
-    cross join — no per-round driver sync; lazy localCheckpoint
-    truncates lineage per round (one chained job, fixed round count).
+    cross join, not a driver-side collect; lazy localCheckpoint
+    truncates lineage per half-round, and under AQE planning each
+    checkpoint runs its shuffle stages as jobs (61 jobs for
+    ``iterations=3`` on a 12-edge chain at local[4]).
 
     Scale shape: per round, two equi-joins against pre-partitioned
     edge copies + two fan-in aggregates + two 1-row total aggregates;
@@ -165,13 +167,7 @@ def hits(
     engines); with a single src-partitioned copy every hub half-round
     re-shuffled the full edge table, measured 87 s -> this layout at
     sf0.1 (the 100-TB cost difference is 5 full edge shuffles)."""
-    e_src = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .repartition("src")
-        .persist()
-    )
+    e_src = edge_set(edges, src, dst).repartition("src").persist()
     e_dst = e_src.repartition("dst").persist()
     e_of = {"src": e_src, "dst": e_dst}
     nodes = (
@@ -233,7 +229,7 @@ def hits(
 
 def transitive_closure(
     edges: DataFrame, src: str = "src", dst: str = "dst",
-    max_rounds: int = 64, doubling: bool = False,
+    max_rounds: int = 64,
 ) -> DataFrame:
     """All pairs (src, dst) connected by a directed path of >= 1 edges
     — the materialized form of a SPARQL property path ``p+`` and the
@@ -244,80 +240,24 @@ def transitive_closure(
     batch engine materializes the closure once so every downstream
     type/ancestor query is a single equi-join.
 
-    Two published strategies, both one Spark job per round (lazy
-    ``localCheckpoint`` truncates the iterative lineage, the signature
-    aggregate is the action — the connected_components idiom):
-
-    * semi-naive (default; Datalog seminaive evaluation): the join
-      input each round is only the DELTA (paths discovered last
-      round), extended by one base edge, anti-joined against the
-      accumulated closure so no path is re-derived twice. Rounds =
-      longest-path depth d; per-round work proportional to the
-      frontier, never the whole closure. The right choice for KG
-      taxonomies (depth ~10-30 even for web-scale ontologies).
-    * ``doubling=True`` (recursive doubling): closure' = closure U
-      (closure JOIN closure), converging in ceil(log2 d) rounds — for
-      pathological deep chains (linked-list-shaped provenance graphs)
-      where d rounds of barrier sync dominate. Costs more per round
-      (the join re-derives each pair once per midpoint), so it is NOT
-      the default.
-
-    Scale notes: every join is an equi-join on vertex ids (AQE
-    skew-splittable); the base edge set is persisted once and released
-    in ``finally``; DAG depth bound guards runaway cyclic inputs
-    (cycles are legal — closure of a cycle is the complete reachability
-    relation — but max_rounds caps the iteration).
-    """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .persist()
+    Datalog semi-naive evaluation as a labeled ``_frontier_bfs``: the
+    frontier is the edge set itself as (src, node = dst) at depth 0,
+    labeled by ``src``, so each round extends only the pairs found
+    last round by one edge and anti-joins them against the closure on
+    (src, dst) — no pair is derived twice and per-round work is
+    frontier-sized, never closure-sized. Rounds = longest-path depth,
+    capped at ``max_rounds`` (paths of up to ``max_rounds + 1`` edges),
+    which also bounds cyclic inputs (the closure of a cycle is the
+    complete reachability relation, self-pairs included — SPARQL
+    property-path semantics). Each round ends in a driver-side count;
+    under AQE planning its shuffle stages run as separate jobs (72
+    jobs on a 12-edge chain at local[4]). The edge set is
+    de-duplicated and persisted once per call."""
+    e = edge_set(edges, src, dst)
+    frontier = e.select("src", F.col("dst").alias("node"))
+    return _frontier_bfs(e, frontier, ["src"], max_rounds).select(
+        "src", F.col("node").alias("dst")
     )
-    try:
-        closure = e.localCheckpoint(eager=False)
-        if doubling:
-            sig = _edge_sig(closure)
-            for _ in range(max_rounds):
-                mid = closure.select(
-                    F.col("src"), F.col("dst").alias("mid")
-                ).join(
-                    closure.select(
-                        F.col("src").alias("mid"), F.col("dst")
-                    ),
-                    "mid",
-                ).select("src", "dst")
-                # keep self-pairs: x p+ x HOLDS when a cycle passes
-                # through x (SPARQL property-path semantics) — the
-                # semi-naive branch derives them too
-                nxt = (
-                    closure.unionByName(mid)
-                    .distinct()
-                    .localCheckpoint(eager=False)
-                )
-                nxt_sig = _edge_sig(nxt)
-                closure = nxt
-                if nxt_sig == sig:
-                    break
-                sig = nxt_sig
-            return closure
-        base = e.select(F.col("src").alias("mid"), F.col("dst"))
-        delta = closure
-        for _ in range(max_rounds):
-            ext = delta.select(
-                F.col("src"), F.col("dst").alias("mid")
-            ).join(base, "mid").select("src", "dst").distinct()
-            delta = ext.join(
-                closure, ["src", "dst"], "left_anti"
-            ).localCheckpoint(eager=False)
-            if delta.agg(F.count("*")).collect()[0][0] == 0:
-                break
-            closure = closure.unionByName(delta).localCheckpoint(
-                eager=False
-            )
-        return closure
-    finally:
-        e.unpersist()
 
 
 def bfs_distances(
@@ -334,36 +274,36 @@ def bfs_distances(
     emitted at dist 0 whether or not they touch an edge. Directed by
     construction — pre-union reversed edges for undirected graphs."""
     frontier = seeds.select(F.col(node).alias("node")).distinct()
-    return _frontier_bfs(edges, src, dst, frontier, [], max_depth)
+    return _frontier_bfs(edge_set(edges, src, dst), frontier, [],
+                         max_depth)
 
 
 def _frontier_bfs(
-    edges: DataFrame, src: str, dst: str, frontier: DataFrame,
-    labels: list[str], max_depth: int,
+    e: DataFrame, frontier: DataFrame, labels: list[str], max_depth: int,
 ) -> DataFrame:
-    """Frontier BFS from (*labels, node) rows at distance 0 -> visited
-    (*labels, node, dist) within ``max_depth``; the one loop behind
-    bfs_distances and harmonic_centrality. One Spark job per round: the
-    join input is ONLY the current frontier (first visit IS the minimal
-    distance, so no re-expansion and no min-recomputation), extended
-    one edge on the vertex id (labels ride along as payload, so they
-    never change join geometry), anti-joined against visited on
-    (*labels, node). Per-round work is frontier-sized; lineage is
-    truncated with lazy localCheckpoint; stops at an empty frontier."""
+    """Frontier BFS over the ``edge_set`` ``e`` from (*labels, node)
+    rows at distance 0 -> visited (*labels, node, dist) within
+    ``max_depth``; the one reachability loop behind transitive_closure,
+    bfs_distances and harmonic_centrality. The join input is ONLY the
+    current frontier (first visit IS the minimal distance, so no
+    re-expansion and no min-recomputation), extended one edge on the
+    vertex id (labels ride along as payload, so they never change join
+    geometry), anti-joined against visited on (*labels, node).
+    Per-round work is frontier-sized; lineage is truncated with lazy
+    localCheckpoint; each round ends in a driver-side count of the new
+    frontier, and the loop stops at an empty one. ``e`` is persisted
+    here before anything is planned, so a ``frontier`` derived from it
+    reads the same cache; it is released in ``finally``."""
     key = [*labels, "node"]
-    e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
-        .distinct()
-        .persist()
-    )
+    e = e.persist()
     try:
+        hop = e.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
         visited = frontier.withColumn(
             "dist", F.lit(0).cast("long")
         ).localCheckpoint(eager=False)
         for depth in range(1, max_depth + 1):
             nxt = (
-                frontier.join(e, frontier["node"] == e["_s"])
+                frontier.join(hop, frontier["node"] == hop["_s"])
                 .select(*labels, F.col("_d").alias("node"))
                 .distinct()
                 .join(visited.select(*key), key, "left_anti")
@@ -424,9 +364,11 @@ def random_walks(
     walk-state (score-sized) ever shuffles — a (node, idx) two-key
     join would re-hash the adjacency (the big side) every step. The
     join's pre-filter fan-out is bounded by ``max_degree`` rows per
-    state row, by construction. Lineage truncated per step (lazy
-    localCheckpoint, one chained job). Walks that reach a sink simply
-    end (step-0 rows guarantee every node emits >= 1 row)."""
+    state row, by construction. Lineage is truncated per step by a
+    lazy localCheckpoint, and under AQE planning each step's
+    checkpoint runs that step's shuffle stages as jobs. Walks that
+    reach a sink simply end (step-0 rows guarantee every node emits
+    >= 1 row)."""
     from functools import reduce
 
     from tortank_spark.sampling import sample_neighbors
@@ -435,15 +377,11 @@ def random_walks(
     # duplicate (src, dst) rows would receive DISTINCT tournament
     # ranks (md5 keys collide exactly), skewing the walk distribution
     # and breaking idx-uniqueness — the adjacency is a set
-    edges = (
-        edges.select(F.col(src).alias(src), F.col(dst).alias(dst))
-        .filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
-        .distinct()
-    )
+    edges = edge_set(edges, src, dst)
     adj = (
-        sample_neighbors(edges, max_degree, src, dst, n_salts)
+        sample_neighbors(edges, max_degree, "src", "dst", n_salts)
         .select(
-            F.col(src).alias("a_src"), F.col(dst).alias("a_dst"),
+            F.col("src").alias("a_src"), F.col("dst").alias("a_dst"),
             (F.col("rank") - 1).cast("long").alias("idx"),
         )
         .repartition("a_src")  # reused by every step's node-key join
@@ -453,9 +391,8 @@ def random_walks(
         F.count("*").alias("cdeg")
     ).repartition("d_src").persist()
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .filter(F.col("node").isNotNull())
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
     ws = spark.range(1, walks_per_node + 1).select(
@@ -611,13 +548,7 @@ def propagate_labels(
     per-node sort and celebrity nodes reduce tree-style; per-node
     vote rows are bounded by the distinct-label count anyway.
     Lineage truncated per round with lazy localCheckpoint."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .repartition("src")
-        .persist()
-    )
+    e = edge_set(edges, src, dst).repartition("src").persist()
     sd = (
         seeds.select(F.col(node).alias("node"), F.col(label).alias("label"))
         .groupBy("node")
@@ -727,21 +658,17 @@ def kcore(
     one count compare per round (node-set size is monotone
     decreasing, so equal size = fixpoint). Lineage truncated per
     round."""
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .filter(F.col("a") != F.col("b"))
-    )
+    # both orientations in one positional union, de-duplicated once
     e = (
-        und.unionByName(und.select(F.col("b").alias("a"),
-                                   F.col("a").alias("b")))
-        .distinct()
-        .repartition("a")
+        edge_set(edges.select(src, dst).union(edges.select(dst, src)),
+                 src, dst)
+        .filter(F.col("src") != F.col("dst"))
+        .repartition("src")
         .persist()
     )
     try:
         cur = (
-            e.groupBy(F.col("a").alias("node"))
+            e.groupBy(F.col("src").alias("node"))
             .agg(F.count("*").alias("deg"))
             .filter(F.col("deg") >= k)
             .localCheckpoint(eager=False)
@@ -751,11 +678,11 @@ def kcore(
             if n_cur == 0:
                 break
             nxt = (
-                e.join(cur.select(F.col("node").alias("a")), "a",
+                e.join(cur.select(F.col("node").alias("src")), "src",
                        "left_semi")
-                .join(cur.select(F.col("node").alias("b")), "b",
+                .join(cur.select(F.col("node").alias("dst")), "dst",
                       "left_semi")
-                .groupBy(F.col("a").alias("node"))
+                .groupBy(F.col("src").alias("node"))
                 .agg(F.count("*").alias("deg"))
                 .filter(F.col("deg") >= k)
                 .localCheckpoint(eager=False)
@@ -799,7 +726,8 @@ def harmonic_centrality(
     seed sets."""
     frontier = seeds.select(F.col(node).alias("seed")).distinct(
     ).withColumn("node", F.col("seed"))
-    visited = _frontier_bfs(edges, src, dst, frontier, ["seed"], max_depth)
+    visited = _frontier_bfs(edge_set(edges, src, dst), frontier, ["seed"],
+                            max_depth)
     return (
         visited.filter(F.col("dist") > 0)
         .groupBy("node")
@@ -837,18 +765,13 @@ def reciprocity(
     AQE-splittable — then one map-side-combinable count per node,
     left-joined onto the out-degree table (also one aggregate).
     Self-loops are excluded (trivially reciprocal)."""
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    out_deg = e.groupBy(F.col("a").alias("node")).agg(
+    e = edge_set(edges, src, dst).filter(F.col("src") != F.col("dst"))
+    out_deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("out_deg"))
-    rev = e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     recip = (
-        e.join(rev, ["a", "b"], "left_semi")
-        .groupBy(F.col("a").alias("node"))
+        e.join(rev, ["src", "dst"], "left_semi")
+        .groupBy(F.col("src").alias("node"))
         .agg(F.count("*").alias("n_reciprocal"))
     )
     return (

@@ -19,7 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from .graph import edge_set
+
 MENTIONS_PRED = "http://tortank-spark.dev/ns#mentions"
+# a mention is a maximal run of digits, letters of any script, "_" and
+# "-"; Java regex and DuckDB's RE2 read this class identically, so the
+# entity-link oracles split on it too
+MENTION_SPLIT = r"[^0-9\p{L}_-]+"
 
 
 def detect_mentions(pages: DataFrame, min_len: int = 3) -> DataFrame:
@@ -28,7 +34,7 @@ def detect_mentions(pages: DataFrame, min_len: int = 3) -> DataFrame:
     toks = pages.select(
         "url",
         F.explode(
-            F.split(F.lower(F.col("text")), r"[^0-9\p{L}_-]+")
+            F.split(F.lower(F.col("text")), MENTION_SPLIT)
         ).alias("mention"),
     ).filter(F.length("mention") >= min_len)
     return toks.groupBy("url", "mention").agg(F.count("*").alias("tf"))
@@ -132,11 +138,7 @@ def neighborhood_jaccard(
     so the Jaccard stays internally consistent. One aggregate after
     the pair join (map-side partial), two broadcast-size degree
     joins; no Python anywhere."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
+    e = edge_set(edges, src, dst)
     if max_df is not None:
         rare = (
             e.groupBy("dst").agg(F.count("*").alias("_df"))

@@ -22,8 +22,8 @@ Scale design (the WebPIE insight — Urbani et al., "Scalable
 Distributed Reasoning using MapReduce", ISWC'09): schema triples are
 ontology-sized (KBs-to-MBs even for web-scale vocabularies) while
 instance triples are the 100-TB side. So: (1) close the schema
-relations first with the frontier-sized semi-naive loop from
-:func:`tortank_spark.graph.transitive_closure` — iteration touches
+relations first with the semi-naive frontier BFS (frontier-sized
+rounds) of :func:`tortank_spark.graph.transitive_closure` — touching
 ONLY the tiny schema set; (2) stratify the instance rules 7 → 2/3 → 9
 with the *closed* schema broadcast into every join, which makes
 instance entailment a SINGLE shuffle-free pass over the big table (no

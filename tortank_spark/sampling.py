@@ -11,6 +11,31 @@ from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
 
+def _tournament(
+    df: DataFrame, group: str, key, tie: str, salt, k: int,
+) -> DataFrame:
+    """The k smallest (``key``, ``tie``) rows of each ``group`` as a
+    salted two-level tournament -> ``df`` plus ``_rank`` (1..k). Level
+    1 takes a local top-k within (group, ``salt``), so every window
+    partition holds ~1/n_salts of a group; level 2 re-ranks the
+    surviving k * n_salts candidates per group (bounded rows by
+    construction). ``tie`` makes the order total, so the salt NEVER
+    affects the result (the top-k of a total order is
+    partitioning-invariant) and an oracle replays a plain per-group
+    row_number."""
+    lvl1 = Window.partitionBy(group, "_salt").orderBy("_key", tie)
+    lvl2 = Window.partitionBy(group).orderBy("_key", tie)
+    return (
+        df.withColumn("_key", key)
+        .withColumn("_salt", salt)
+        .withColumn("_rn", F.row_number().over(lvl1))
+        .filter(F.col("_rn") <= k)
+        .withColumn("_rank", F.row_number().over(lvl2))
+        .filter(F.col("_rank") <= k)
+        .drop("_key", "_salt", "_rn")
+    )
+
+
 def stratified_sample(
     df: DataFrame, strata_col: str, id_col: str, k: int,
     n_salts: int = 64,
@@ -24,33 +49,15 @@ def stratified_sample(
 
     Scale shape — the naive formulation (one row_number window
     partitioned by stratum) sorts EACH ENTIRE STRATUM in a single
-    task: a web-scale 'en' stratum is one straggler/OOM. This runs a
-    two-level tournament instead: level 1 takes a local top-k within
-    (stratum, salt) — ``n_salts`` hash-derived salts, so every window
-    partition holds ~1/n_salts of the stratum — and level 2 re-ranks
-    the surviving k * n_salts candidates per stratum (bounded rows by
-    construction). The salt NEVER affects the result (the final
-    top-k of a total order is partitioning-invariant), so the oracle
-    replays a plain per-stratum row_number — which is also why the
-    driver check stays a FULL value oracle without replicating
+    task: a web-scale 'en' stratum is one straggler/OOM. This runs the
+    salted two-level tournament (``_tournament``) over ``n_salts``
+    hash-derived salts instead; the salt never affects the result, so
+    the oracle replays a plain per-stratum row_number — which is also
+    why the driver check stays a FULL value oracle without replicating
     xxhash64 salting in SQL."""
     key = F.md5(F.col(id_col).cast("string"))
     salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts))
-    lvl1 = Window.partitionBy(strata_col, "_salt").orderBy(
-        "_key", id_col
-    )
-    lvl2 = Window.partitionBy(strata_col).orderBy("_key", id_col)
-    cand = (
-        df.withColumn("_key", key)
-        .withColumn("_salt", salt)
-        .withColumn("_rn", F.row_number().over(lvl1))
-        .filter(F.col("_rn") <= k)
-    )
-    return (
-        cand.withColumn("_rn2", F.row_number().over(lvl2))
-        .filter(F.col("_rn2") <= k)
-        .drop("_key", "_salt", "_rn", "_rn2")
-    )
+    return _tournament(df, strata_col, key, id_col, salt, k).drop("_rank")
 
 
 def sample_neighbors(
@@ -64,11 +71,10 @@ def sample_neighbors(
     executors). Hashing the PAIR matters: hashing dst alone would
     elect the same globally-lucky neighbors under every node.
 
-    Same two-level salted tournament as stratified_sample (level-1
-    top-k within (src, salt), level-2 re-rank of <= k*n_salts
-    survivors), so a web-scale celebrity node never sorts its whole
-    adjacency in one task; the salt provably never changes the
-    result, so the oracle replays a plain per-src row_number.
+    The salted two-level tournament (``_tournament``, grouped by src)
+    means a web-scale celebrity node never sorts its whole adjacency
+    in one task; the salt provably never changes the result, so the
+    oracle replays a plain per-src row_number.
 
     Ranks are prefix-stable: the rank<=j subset IS the j-fanout
     sample, so one ranking serves every smaller fanout for free."""
@@ -79,20 +85,8 @@ def sample_neighbors(
         )
     )
     salt = F.pmod(F.xxhash64(F.col(src), F.col(dst)), F.lit(n_salts))
-    lvl1 = Window.partitionBy(src, "_salt").orderBy("_key", dst)
-    lvl2 = Window.partitionBy(src).orderBy("_key", dst)
-    cand = (
-        edges.select(src, dst)
-        .withColumn("_key", key)
-        .withColumn("_salt", salt)
-        .withColumn("_rn", F.row_number().over(lvl1))
-        .filter(F.col("_rn") <= k)
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(lvl2))
-        .filter(F.col("rank") <= k)
-        .select(src, dst, "rank")
-    )
+    return _tournament(edges.select(src, dst), src, key, dst, salt, k
+                       ).select(src, dst, F.col("_rank").alias("rank"))
 
 
 def khop_sample(

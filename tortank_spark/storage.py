@@ -37,10 +37,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def write_triples_pbucketed(
     df: DataFrame,
     path: str,
