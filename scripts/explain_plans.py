@@ -9,7 +9,7 @@ operators and assert the plan properties we design for:
   SimHash signatures, the three media stages) and numpy batch stage
   (winnow fingerprints, LSH candidates, IVF assignment, embedding
   bands) plans to one MapInArrow, no MapInPandas and no Exchange, and
-  so do a pipeline bucket's triples in both syntax modes
+  so do a pipeline bucket's triples and lineage in both syntax modes
 * language ID and the cleaning gate plan no Python stage at all
 """
 
@@ -131,22 +131,26 @@ def main():
               "Python stage")
         ok &= no_python
 
-    # 1c. a pipeline bucket's triples come straight off that stage:
-    # one MapInArrow and no shuffle (no bucket-wide distinct) for both
-    # syntax modes' per-document functions
-    from tortank_spark.extract import doc_stage, embedded_triples, triples_only
-    from tortank_spark.grammar.turtle import parse_document
+    # 1c. a pipeline bucket's triples and its lineage come straight off
+    # that stage: one MapInArrow and no shuffle (no bucket-wide
+    # distinct, no per-url groupBy) for both syntax modes'
+    # per-document functions
+    from tortank_spark.extract import (
+        doc_lineage, doc_stage, embedded_triples, triples_only)
+    from tortank_spark.grammar.turtle import parse_turtle
     from tortank_spark.schema import EXTRACT_SCHEMA
 
-    for per_doc in (parse_document, embedded_triples):
-        p = plan_of(triples_only(
-            doc_stage(pages, per_doc, EXTRACT_SCHEMA, salt=True)))
-        tree = p.split("\n\n")[0]
-        one_stage = (sum("MapInArrow" in l for l in tree.splitlines()) == 1
-                     and "Exchange" not in p)
-        print(f"{'ok  ' if one_stage else 'FAIL'} bucket triples over "
-              f"{per_doc.__name__}: one MapInArrow, no Exchange")
-        ok &= one_stage
+    for per_doc in (parse_turtle, embedded_triples):
+        extracted = doc_stage(pages, per_doc, EXTRACT_SCHEMA, salt=True)
+        for what, df in (("triples", triples_only(extracted)),
+                         ("lineage", doc_lineage(extracted))):
+            p = plan_of(df)
+            tree = p.split("\n\n")[0]
+            one_stage = (sum("MapInArrow" in l for l in tree.splitlines())
+                         == 1 and "Exchange" not in p)
+            print(f"{'ok  ' if one_stage else 'FAIL'} bucket {what} over "
+                  f"{per_doc.__name__}: one MapInArrow, no Exchange")
+            ok &= one_stage
 
     # 2. pattern filter pushes predicates to the scan
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")

@@ -6,7 +6,7 @@ import pytest
 
 from tortank_spark.extract import extract_triples
 from tortank_spark.jsonld import (
-    _expand_island, expand_jsonld, extract_jsonld, find_islands)
+    _Expander, expand_jsonld, extract_jsonld, find_islands, jsonld_triples)
 from tortank_spark.microdata import extract_microdata
 from tortank_spark.rdfa import extract_rdfa, extract_rdfa_triples
 
@@ -80,12 +80,10 @@ def test_jsonld_counter_threads_across_islands():
     )
     islands = find_islands(page)
     assert len(islands) == 2
-    counter, allts = 0, []
+    exp = _Expander("")
     for isl in islands:
-        ts, err, counter = _expand_island(isl, "", counter)
-        assert err is None
-        allts.extend(ts)
-    bnodes = {t[0] for t in allts if t[1] == "bnode"}
+        exp.island(isl)
+    bnodes = {t[0] for t in exp.triples if t[1] == "bnode"}
     assert bnodes == {"_:1", "_:2", "_:3", "_:4"}  # no label reuse
 
 
@@ -112,8 +110,15 @@ def test_jsonld_graph_and_explicit_bnode_relabeling():
      "exclusive"),
 ])
 def test_jsonld_out_of_scope_quarantines(payload, frag):
+    from tortank_spark.quarantine import attempt
+
     ts, err = expand_jsonld(payload)
     assert ts == [] and err is not None and frag in err
+    # the same island on a page: a parse_error naming the island
+    ts, q = attempt(jsonld_triples,
+                    f'<script type="application/ld+json">{payload}</script>')
+    assert ts == [] and q.reason == "parse_error"
+    assert q.detail.startswith("island 0: ") and frag in q.detail
 
 
 def test_jsonld_dropped_keys_and_null():
@@ -248,43 +253,54 @@ def mixed_pages(spark):
 
 
 # every page extractor runs in extract.doc_stage: (extractor, the page
-# in its syntax, a subject of that page, whether a page in another
-# syntax is a parse failure, the error u:bad gets)
+# in its syntax, a subject of that page, the quarantine reason of a
+# page in another syntax (None: a parse_ok status row), the reason and
+# detail fragment u:bad gets)
 STAGES = [
-    (extract_triples, "u:t", "http://e/a", False,
-     "could not parse the doc completely"),
-    (extract_jsonld, "u:j", "http://j/1", False, "island 0: invalid JSON"),
-    (extract_rdfa, "u:r", "http://r/1", True, None),
-    (extract_microdata, "u:m", "http://m/1", True, None),
+    (extract_triples, "u:t", "http://e/a", "parse_error",
+     ("parse_error", "could not parse the doc completely")),
+    (extract_jsonld, "u:j", "http://j/1", "no_markup",
+     ("parse_error", "island 0: invalid JSON")),
+    (extract_rdfa, "u:r", "http://r/1", None, (None, None)),
+    (extract_microdata, "u:m", "http://m/1", None, (None, None)),
 ]
 STAGE_IDS = [c[0].__name__ for c in STAGES]
 
 
 @pytest.mark.parametrize(
-    "extract, page, subject, foreign_ok, bad_error", STAGES, ids=STAGE_IDS)
+    "extract, page, subject, foreign_reason, bad", STAGES, ids=STAGE_IDS)
 def test_extract_stage_schema_and_quarantine(
-        spark, mixed_pages, extract, page, subject, foreign_ok, bad_error):
+        spark, mixed_pages, extract, page, subject, foreign_reason, bad):
     from tortank_spark.schema import EXTRACT_SCHEMA
 
     ext = extract(mixed_pages, fixture_mode=True)
     assert ext.schema == EXTRACT_SCHEMA
     rows = ext.collect()
     own = [r for r in rows if r["url"] == page]
-    assert own and all(r["parse_ok"] and r["error"] is None for r in own)
+    assert own and all(r["parse_ok"] and r["reason"] is None
+                       and r["detail"] is None for r in own)
     assert subject in {r["s"] for r in own}
+    # the page fields sit on exactly one of the page's rows
+    assert [r["n_triples"] for r in own if r["n_triples"] is not None] \
+        == [len(own)]
     # every other page is exactly one status row, not a job failure
+    bad_reason, bad_frag = bad
+    want = {"u:bad": bad_reason}
+    if extract is extract_triples:
+        want["u:deep"] = "nesting_too_deep"
     for url in {r["url"] for r in rows} - {page}:
         (q,) = [r for r in rows if r["url"] == url]
         assert q["s"] is None and q["p"] is None and q["o"] is None
-        if url == "u:bad":
-            assert q["parse_ok"] == (bad_error is None)
-            assert bad_error is None or bad_error in q["error"]
-        else:
-            assert q["parse_ok"] == foreign_ok
-            assert (q["error"] is None) == foreign_ok
+        reason = want.get(url, foreign_reason)
+        assert q["n_triples"] == 0
+        assert q["parse_ok"] == (reason is None)
+        assert q["reason"] == reason
+        assert (q["detail"] is None) == (reason is None)
+        if url == "u:bad" and bad_frag is not None:
+            assert bad_frag in q["detail"]
     if extract is extract_triples:
         (deep,) = [r for r in rows if r["url"] == "u:deep"]
-        assert deep["error"] == "nesting too deep"
+        assert deep["detail"] == "nesting too deep"
 
 
 @pytest.mark.parametrize(

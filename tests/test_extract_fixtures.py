@@ -11,13 +11,14 @@ import hashlib
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.types import (
-    BooleanType, IntegerType, StringType, StructField, StructType,
+    IntegerType, StringType, StructField, StructType,
 )
 
 from tortank_spark import fixtures
 from tortank_spark.fixtures import REF_FIXTURE_DIR
 from tortank_spark.compare import pr_overall, pr_per_url
 from tortank_spark.extract import doc_stage, extract_triples, triples_only
+from tortank_spark.schema import EXTRACT_SCHEMA
 
 
 @pytest.mark.needs_reference
@@ -76,7 +77,8 @@ def test_broken_page_quarantined_not_fatal(spark):
     bad = extracted.filter(~F.col("parse_ok")).collect()
     assert len(bad) == 1
     assert bad[0]["url"] == "https://synth.example.org/broken/0"
-    assert bad[0]["error"]
+    assert bad[0]["reason"] == "parse_error"
+    assert "could not parse the doc completely" in bad[0]["detail"]
     # good rows unaffected
     assert triples_only(extracted).count() > 0
 
@@ -91,14 +93,13 @@ def test_text_byte_fidelity_per_url(spark):
 
     def witness(text, _prefix):
         sha = hashlib.sha1(text.encode("utf-8")).hexdigest()
-        return [(sha, len(text))], None
+        return [(sha, len(text))]
 
     schema = StructType([
         StructField("url", StringType()),
         StructField("text_sha1", StringType()),
         StructField("n_chars", IntegerType()),
-        StructField("parse_ok", BooleanType()),
-        StructField("error", StringType()),
+        *EXTRACT_SCHEMA.fields[-4:],
     ])
     got = {r["url"]: r for r in
            doc_stage(pages, witness, schema, salt=True).collect()}

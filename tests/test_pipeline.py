@@ -11,17 +11,20 @@ import pytest
 from tortank_spark import fixtures
 from tortank_spark.linking import MENTIONS_PRED
 from tortank_spark.pipeline import run_pipeline
+from tortank_spark.quarantine import REASONS
 
 
 def assert_manifests_match_lineage(spark, out, n_buckets):
-    """The manifests' summed counts equal a recount of the written
-    lineage: they ride on the lineage write, not on a separate job."""
+    """The manifests' summed counts, one per quarantine reason
+    included, equal a recount of the written lineage: they ride on the
+    lineage write, not on a separate job."""
     ms = [json.loads(Path(out, f"bucket={b}", "_MANIFEST.json").read_text())
           for b in range(n_buckets)]
     got = tuple(sum(m[k] for m in ms)
-                for k in ("docs", "triples", "parse_failures"))
+                for k in ("docs", "triples", "parse_failures", *REASONS))
     r = spark.read.parquet(f"{out}/bucket=*/lineage").agg(
-        F.count(F.lit(1)), F.sum("n_triples"), F.count_if(~F.col("parse_ok"))
+        F.count(F.lit(1)), F.sum("n_triples"), F.count_if(~F.col("parse_ok")),
+        *(F.count_if(F.col("reason") == r) for r in REASONS),
     ).first()
     assert got == tuple(r), (got, r)
 
@@ -106,7 +109,8 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     # lineage: the broken page is quarantined with an error message
     lineage = spark.read.parquet(out + "/bucket=*/lineage")
     bad = lineage.filter(~F.col("parse_ok")).collect()
-    assert len(bad) == 1 and bad[0]["error"]
+    assert len(bad) == 1 and bad[0]["reason"] == "parse_error"
+    assert "could not parse the doc completely" in bad[0]["detail"]
 
     # canonicalization: every synthetic `ex:page{i} owl:sameAs ex:alias{i}`
     # pair (filler rows i % 3 == 0) collapsed onto its lexicographic
@@ -284,7 +288,8 @@ def test_pipeline_embedded_mode(spark, tmp_path):
     assert rows_l["u:none"]["n_triples"] == 0
     assert rows_l["u:twice"]["n_triples"] == 1
     assert all(r["parse_ok"] for r in rows_l.values())
-    assert rows_l["u:j"]["error"] is None
+    assert rows_l["u:j"]["reason"] is None
+    assert rows_l["u:j"]["detail"] is None
     assert_manifests_match_lineage(spark, out, 2)
     stats2 = run_pipeline(spark, pages, out, n_buckets=2,
                           syntax_mode="embedded")

@@ -91,6 +91,24 @@ def test_extraction_prunes_scan_to_url_text(spark, pages_parquet):
     assert "html" not in read_schema and "warc_ts" not in read_schema
 
 
+@pytest.mark.parametrize("mode", ["turtle", "embedded"])
+def test_bucket_lineage_plans_one_map_in_arrow_no_exchange(
+        spark, pages_parquet, mode):
+    """A pipeline bucket's lineage is ``doc_stage``'s one row per page
+    read off with a filter: one MapInArrow and no Exchange (no per-url
+    groupBy) in both syntax modes."""
+    from tortank_spark.extract import doc_lineage, doc_stage
+    from tortank_spark.pipeline import _PER_DOC
+    from tortank_spark.schema import EXTRACT_SCHEMA
+
+    pages = spark.read.parquet(pages_parquet)
+    plan = plan_of(doc_lineage(
+        doc_stage(pages, _PER_DOC[mode], EXTRACT_SCHEMA, salt=True)))
+    tree = plan.split("\n\n")[0]
+    assert sum("MapInArrow" in ln for ln in tree.splitlines()) == 1, tree
+    assert "Exchange" not in plan, tree
+
+
 def _map_stage(spark, stage):
     import numpy as np
 

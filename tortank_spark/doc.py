@@ -44,7 +44,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from . import algebra, serialize
-from .grammar.turtle import TurtleParser, CoercionError, DocError, _Backtrack
+from .grammar.turtle import TurtleParser
+from .quarantine import attempt
 from .schema import TRIPLE_COLS, TRIPLE_SCHEMA
 
 
@@ -84,12 +85,9 @@ class TurtleDocFrame:
         parser = TurtleParser(
             text, seed_prefixes=prefixes, well_known_prefix=well_known_prefix
         )
-        try:
-            triples = parser.parse()
-        except (DocError, CoercionError) as e:
-            raise ValueError(str(e)) from None
-        except _Backtrack:
-            raise ValueError("parse error") from None
+        triples, q = attempt(parser.parse)
+        if q is not None:
+            raise ValueError(q.detail)
         df = spark.createDataFrame(
             [(url, *t) for t in triples], TRIPLE_SCHEMA
         )

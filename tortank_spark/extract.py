@@ -1,9 +1,9 @@
 """Per-document extraction stage — the engine's "scan".
 
 Every page extractor is a plain per-document function
-``(text, bnode_prefix) -> (rows, error)``: the Turtle grammar (rules
-P1-P24, SURVEY.md §2.2), the JSON-LD island expander and the RDFa-Lite
-and microdata scanners. ``doc_stage`` runs any of them as ONE
+``(text, bnode_prefix) -> rows`` that may raise: the Turtle grammar
+(rules P1-P24, SURVEY.md §2.2), the JSON-LD island expander and the
+RDFa-Lite and microdata scanners. ``doc_stage`` runs any of them as ONE
 Arrow-batched ``mapInArrow`` stage over the page table: state is
 document-scoped (prefix redefinition mid-doc, turtle_doc.rs:489-540) so
 a document is the natural unit of work, and documents are rows. That
@@ -23,8 +23,8 @@ Scale design (100 TB / 10^12 docs):
   unique with zero coordination (partition-salted counters,
   SURVEY.md §4) while preserving the reference's per-doc allocation
   order.
-* parse failures become quarantine rows (parse_ok=false, error) —
-  never job failures.
+* a page its extractor raises on, over the byte budget or not UTF-8
+  is one quarantine row (``doc_stage``), never a job failure.
 """
 
 from __future__ import annotations
@@ -40,7 +40,8 @@ import pyspark.sql.functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from .grammar.turtle import parse_document
+from .grammar.turtle import parse_turtle
+from .quarantine import MAX_PAGE_BYTES, Quarantine, attempt
 from .schema import EMBEDDED_SCHEMA, EXTRACT_SCHEMA, TRIPLE_SCHEMA
 
 
@@ -109,31 +110,43 @@ def row_stage(
 
 def doc_stage(
     pages: DataFrame,
-    per_doc: Callable[[str, str], tuple[list[tuple], str | None]],
+    per_doc: Callable[[str, str], list[tuple]],
     schema: StructType,
     *,
     salt: bool,
 ) -> DataFrame:
-    """Run ``per_doc(text, bnode_prefix) -> (rows, error)`` over every
-    (url, text) page as one ``row_stage``.
+    """Run ``per_doc(text, bnode_prefix) -> rows`` over every (url,
+    text) page as one ``row_stage``; ``schema`` is ``url``, one field
+    per row element, then ``n_triples``, ``parse_ok``, ``reason`` and
+    ``detail``. The text arrives as UTF-8 bytes, and a page over
+    ``quarantine.MAX_PAGE_BYTES`` or not UTF-8 is never parsed. A page
+    that fails (``quarantine.attempt``) is the one row ``(url,
+    nulls..., 0, false, reason, detail)``; a page without rows is
+    ``(url, nulls..., 0, true, null, null)``; otherwise its first row
+    carries ``n_triples``. ``salt`` prefixes blank-node labels with
+    sha1(url)[:12] so they are unique across documents; unsalted
+    labels are the reference's per-doc counter ``_:1, _:2, ...``."""
+    blank = (None,) * (len(schema.fieldNames()) - 5)
 
-    ``schema`` is the stage output: ``url``, then one field per
-    element of a row tuple, then ``parse_ok`` and ``error``. A page
-    whose call returns an error or no rows yields exactly one
-    quarantine row ``(url, nulls..., parse_ok = error is None,
-    error)``. ``salt`` prefixes blank-node labels with sha1(url)[:12]
-    so they are unique across documents; unsalted labels are the
-    reference's per-doc counter ``_:1, _:2, ...``."""
-    blank = (None,) * (len(schema.fieldNames()) - 3)
+    def read_page(raw, bnode_prefix):
+        if len(raw) > MAX_PAGE_BYTES:
+            raise Quarantine("too_large", f"{len(raw)} bytes, over the "
+                             f"{MAX_PAGE_BYTES}-byte page budget")
+        return per_doc(raw.decode("utf-8"), bnode_prefix)
 
-    def per_page(url, text):
-        rows, err = per_doc(text or "", _salt(url) if salt else "")
-        ok = err is None
-        if not ok or not rows:
-            return ((url, *blank, ok, err),)
-        return [(url, *r, ok, err) for r in rows]
+    def per_page(url, raw):
+        rows, q = attempt(read_page, raw or b"", _salt(url) if salt else "")
+        if q is not None:
+            return ((url, *blank, 0, False, q.reason, q.detail),)
+        if not rows:
+            return ((url, *blank, 0, True, None, None),)
+        out = [(url, *r, None, True, None, None) for r in rows]
+        out[0] = (url, *rows[0], len(rows), True, None, None)
+        return out
 
-    return row_stage(pages, ["url", "text"], per_page, schema)
+    return row_stage(
+        pages.select("url", F.col("text").cast("binary").alias("text")),
+        ["url", "text"], per_page, schema)
 
 
 def extract_triples(
@@ -153,77 +166,59 @@ def extract_triples(
     dicts ride the task closure; a huge external prefix table would use
     ``spark.sparkContext.broadcast`` instead.
     """
-    parse = partial(parse_document, seed_prefixes=seed_prefixes,
+    parse = partial(parse_turtle, seed_prefixes=seed_prefixes,
                     well_known_prefix=well_known_prefix)
     return doc_stage(pages, parse, EXTRACT_SCHEMA, salt=not fixture_mode)
 
 
 def triples_only(extracted: DataFrame) -> DataFrame:
     """Keep good triple rows with the canonical triple schema."""
-    return extracted.filter(F.col("parse_ok") & F.col("s").isNotNull()).select(
-        *[f.name for f in TRIPLE_SCHEMA.fields]
-    )
+    return extracted.filter(F.col("parse_ok") & F.col("s").isNotNull()
+                            ).select(*TRIPLE_SCHEMA.fieldNames())
 
 
 def doc_lineage(extracted: DataFrame) -> DataFrame:
     """Extraction rows -> one lineage row per url: (url, n_triples,
-    parse_ok, error). A quarantine row counts no triple."""
-    return extracted.groupBy("url").agg(
-        F.count("s").alias("n_triples"),
-        F.min(F.col("parse_ok").cast("int")).cast("boolean").alias("parse_ok"),
-        F.first("error", ignorenulls=True).alias("error"),
-    )
+    parse_ok, reason, detail). These are ``doc_stage``'s page rows, so
+    lineage is a filter over the stage output: no shuffle."""
+    return extracted.filter(F.col("n_triples").isNotNull()).select(
+        "url", "n_triples", "parse_ok", "reason", "detail")
 
 
-def embedded_document(
-    text: str, bnode_prefix: str = ""
-) -> tuple[list[tuple], None]:
-    """Run all four per-document extractors over one page -> (rows,
-    None), each row a triple tagged with its syntax: ``('turtle' |
-    'jsonld' | 'rdfa' | 'microdata', s, s_kind, p, o, o_kind,
-    o_datatype, o_lang)``. A syntax that fails on the page contributes
-    no row; the page itself never fails."""
+def embedded_document(text: str, bnode_prefix: str = "") -> list[tuple]:
+    """Run all four per-document extractors over one page -> its rows,
+    each a triple tagged with its syntax: ``('turtle' | 'jsonld' |
+    'rdfa' | 'microdata', s, s_kind, p, o, o_kind, o_datatype,
+    o_lang)``. Each syntax runs in its own ``quarantine.attempt``: one
+    that fails on the page (a bad JSON-LD island, HTML read as Turtle)
+    adds no row, and the page itself does not fail."""
     # these modules import doc_stage from here, so they load lazily
-    from .jsonld import jsonld_document
-    from .microdata import extract_microdata_triples
-    from .rdfa import extract_rdfa_triples
+    from .jsonld import jsonld_triples
+    from .microdata import microdata_triples
+    from .rdfa import rdfa_triples
 
-    rows = []
-    ts, err = parse_document(text, bnode_prefix)
-    if err is None:
-        rows.extend(("turtle", *t) for t in ts)
-    # conservative per-syntax dispatch (guide §1.2 "per-task
-    # work"): each scanner can only ever emit when its trigger
-    # token occurs somewhere in the page — JSON-LD islands need a
-    # (case-insensitive) 'application/ld+json' script type, every
-    # RDFa emission requires a property= or typeof= attribute,
-    # every microdata emission an itemscope. A substring test over
-    # the lowered page is exactly conservative (false positives
-    # just run the scanner and emit nothing, false negatives are
-    # impossible), and skips 2-3 full HTML scans on the typical
-    # single-syntax page.
+    # conservative per-syntax dispatch: a scanner can only emit when its
+    # trigger token is in the lowered page ('ld+json' script type, an
+    # RDFa property=/typeof=, an itemscope), so the test has no false
+    # negatives and skips 2-3 HTML scans on a single-syntax page
     low = text.lower()
+    syntaxes = [("turtle", parse_turtle)]
     if "ld+json" in low:
-        ts, err = jsonld_document(text, bnode_prefix)
-        if err is None:
-            rows.extend(("jsonld", *t) for t in ts)
+        syntaxes.append(("jsonld", jsonld_triples))
     if "property" in low or "typeof" in low:
-        ts, _ = extract_rdfa_triples(text, bnode_prefix)
-        rows.extend(("rdfa", *t) for t in ts)
+        syntaxes.append(("rdfa", rdfa_triples))
     if "itemscope" in low:
-        ts, _ = extract_microdata_triples(text, bnode_prefix)
-        rows.extend(("microdata", *t) for t in ts)
-    return rows, None
+        syntaxes.append(("microdata", microdata_triples))
+    return [(name, *t) for name, body in syntaxes
+            for t in attempt(body, text, bnode_prefix)[0]]
 
 
-def embedded_triples(
-    text: str, bnode_prefix: str = ""
-) -> tuple[list[tuple], None]:
+def embedded_triples(text: str, bnode_prefix: str = "") -> list[tuple]:
     """The page's distinct triples over all four syntaxes, untagged:
     a triple asserted in two syntaxes counts once, as the canonical
     table is a set (the reference's statement dedup)."""
-    rows, _ = embedded_document(text, bnode_prefix)
-    return list(dict.fromkeys(r[1:] for r in rows)), None
+    return list(dict.fromkeys(
+        r[1:] for r in embedded_document(text, bnode_prefix)))
 
 
 def extract_embedded(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
@@ -235,14 +230,12 @@ def extract_embedded(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
     'microdata')``.
 
     Single-pass by construction: one ``doc_stage``, so the page table
-    is read ONCE (a DataFrame-level union of the four standalone
-    extractors would scan 100 TB four times). A page may legitimately
-    contribute triples in several syntaxes. Per-syntax quarantine
-    semantics differ by design — a JSON-LD page is not a Turtle parse
-    failure — so this operator emits good triples only; per-page parse
-    auditing stays with the standalone extractors (extract_triples /
-    jsonld.extract_jsonld / rdfa.extract_rdfa /
-    microdata.extract_microdata)."""
+    is read ONCE (a union of the four standalone extractors would scan
+    100 TB four times). A page may contribute triples in several
+    syntaxes; a syntax failing on a page is no page failure (a JSON-LD
+    page is not a Turtle parse failure), so this operator emits good
+    triples only and per-syntax auditing stays with the standalone
+    extractors."""
     return (
         doc_stage(pages, embedded_document, EMBEDDED_SCHEMA,
                   salt=not fixture_mode)

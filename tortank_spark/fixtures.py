@@ -211,15 +211,12 @@ def make_golden_triples(spark: SparkSession) -> DataFrame:
     """Expected triples per fixture url: the reference goldens parsed
     with the same grammar (the reference's own harness also re-parses
     its goldens — /root/reference/src/tests/mod.rs:40-48)."""
-    from .grammar.turtle import parse_document
+    from .grammar.turtle import parse_turtle
     from .schema import TRIPLE_SCHEMA
 
     rows = []
     for case, text in golden_texts().items():
-        triples, err = parse_document(text)
-        assert err is None, (case, err)
-        url = fixture_url(case)
-        rows.extend((url, *t) for t in triples)
+        rows.extend((fixture_url(case), *t) for t in parse_turtle(text))
     return spark.createDataFrame(rows, TRIPLE_SCHEMA)
 
 

@@ -47,6 +47,8 @@ from __future__ import annotations
 import re
 from typing import Optional
 
+from ..quarantine import never_raising
+
 from .lexical import (
     RDF_FIRST,
     RDF_NIL,
@@ -1038,37 +1040,30 @@ def _replay(parser: TurtleParser, start: int, end: int, what: str):
 DEFAULT_WELL_KNOWN_PREFIX = "http://example.org/.well-known/genid#"
 
 
-def parse_document(
+def parse_turtle(
     text: str, bnode_prefix: str = "", local_utc_offset_seconds: int = 0,
     seed_prefixes: Optional[dict] = None,
     well_known_prefix: Optional[str] = None,
     preserve_datetime_offset: bool = False,
-):
-    """Parse one Turtle/N-Triples document.
-
-    Returns ``(triples, error)``: a list of canonical 7-tuples
-    ``(s, s_kind, p, o, o_kind, o_datatype, o_lang)`` and None on
-    success, or ``([], message)`` on a document-level failure — the
-    reference rejects the whole doc (turtle_doc.rs:888-905); a web-scale
-    pipeline quarantines the row instead of crashing the job
-    (SURVEY.md §7 hard-part 5).
+) -> list[tuple]:
+    """Parse one Turtle/N-Triples document into canonical 7-tuples
+    ``(s, s_kind, p, o, o_kind, o_datatype, o_lang)``; a document-level
+    failure raises, as the reference rejects the whole doc
+    (turtle_doc.rs:888-905), and ``quarantine.classify`` names it.
 
     ``seed_prefixes`` is the R10 add_prefixes external prefix map
     (turtle_doc.rs:264-283); ``well_known_prefix`` turns on bnode
     skolemization (turtle_doc.rs:733-747; pass
     DEFAULT_WELL_KNOWN_PREFIX for the reference default, shared.rs:14).
     """
-    p = TurtleParser(text, bnode_prefix, local_utc_offset_seconds,
-                     seed_prefixes, well_known_prefix,
-                     preserve_datetime_offset)
-    try:
-        return p.parse(), None
-    except (DocError, CoercionError) as e:
-        return [], str(e)
-    except _Backtrack:
-        return [], "parse error"
-    except RecursionError:  # e.g. hundreds of nested [ ] or ( )
-        return [], "nesting too deep"
+    return TurtleParser(text, bnode_prefix, local_utc_offset_seconds,
+                        seed_prefixes, well_known_prefix,
+                        preserve_datetime_offset).parse()
+
+
+# (triples, None), or ([], detail) on a document-level failure: a
+# web-scale pipeline quarantines the page instead of crashing the job
+parse_document = never_raising(parse_turtle)
 
 
 def parse_ntriples_statement(text: str, offset: int = 0):

@@ -19,7 +19,7 @@ by real-world schema.org embeds; W3C JSON-LD 1.0 §6.1-6.11):
   mapping also serves as a prefix for compact IRIs ("schema:name").
   Remote contexts (string-valued @context, i.e. a URL) are NOT fetched
   — at 10^12 documents a per-doc network fetch is a non-starter; such
-  islands quarantine with a typed error instead of silently dropping.
+  islands quarantine as ``parse_error`` instead of silently dropping.
 * node objects with ``@id`` / ``@type`` / nested node objects (fresh
   blank node per-document counter, same ``_:{prefix}{n}`` labeling and
   url-salting scheme as the Turtle path — extract.py / SURVEY.md §4);
@@ -36,11 +36,12 @@ by real-world schema.org embeds; W3C JSON-LD 1.0 §6.1-6.11):
 Statement-level dedup per document matches the Turtle path's P23
 (reference statement dedup, turtle_doc.rs:284-293).
 
-Scale shape: identical to extract.extract_triples — ``jsonld_document``
+Scale shape: identical to extract.extract_triples — ``jsonld_triples``
 runs in the shared ``extract.doc_stage`` (one ``mapInArrow`` stage,
 zero shuffle, column pruning to (url, text), parallelism = input
-splits); malformed JSON or out-of-scope constructs become quarantine
-rows (parse_ok=false), never job failures.
+splits); malformed JSON or out-of-scope constructs raise, and the stage
+keeps the page as a quarantine row (``quarantine.classify`` names the
+reason), never a job failure.
 """
 
 from __future__ import annotations
@@ -51,10 +52,9 @@ import re
 from pyspark.sql import DataFrame
 
 from .extract import doc_stage
+from .grammar.lexical import RDF_TYPE, XSD
+from .quarantine import Quarantine, never_raising, within
 from .schema import EXTRACT_SCHEMA
-
-XSD = "http://www.w3.org/2001/XMLSchema#"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 _ISLAND_RE = re.compile(
     r"<script[^>]*type\s*=\s*[\"']application/ld\+json[\"'][^>]*>(.*?)</script>",
@@ -139,6 +139,15 @@ def _expand_iri(ctx: _Ctx, value: str, vocab_fallback: bool) -> str | None:
     return None
 
 
+def _must_expand(ctx: _Ctx, value: str, vocab_fallback: bool,
+                 what: str) -> str:
+    """``_expand_iri`` that raises where ``value`` expands to no IRI."""
+    iri = _expand_iri(ctx, value, vocab_fallback)
+    if iri is None:
+        raise ValueError(f"{what} does not expand to an IRI: {value!r}")
+    return iri
+
+
 def _py_number_literal(v) -> tuple[str, str]:
     """JSON number -> (lexical, datatype), mirroring the Turtle path's
     integer/double split (grammar/lexical.py numeric ladder)."""
@@ -156,12 +165,39 @@ class _Expander:
         self.counter = 0
         self.bnode_map: dict[str, str] = {}  # explicit _:x -> local label
         self.triples: list[tuple] = []
-        self._seen: set[tuple] = set()
+        self._emit = self.triples.append  # deduplicated on return (P23)
 
-    def _emit(self, t: tuple):
-        if t not in self._seen:
-            self._seen.add(t)
-            self.triples.append(t)
+    def island(self, payload: str) -> list[tuple]:
+        """Expand one island into the page's triples and return them
+        all; raises on malformed JSON or an out-of-scope construct."""
+        doc = json.loads(payload)
+        if "\\ud" in payload or "\\uD" in payload:
+            # an unpaired surrogate escape decodes to a lone surrogate,
+            # which no UTF-8 column can hold: raise UnicodeError here
+            json.dumps(doc, ensure_ascii=False).encode("utf-8")
+        self.bnode_map = {}  # explicit _:x labels are island-scoped
+        ctx = _Ctx()
+        if isinstance(doc, dict) and doc.get("@graph") is not None:
+            if "@context" in doc:
+                ctx = _apply_context(ctx, doc["@context"])
+            nodes = doc["@graph"]
+            if not isinstance(nodes, list):
+                raise ValueError("@graph must be an array")
+            # a node that also carries @graph is out of scope
+            if set(doc) - {"@graph", "@context", "@id"}:
+                raise ValueError(
+                    "node properties alongside @graph are out of scope")
+        elif isinstance(doc, (dict, list)):
+            # a top-level node applies its own @context in node()
+            nodes = doc if isinstance(doc, list) else [doc]
+        else:
+            raise ValueError("top-level JSON-LD must be an object or array")
+        for n in nodes:
+            if not isinstance(n, dict):
+                raise ValueError("@graph and top-level array entries must "
+                                 "be node objects")
+            self.node(n, ctx)
+        return list(dict.fromkeys(self.triples))
 
     def _fresh_bnode(self) -> str:
         self.counter += 1
@@ -188,10 +224,7 @@ class _Expander:
             if sid.startswith("_:"):
                 s, s_kind = self._label_bnode(sid), "bnode"
             else:
-                iri = _expand_iri(ctx, sid, vocab_fallback=False)
-                if iri is None:
-                    raise ValueError(f"@id does not expand to an IRI: {sid!r}")
-                s, s_kind = iri, "iri"
+                s, s_kind = _must_expand(ctx, sid, False, "@id"), "iri"
         else:
             s, s_kind = self._fresh_bnode(), "bnode"
 
@@ -200,11 +233,8 @@ class _Expander:
                 for tv in val if isinstance(val, list) else [val]:
                     if not isinstance(tv, str):
                         raise ValueError("@type values must be strings")
-                    tiri = _expand_iri(ctx, tv, vocab_fallback=True)
-                    if tiri is None:
-                        raise ValueError(
-                            f"@type does not expand to an IRI: {tv!r}")
-                    self._emit((s, s_kind, RDF_TYPE, tiri, "iri",
+                    self._emit((s, s_kind, RDF_TYPE,
+                                _must_expand(ctx, tv, True, "@type"), "iri",
                                 None, None))
                 continue
             if key in _KEYWORDS:
@@ -237,29 +267,14 @@ class _Expander:
                     if lang is not None:
                         raise ValueError("@language on a non-string @value")
                     lex, ndt = _py_number_literal(lit)
-                    if dt is not None:
-                        dti = _expand_iri(ctx, dt, vocab_fallback=True)
-                        if dti is None:
-                            raise ValueError(
-                                f"@type does not expand to an IRI: {dt!r}")
-                        ndt = dti
-                    self._emit((s, s_kind, p, lex, "literal", ndt, None))
                 elif isinstance(lit, str):
-                    if lang is not None:
-                        self._emit((s, s_kind, p, lit, "literal",
-                                    None, lang))
-                    elif dt is not None:
-                        dti = _expand_iri(ctx, dt, vocab_fallback=True)
-                        if dti is None:
-                            raise ValueError(
-                                f"@type does not expand to an IRI: {dt!r}")
-                        self._emit((s, s_kind, p, lit, "literal",
-                                    dti, None))
-                    else:
-                        self._emit((s, s_kind, p, lit, "literal",
-                                    XSD + "string", None))
+                    lex = lit
+                    ndt = None if lang is not None else XSD + "string"
                 else:
                     raise ValueError("unsupported @value payload")
+                if dt is not None:
+                    ndt = _must_expand(ctx, dt, True, "@type")
+                self._emit((s, s_kind, p, lex, "literal", ndt, lang))
                 return
             if set(val.keys()) == {"@id"} and isinstance(val["@id"], str):
                 # IRI / bnode reference object
@@ -268,11 +283,9 @@ class _Expander:
                     self._emit((s, s_kind, p, self._label_bnode(ref),
                                 "bnode", None, None))
                 else:
-                    iri = _expand_iri(ctx, ref, vocab_fallback=False)
-                    if iri is None:
-                        raise ValueError(
-                            f"@id does not expand to an IRI: {ref!r}")
-                    self._emit((s, s_kind, p, iri, "iri", None, None))
+                    self._emit((s, s_kind, p,
+                                _must_expand(ctx, ref, False, "@id"), "iri",
+                                None, None))
                 return
             # nested node object: expand depth-first (inner triples
             # first — the Turtle path's anon-bnode emission order)
@@ -289,68 +302,10 @@ class _Expander:
         raise ValueError(f"unsupported value type: {type(val).__name__}")
 
 
-def expand_jsonld(
-    payload: str, bnode_prefix: str = ""
-) -> tuple[list[tuple], str | None]:
-    """Expand ONE JSON-LD island to flat triple tuples.
-
-    Returns (triples, error): error is None on success; on any
-    out-of-scope construct or malformed JSON the island yields
-    ([], message) — the quarantine contract of the Turtle parser
-    (parse_document), so extraction jobs never fail on bad markup.
-    """
-    triples, err, _ = _expand_island(payload, bnode_prefix, 0)
-    return triples, err
-
-
-def _expand_island(
-    payload: str, bnode_prefix: str, counter_start: int,
-) -> tuple[list[tuple], str | None, int]:
-    """expand_jsonld plus an explicit blank-node counter thread, so a
-    page with several islands allocates one document-scoped label
-    sequence (the Turtle path's per-doc counter, extract.py)."""
-    try:
-        doc = json.loads(payload)
-    except ValueError as ex:
-        return [], f"invalid JSON: {ex}", counter_start
-    try:
-        exp = _Expander(bnode_prefix)
-        exp.counter = counter_start
-        ctx = _Ctx()
-        if isinstance(doc, dict):
-            if "@context" in doc:
-                ctx = _apply_context(ctx, doc["@context"])
-            graph = doc.get("@graph")
-            if graph is not None:
-                if not isinstance(graph, list):
-                    raise ValueError("@graph must be an array")
-                rest = {k: v for k, v in doc.items()
-                        if k not in ("@graph", "@context")}
-                if rest:
-                    # a node that also carries @graph is out of scope
-                    if set(rest) - {"@id"}:
-                        raise ValueError(
-                            "node properties alongside @graph are out "
-                            "of scope")
-                for n in graph:
-                    if not isinstance(n, dict):
-                        raise ValueError("@graph entries must be node objects")
-                    exp.node(n, ctx)
-            else:
-                exp.node(doc, _Ctx())  # node() re-applies its @context
-        elif isinstance(doc, list):
-            for n in doc:
-                if not isinstance(n, dict):
-                    raise ValueError("top-level array entries must be "
-                                     "node objects")
-                exp.node(n, ctx)
-        else:
-            raise ValueError("top-level JSON-LD must be an object or array")
-        return exp.triples, None, exp.counter
-    except ValueError as ex:
-        return [], str(ex), counter_start
-    except RecursionError:
-        return [], "nesting too deep", counter_start
+# ONE island -> (triples, None), or ([], detail) on malformed JSON or
+# an out-of-scope construct: the Turtle parser's parse_document contract
+expand_jsonld = never_raising(
+    lambda payload, bnode_prefix="": _Expander(bnode_prefix).island(payload))
 
 
 def find_islands(page: str) -> list[str]:
@@ -358,31 +313,25 @@ def find_islands(page: str) -> list[str]:
     return [m.group(1) for m in _ISLAND_RE.finditer(page or "")]
 
 
-def jsonld_document(
-    text: str, bnode_prefix: str = ""
-) -> tuple[list[tuple], str | None]:
-    """Expand every JSON-LD island of one page -> (triples, error).
+def jsonld_triples(text: str, bnode_prefix: str = "") -> list[tuple]:
+    """Expand every JSON-LD island of one page -> its triples.
 
-    ONE bnode counter is threaded across the page's islands: labels
-    stay document-unique, islands share nothing else. Triples are
-    deduplicated per page (P23). A page without islands, or with any
-    island that fails, yields ([], error) — the whole page quarantines,
-    the Turtle path's whole-doc contract."""
+    ONE bnode counter runs across the page's islands: labels stay
+    document-unique, islands share nothing else. Triples are
+    deduplicated per page (P23). A page without islands raises
+    ``no_markup``; an island that fails fails the page, its detail
+    prefixed ``island {i}`` — the Turtle path's whole-doc contract."""
     islands = find_islands(text)
     if not islands:
-        return [], "no JSON-LD islands"
-    triples: list[tuple] = []
-    seen: set[tuple] = set()
-    counter = 0
+        raise Quarantine("no_markup", "no JSON-LD islands")
+    exp = _Expander(bnode_prefix)
     for i, payload in enumerate(islands):
-        ts, err, counter = _expand_island(payload, bnode_prefix, counter)
-        if err is not None:
-            return [], f"island {i}: {err}"
-        for t in ts:
-            if t not in seen:
-                seen.add(t)
-                triples.append(t)
-    return triples, None
+        with within(f"island {i}"):
+            triples = exp.island(payload)
+    return triples
+
+
+jsonld_document = never_raising(jsonld_triples)
 
 
 def extract_jsonld(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
@@ -390,5 +339,5 @@ def extract_jsonld(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
     quarantine rows included — the JSON-LD twin of
     extract.extract_triples, same schema, same salting, same
     no-shuffle scale shape."""
-    return doc_stage(pages, jsonld_document, EXTRACT_SCHEMA,
+    return doc_stage(pages, jsonld_triples, EXTRACT_SCHEMA,
                      salt=not fixture_mode)

@@ -32,10 +32,10 @@ microdata-to-RDF note's property-IRI rule):
   an id-index; documented, ignored).
 
 Zero triples on a page is data, not an error (most pages carry no
-microdata) — the scanner never raises.
+microdata), and malformed markup raises nothing.
 
 Scale shape: identical to the sibling extractors —
-``extract_microdata_triples`` runs in the shared ``extract.doc_stage``
+``microdata_triples`` runs in the shared ``extract.doc_stage``
 (one ``mapInArrow`` stage over (url, text), zero shuffle).
 """
 
@@ -44,11 +44,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from .extract import doc_stage
+from .grammar.lexical import RDF_TYPE, XSD_STRING
 from .htmlscan import WS_RE, scan_html
+from .jsonld import _ABS_IRI_RE
+from .quarantine import never_raising
 from .schema import EXTRACT_SCHEMA
-
-XSD = "http://www.w3.org/2001/XMLSchema#"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 _HREF_TAGS = {"a", "area", "link"}
 _SRC_TAGS = {"img", "audio", "video", "embed", "iframe", "source",
@@ -62,24 +62,11 @@ def _vocab_of(itemtype: str) -> str | None:
     return itemtype[: cut + 1] if cut > 0 else None
 
 
-def _is_abs_iri(v: str) -> bool:
-    from .jsonld import _ABS_IRI_RE
-
-    return bool(_ABS_IRI_RE.match(v))
-
-
-def extract_microdata_triples(
-    html: str, bnode_prefix: str = ""
-) -> tuple[list[tuple], str | None]:
-    """Scan one HTML page for microdata items; returns (triples, None)
-    — same flat tuples and never-raise contract as the siblings."""
+def microdata_triples(html: str, bnode_prefix: str = "") -> list[tuple]:
+    """Scan one HTML page -> its microdata triples, the same flat
+    tuples as the siblings; malformed markup raises nothing."""
     triples: list[tuple] = []
-    seen: set[tuple] = set()
-
-    def emit(t: tuple):
-        if t not in seen:
-            seen.add(t)
-            triples.append(t)
+    emit = triples.append  # deduplicated per page on return (P23)
 
     counter = 0
 
@@ -114,7 +101,7 @@ def extract_microdata_triples(
                 text = WS_RE.sub(" ", "".join(buf)).strip()
                 for p in preds:
                     emit((s, s_kind, p, text, "literal",
-                          XSD + "string", None))
+                          XSD_STRING, None))
             continue
 
         _, tag, attrs, self_closing = ev
@@ -124,12 +111,12 @@ def extract_microdata_triples(
         new_item = None
         if has_scope:
             itemid = attrs.get("itemid", "")
-            if itemid and _is_abs_iri(itemid):
+            if itemid and _ABS_IRI_RE.match(itemid):
                 subj, skind = itemid, "iri"
             else:
                 subj, skind = fresh(), "bnode"
             types = [t for t in attrs.get("itemtype", "").split()
-                     if _is_abs_iri(t)]
+                     if _ABS_IRI_RE.match(t)]
             for t in types:
                 emit((subj, skind, RDF_TYPE, t, "iri", None, None))
             vocab = _vocab_of(types[0]) if types else None
@@ -141,7 +128,7 @@ def extract_microdata_triples(
             es, ek, evocab = enclosing
             preds = []
             for name in prop_attr.split():
-                if _is_abs_iri(name):
+                if _ABS_IRI_RE.match(name):
                     preds.append(name)
                 elif evocab:
                     preds.append(evocab + name)
@@ -161,11 +148,11 @@ def extract_microdata_triples(
                 elif tag == "meta" and "content" in attrs:
                     for p in preds:
                         emit((es, ek, p, attrs["content"], "literal",
-                              XSD + "string", None))
+                              XSD_STRING, None))
                 elif tag == "time" and attrs.get("datetime"):
                     for p in preds:
                         emit((es, ek, p, attrs["datetime"], "literal",
-                              XSD + "string", None))
+                              XSD_STRING, None))
                 elif not self_closing:
                     lit = [es, ek, preds, []]
                     lit_frames.append(lit)
@@ -177,11 +164,14 @@ def extract_microdata_triples(
         # self-closing itemscope (e.g. <meta itemscope ...>) mints an
         # item with no children — already fully emitted above
 
-    return triples, None
+    return list(dict.fromkeys(triples))
+
+
+extract_microdata_triples = never_raising(microdata_triples)
 
 
 def extract_microdata(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
     """pages(url, text, ...) -> extraction rows (EXTRACT_SCHEMA) —
     the microdata twin of extract.extract_triples."""
-    return doc_stage(pages, extract_microdata_triples, EXTRACT_SCHEMA,
+    return doc_stage(pages, microdata_triples, EXTRACT_SCHEMA,
                      salt=not fixture_mode)

@@ -36,12 +36,13 @@ import pyspark.sql.functions as F
 
 from .canonicalize import connected_components, rewrite_canonical, sameas_edges
 from .extract import doc_lineage, doc_stage, embedded_triples, triples_only
-from .grammar.turtle import parse_document
+from .grammar.turtle import parse_turtle
 from .linking import best_link_per_mention, detect_mentions, link_mentions, links_as_triples
+from .quarantine import REASONS
 from .schema import EXTRACT_SCHEMA, TRIPLE_SCHEMA
 
 # syntax_mode -> the per-document extractor every bucket runs
-_PER_DOC = {"turtle": parse_document, "embedded": embedded_triples}
+_PER_DOC = {"turtle": parse_turtle, "embedded": embedded_triples}
 
 
 def bucket_of(url_col, n_buckets: int):
@@ -86,15 +87,18 @@ def run_pipeline(
     """Run (or resume) the pipeline; returns run metrics.
 
     Each bucket runs one ``extract.doc_stage`` over its pages and
-    derives its triples, sameAs sidecar and lineage from those rows.
+    derives its triples, sameAs sidecar and lineage (the stage's one
+    row per page) from those rows; the bucket manifest counts docs,
+    triples, parse failures and pages per quarantine reason.
     ``syntax_mode`` picks the per-document function (``_PER_DOC``):
-    'turtle' parses each page as a standalone Turtle document
-    (quarantine rows on parse failure — the reference's whole-doc
+    'turtle' parses each page as a standalone Turtle document (a page
+    that fails is a quarantine row — the reference's whole-doc
     contract); 'embedded' runs ``extract.embedded_triples``, the
     page's distinct triples over Turtle, JSON-LD islands, RDFa and
     microdata, so Common-Crawl-style HTML pages all contribute — there
-    a page with zero embedded markup is a normal empty page, not a
-    parse failure, and lineage records n_triples=0 with parse_ok=true.
+    a syntax that fails or finds no markup only adds no triple, so
+    lineage records n_triples with parse_ok=true (see extract.doc_stage
+    for what quarantines the page itself).
     Any other value raises ValueError.
     """
     per_doc = _PER_DOC.get(syntax_mode)
@@ -158,8 +162,9 @@ def run_pipeline(
         run_id = uuid.uuid4().hex
         if not bpath.exists():  # bucket got no pages: nothing to do
             manifest.parent.mkdir(parents=True, exist_ok=True)
-            _write_json(manifest, {"docs": 0, "triples": 0,
-                                   "parse_failures": 0, "run_id": run_id})
+            _write_json(manifest, {**dict.fromkeys(
+                ("docs", "triples", "parse_failures", *REASONS), 0),
+                "run_id": run_id})
             ran.append(b)
             continue
         bucket_pages = spark.read.parquet(str(bpath))
@@ -258,15 +263,16 @@ def _run_bucket(
     sameas_edges(triples).write.mode("overwrite").parquet(
         f"{bdir}/sameas_edges"
     )
-    # lineage: url -> per-doc counts + parse status, one row per page
-    # (a page without triples is doc_stage's status row). The manifest
-    # counts ride on the lineage write (Observation metric).
+    # lineage: doc_stage's one row per page (n_triples, parse status,
+    # quarantine reason). The manifest counts, one per reason included,
+    # ride on the lineage write (Observation metric).
     obs = Observation("bucket_stats")
     doc_lineage(extracted).observe(
         obs,
         F.count(F.lit(1)).alias("docs"),
         F.sum("n_triples").alias("triples"),
         F.count_if(~F.col("parse_ok")).alias("parse_failures"),
+        *(F.count_if(F.col("reason") == r).alias(r) for r in REASONS),
     ).write.mode("overwrite").parquet(f"{bdir}/lineage")
     pages.unpersist()
     extracted.unpersist()

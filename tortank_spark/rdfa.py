@@ -36,12 +36,11 @@ profile):
 
 The scanner handles double/single-quoted and unquoted attribute
 values, HTML void elements, self-closing tags, comments, and skips
-<script>/<style> payloads; it NEVER raises on malformed markup —
-unclosed elements close at EOF (the browser-parser behavior), and
-pages with no RDFa attributes simply emit zero triples with a
-quarantine row, the Turtle path's contract.
+<script>/<style> payloads; malformed markup raises nothing — unclosed
+elements close at EOF (the browser-parser behavior), and a page with
+no RDFa attributes is one parse_ok status row with zero triples.
 
-Scale shape: ``extract_rdfa_triples`` runs in the shared
+Scale shape: ``rdfa_triples`` runs in the shared
 ``extract.doc_stage`` — one ``mapInArrow`` stage, zero shuffle, column
 pruning to (url, text); parallelism = input splits.
 """
@@ -53,17 +52,16 @@ import re
 from pyspark.sql import DataFrame
 
 from .extract import doc_stage
+from .grammar.lexical import RDF_TYPE, XSD_STRING
 from .htmlscan import WS_RE, scan_html
+from .jsonld import _ABS_IRI_RE
+from .quarantine import never_raising
 from .schema import EXTRACT_SCHEMA
-
-XSD = "http://www.w3.org/2001/XMLSchema#"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 _ATTR_RE = re.compile(
     r"([a-zA-Z_:][a-zA-Z0-9_:.-]*)\s*=\s*"
     r"(?:\"([^\"]*)\"|'([^']*)'|([^\s\"'=<>`]+))"
 )
-_ABS_IRI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
 
 
 def _parse_attrs(blob: str) -> dict[str, str]:
@@ -125,19 +123,12 @@ def _expand(term: str, vocab: str | None, prefixes: dict[str, str],
     return None
 
 
-def extract_rdfa_triples(
-    html: str, bnode_prefix: str = ""
-) -> tuple[list[tuple], str | None]:
-    """Scan one HTML page; returns (triples, error). The scanner never
-    raises: structurally hopeless input yields ([], None) — zero
-    triples is data (most web pages carry no RDFa), not an error."""
+def rdfa_triples(html: str, bnode_prefix: str = "") -> list[tuple]:
+    """Scan one HTML page -> its RDFa triples. Malformed markup raises
+    nothing: structurally hopeless input yields [] — zero triples is
+    data (most web pages carry no RDFa), not an error."""
     triples: list[tuple] = []
-    seen: set[tuple] = set()
-
-    def emit(t: tuple):
-        if t not in seen:
-            seen.add(t)
-            triples.append(t)
+    emit = triples.append  # deduplicated per page on return (P23)
 
     counter = [0]
 
@@ -147,19 +138,18 @@ def extract_rdfa_triples(
 
     stack = [_Frame()]  # the root frame: no subject, no vocab
 
+    def emit_literals(s, s_kind, props, value, dt, lang):
+        # typed, else language-tagged, else plain xsd:string (P14)
+        tail = ((dt, None) if dt is not None else (None, lang) if lang
+                else (XSD_STRING, None))
+        for p in props:
+            emit((s, s_kind, p, value, "literal", *tail))
+
     def close_frame(fr: _Frame):
         if fr.lit_props is not None:
             text = WS_RE.sub(" ", "".join(fr.buf or [])).strip()
-            for p in fr.lit_props:
-                if fr.lit_dt is not None:
-                    emit((fr.subject, fr.s_kind, p, text, "literal",
-                          fr.lit_dt, None))
-                elif fr.lit_lang:
-                    emit((fr.subject, fr.s_kind, p, text, "literal",
-                          None, fr.lit_lang))
-                else:
-                    emit((fr.subject, fr.s_kind, p, text, "literal",
-                          XSD + "string", None))
+            emit_literals(fr.subject, fr.s_kind, fr.lit_props, text,
+                          fr.lit_dt, fr.lit_lang)
 
     # scan_html yields exactly one "end" per pushed start (EOF
     # included), so "end" always closes the top frame
@@ -234,16 +224,7 @@ def extract_rdfa_triples(
                 if attrs.get("datatype"):
                     dt = _expand(attrs["datatype"], fr.vocab,
                                  fr.prefixes, as_term=True)
-                for p in props:
-                    if dt is not None:
-                        emit((ps, pk, p, attrs["content"],
-                              "literal", dt, None))
-                    elif fr.lang:
-                        emit((ps, pk, p, attrs["content"],
-                              "literal", None, fr.lang))
-                    else:
-                        emit((ps, pk, p, attrs["content"],
-                              "literal", XSD + "string", None))
+                emit_literals(ps, pk, props, attrs["content"], dt, fr.lang)
             elif typeof_attr is not None and about is None:
                 chained_obj = (fresh_bnode(), "bnode")
                 for p in props:
@@ -277,12 +258,15 @@ def extract_rdfa_triples(
             close_frame(fr)
         else:
             stack.append(fr)
-    return triples, None
+    return list(dict.fromkeys(triples))
+
+
+extract_rdfa_triples = never_raising(rdfa_triples)
 
 
 def extract_rdfa(pages: DataFrame, fixture_mode: bool = False) -> DataFrame:
     """pages(url, text, ...) -> extraction rows (EXTRACT_SCHEMA) —
     the RDFa twin of extract.extract_triples: same schema, salting,
     quarantine contract, and no-shuffle scale shape."""
-    return doc_stage(pages, extract_rdfa_triples, EXTRACT_SCHEMA,
+    return doc_stage(pages, rdfa_triples, EXTRACT_SCHEMA,
                      salt=not fixture_mode)

@@ -13,6 +13,7 @@ The page schema follows BASELINE.json input_hint:
 from pyspark.sql.types import (
     BinaryType,
     BooleanType,
+    LongType,
     StringType,
     StructField,
     StructType,
@@ -42,14 +43,18 @@ TRIPLE_FIELDS = [
 
 TRIPLE_SCHEMA = StructType(TRIPLE_FIELDS)
 
-# extraction output carries per-doc status rows alongside triples so a
-# bad page quarantines instead of failing the job (reference fails the
-# whole doc: turtle_doc.rs:888-905; SURVEY.md §7 hard-part 5)
+# extract.doc_stage output: a bad page is a quarantine row, not a job
+# failure (the reference fails the whole doc: turtle_doc.rs:888-905).
+# parse_ok is on every row; n_triples, reason (quarantine.REASONS, null
+# on a parsed page) and detail sit on ONE row per page: its first
+# triple row, or a status row with null triple columns
 EXTRACT_SCHEMA = StructType(
     TRIPLE_FIELDS
     + [
+        StructField("n_triples", LongType(), True),
         StructField("parse_ok", BooleanType(), False),
-        StructField("error", StringType(), True),
+        StructField("reason", StringType(), True),
+        StructField("detail", StringType(), True),
     ]
 )
 

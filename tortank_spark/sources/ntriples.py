@@ -12,14 +12,14 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from ..extract import doc_stage
-from ..grammar.turtle import parse_document
+from ..grammar.turtle import parse_turtle
 from ..schema import EXTRACT_SCHEMA
 
 
 def _parse_line(line: str, bnode_prefix: str):
     # spark.read.text strips the line terminator; restore it, since a
     # comment runs to the end of its line (grammar: '#' .. '\n')
-    return parse_document(line + "\n", bnode_prefix)
+    return parse_turtle(line + "\n", bnode_prefix)
 
 
 def parse_ntriples_lines(lines: DataFrame) -> DataFrame:
